@@ -124,7 +124,9 @@ def decode_records(df: DataFrame, fetch: Fetch = http_fetch) -> DataFrame:
     Output columns: the R6 projection — envelope fields flattened, `date`
     parsed to event time (R8), `trigger` kept as a struct, `body` as an
     unparsed JSON string. Invalid/undecodable records are dropped after the
-    NULL-coercion stage (guide:36-39 → filter, guide:62-64 → type check).
+    NULL-coercion stage (guide:36-39 → filter, guide:62-64 → type check);
+    so are records whose `date` does not parse, since keyed state orders on
+    event time.
     """
     # non-deterministic mark (guide §4.4, the q431/q518 convention): the
     # NULL-coercion filter below references the UDF output, and the
@@ -134,14 +136,21 @@ def decode_records(df: DataFrame, fetch: Fetch = http_fetch) -> DataFrame:
     # (plan: 2 → 1 PyEval); decode is pure, so results are unchanged.
     deref = make_deref_udf(fetch).asNondeterministic()
     payload = df.withColumn("_payload", deref(gunzip_text(F.col("data"))))
-    parsed = payload.withColumn("op", F.from_json(F.col("_payload"), ENVELOPE_SCHEMA))
+    parsed = payload.withColumn(
+        "op", F.from_json(F.col("_payload"), ENVELOPE_SCHEMA)
+    ).withColumn(
+        # try_: under ANSI mode to_timestamp raises on a malformed date and
+        # would fail the whole micro-batch; an unparseable date drops the row
+        "event_time", F.try_to_timestamp(F.col("op.date"), F.lit(SPARK_TS_FMT))
+    )
     return (
         parsed.filter(F.col("_payload").isNotNull())
+        .filter(F.col("event_time").isNotNull())
         .filter(F.col("op.type") == "content-operation")  # R5, guide:62-64
         .select(
             F.col("op.organization_id").alias("organization_id"),
             F.col("op.operation").alias("operation"),
-            F.to_timestamp(F.col("op.date"), SPARK_TS_FMT).alias("event_time"),
+            "event_time",
             F.col("op.id").alias("id"),
             F.col("op.branch").alias("branch"),
             F.col("op.published").alias("published"),

@@ -89,9 +89,10 @@ def foreach_batch_split_router(base_dir: str, pred_sql: str):
         # the router writes its own `route` partition column; a stream that
         # already carries one would be silently overwritten AND stripped
         # from the data files by partitionBy — refuse loudly instead
-        assert "route" not in batch_df.columns, (
-            "split router: incoming batch already has a 'route' column"
-        )
+        if "route" in batch_df.columns:
+            raise ValueError(
+                "split router: incoming batch already has a 'route' column"
+            )
         batch_df.persist()
         try:
             # one pass for both manifest counts, one route-partitioned write

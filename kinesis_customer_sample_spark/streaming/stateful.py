@@ -2,11 +2,16 @@
 publish-event detection (R11), per guide:143 "requires statefulness on the
 application side".
 
-Both use `applyInPandasWithState` — keyed state in the state store
-(RocksDB-backed in production), Arrow-batched per group. Out-of-order input
-within a micro-batch is handled by sorting each batch by event time; the
-state carries the newest-seen event time so a late older record can never
-overwrite newer state (the guide:104-106 ingestion-lag case).
+Latest state is a built-in streaming aggregate: per key, the `max` of
+`(event_us, arrival_seq, operation, body)`. `max` is associative, so the
+result does not depend on how records fall into micro-batches, and a late
+older record can never overwrite newer state (the guide:104-106
+ingestion-lag case). The engine keeps the aggregate in its own state store
+(RocksDB-backed in production) with no Python in the per-key loop.
+
+Publish detection uses `applyInPandasWithState`: it is an arrival-order
+state machine that emits events, not an aggregate. Each group's rows are
+sorted by `arrival_seq` before the fold.
 
 Arrival ordering contract: both operators key arrival order on
 `arrival_seq`, derived by `_with_arrival_seq` from whichever ordering
@@ -26,7 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 # key: (organization_id, id, branch, published)
-STATE_SCHEMA = "last_us long, last_operation string, body string"
 LATEST_OUT_SCHEMA = (
     "organization_id string, id string, branch string, published boolean, "
     "last_operation string, last_us long, body string"
@@ -38,39 +42,6 @@ PUBLISH_OUT_SCHEMA = (
 # wide enough for Kinesis's ~56-digit sequence numbers: zero-padding to a
 # fixed width makes lexicographic order equal numeric order
 _SEQ_PAD = 64
-
-
-def _sorted_concat(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    return pdf.sort_values(["event_us", "arrival_seq"], kind="mergesort")
-
-
-def latest_state_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """R9: newest insert wins; delete clears. Emits the key's current state
-    after each micro-batch (update-style output)."""
-    last_us, last_op, body = state.get if state.exists else (-1, None, None)
-    for row in _sorted_concat(pdfs).itertuples(index=False):
-        if row.event_us < last_us:
-            continue  # stale out-of-order record (guide:104-106)
-        last_us, last_op = row.event_us, row.operation
-        body = row.body if row.operation.startswith("insert-") else None
-    state.update((last_us, last_op, body))
-    org, doc_id, branch, published = key
-    yield pd.DataFrame(
-        [
-            {
-                "organization_id": org,
-                "id": doc_id,
-                "branch": branch,
-                "published": published,
-                "last_operation": last_op,
-                "last_us": last_us,
-                "body": body,
-            }
-        ]
-    )
 
 
 def publish_events_fn(
@@ -133,16 +104,37 @@ def _with_arrival_seq(ops: DataFrame) -> DataFrame:
 
 
 def latest_state_stream(ops: DataFrame) -> DataFrame:
-    """Streaming keyed latest-state over decoded content operations."""
+    """Streaming keyed latest-state over decoded content operations, with
+    `LATEST_OUT_SCHEMA` columns; run it in update output mode.
+
+    Per key the record with the largest `(event_us, arrival_seq)` wins, the
+    order the batch twin `contentops_latest_state` uses (`event_time desc,
+    op_id desc`): newest event time, and on a tie the later arrival. A
+    winning delete emits `body` NULL.
+
+    State format: the state store holds the aggregate's buffer. A checkpoint
+    written by the earlier `applyInPandasWithState` form of this operator
+    cannot be resumed; start a fresh checkpoint and replay from TRIM_HORIZON,
+    which the newest-wins upsert sink converges to the same table.
+    """
+    from pyspark.sql import functions as F
+
+    op = F.col("operation")
+    newest = F.max(
+        F.struct(
+            F.col("event_us").alias("last_us"),
+            "arrival_seq",
+            op.alias("last_operation"),
+            F.when(op.startswith("insert-"), F.col("body")).alias("body"),
+        )
+    ).alias("newest")
     return (
         _with_arrival_seq(_with_event_us(ops))
         .groupBy("organization_id", "id", "branch", "published")
-        .applyInPandasWithState(
-            latest_state_fn,
-            outputStructType=LATEST_OUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        .agg(newest)
+        .select(
+            "organization_id", "id", "branch", "published",
+            "newest.last_operation", "newest.last_us", "newest.body",
         )
     )
 

@@ -4,10 +4,18 @@ using the FIXTURES.md §B vectors — incl. the guide:126-134 interleave."""
 from __future__ import annotations
 
 import gzip
+import json
 
 from pyspark.sql import functions as F
 
-from kinesis_customer_sample_spark.fixtures import CONTENT_OPS, kinesis_records_df, wire_seq
+from kinesis_customer_sample_spark.fixtures import (
+    CONTENT_OPS,
+    RECORD_SCHEMA,
+    encode_records,
+    kinesis_records_df,
+    payload_json,
+    wire_seq,
+)
 from kinesis_customer_sample_spark.queries.content_ops import (
     contentops_latest_state,
     contentops_provenance,
@@ -88,3 +96,20 @@ def test_decode_survives_all_fetch_failures(spark):
     decoded = decode_records(records, fetch=always_fail)
     # 16 ops - 3 spilled (5,10,15) = 13 direct-payload rows survive
     assert decoded.count() == 13
+
+
+def test_decode_drops_unparseable_date(spark):
+    """A content operation whose `date` does not parse is dropped and the
+    rest of the batch decodes (guide:36-39): under ANSI mode a strict
+    timestamp parse would fail the whole micro-batch instead."""
+    rows, s3_store = encode_records()
+    doc = json.loads(payload_json(CONTENT_OPS[0]))
+    doc["date"] = "2024-05-01 10:00"
+    bad_seq = wire_seq(len(rows))
+    rows.append(("shard-0", bad_seq, gzip.compress(json.dumps(doc).encode())))
+    records = spark.createDataFrame(rows, RECORD_SCHEMA)
+    decoded = decode_records(records, fetch=s3_store.__getitem__).collect()
+    seqs = {r.sequence_number for r in decoded}
+    # every fixture op but the expired pointer (op 10) survives
+    assert bad_seq not in seqs and len(seqs) == len(CONTENT_OPS) - 1
+    assert all(r.event_time is not None for r in decoded)

@@ -96,6 +96,54 @@ def test_wire_stream_feeds_stateful_latest_state(spark):
     assert got == want and len(want) == 7
 
 
+def test_wire_latest_state_restarts_from_checkpoint(spark, tmp_path):
+    """decode → latest_state_stream → foreach_batch_upsert over the first
+    two of four replay files, stop; a new query on the same checkpoint gets
+    the other two. Its table equals a one-shot run over all four files, and
+    the restarted query reads only the new files (state came from the
+    checkpoint)."""
+    import shutil
+
+    from kinesis_customer_sample_spark.streaming.sinks import foreach_batch_upsert
+    from kinesis_customer_sample_spark.streaming.stateful import latest_state_stream
+
+    records, s3_store = kinesis_records_df(spark)
+    fetch = s3_store.__getitem__
+    staged = tmp_path / "staged"
+    write_record_batches(records, str(staged), n_batches=4)
+    files = sorted(staged.glob("batch-*.parquet"))
+    assert len(files) == 4
+
+    def run(src, files_now, ckpt, table):
+        src.mkdir(exist_ok=True)
+        for f in files_now:
+            shutil.copy2(f, src / f.name)  # keeps the mtime replay order
+        decoded = content_operation_stream(file_record_stream(spark, str(src)), fetch=fetch)
+        q = (
+            latest_state_stream(decoded)
+            .writeStream.outputMode("update")
+            .foreachBatch(foreach_batch_upsert(str(table)))
+            .option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q
+
+    def rows(table):
+        return {tuple(r) for r in spark.read.parquet(str(table)).collect()}
+
+    src, ckpt, table = tmp_path / "src", tmp_path / "ckpt", tmp_path / "table"
+    run(src, files[:2], ckpt, table)
+    restarted = run(src, files[2:], ckpt, table)
+    one_shot = tmp_path / "one_shot_table"
+    run(tmp_path / "one_shot_src", files, tmp_path / "one_shot_ckpt", one_shot)
+
+    assert rows(table) == rows(one_shot) and len(rows(table)) == 7
+    n_new = spark.read.parquet(*map(str, files[2:])).count()
+    assert sum(p["numInputRows"] for p in restarted.recentProgress) == n_new
+
+
 def test_kinesis_production_source_degrades_clearly(spark):
     """Without the connector jar, kinesis_stream raises the documented
     error (not an opaque ClassNotFound), keeping the production path

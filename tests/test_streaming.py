@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kinesis_customer_sample_spark import fixtures
 from kinesis_customer_sample_spark.fixtures import SPARK_TS_FMT, content_ops_df
 from kinesis_customer_sample_spark.queries.content_ops import (
     contentops_latest_state,
@@ -65,7 +66,7 @@ def _ops_stream(spark, tmpdir: str, n_files: int = 2, split: str = "round_robin"
 
 
 def test_stateful_latest_state_equals_batch(spark):
-    """applyInPandasWithState latest-state == batch window latest-state (R9),
+    """Streaming-aggregate latest-state == batch window latest-state (R9),
     across multiple micro-batches with out-of-order delivery."""
     with tempfile.TemporaryDirectory() as td:
         stream = _ops_stream(spark, td)
@@ -92,6 +93,74 @@ def test_stateful_latest_state_equals_batch(spark):
         (r.organization_id, r.id, r.branch, r.published): r.body for r in batch.collect()
     }
     assert got == want and len(want) == 7
+
+
+def _final_latest_state(stream, ckpt: str) -> dict:
+    """Run latest_state_stream over `stream` to completion; the last row
+    emitted for a key is its final state. Returns the live documents."""
+    emitted = []
+    q = (
+        latest_state_stream(stream)
+        .writeStream.outputMode("update")
+        .foreachBatch(lambda df, epoch: emitted.extend((epoch, r) for r in df.collect()))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    final = {}
+    for _, r in sorted(emitted, key=lambda e: e[0]):
+        final[(r.organization_id, r.id, r.branch, r.published)] = r
+    return {
+        k: r.body for k, r in final.items() if r.last_operation.startswith("insert-")
+    }
+
+
+# ties op 16 on event time for the same key; the higher op_id arrives later
+_TIE_OP = (
+    17, "otherorg", "insert-story", "2024-05-01T15:00:00Z", "story-9", "default",
+    True, False, "story", "story-9", False, "standard", "editor",
+    '{"headline": "other org v2"}',
+)
+
+
+@pytest.mark.parametrize("n_files", [1, 2, 5])
+def test_latest_state_microbatch_invariant(spark, monkeypatch, tmp_path, n_files):
+    """The content ops replayed as 1, 2 or 5 out-of-order files give the same
+    final state, equal to the batch twin. Split round-robin, op 17 and the
+    op 16 it ties on event time land in different micro-batches (op 17
+    first when split in two): the later arrival wins, as in the batch
+    twin's `event_time desc, op_id desc`."""
+    monkeypatch.setattr(fixtures, "CONTENT_OPS", [*fixtures.CONTENT_OPS, _TIE_OP])
+    src = tmp_path / "src"
+    src.mkdir()
+    stream = _ops_stream(spark, str(src), n_files=n_files)
+    got = _final_latest_state(stream, str(tmp_path / "ckpt"))
+    want = {
+        (r.organization_id, r.id, r.branch, r.published): r.body
+        for r in contentops_latest_state(spark, "").collect()
+    }
+    assert got == want and len(want) == 7
+    assert got[("otherorg", "story-9", "default", True)] == '{"headline": "other org v2"}'
+
+
+def test_latest_state_is_a_native_aggregate(spark, tmp_path):
+    """Latest state runs as the engine's streaming aggregate, with no
+    Python state function in the physical plan, and emits the
+    LATEST_OUT_SCHEMA columns the upsert sink merges on."""
+    from pyspark.sql.types import StructType
+
+    from kinesis_customer_sample_spark.plans import plan_text
+    from kinesis_customer_sample_spark.streaming.stateful import LATEST_OUT_SCHEMA
+
+    out = latest_state_stream(_ops_stream(spark, str(tmp_path)))
+    text = plan_text(out)
+    assert "StateStoreSave" in text
+    assert "FlatMapGroupsInPandasWithState" not in text
+    want = StructType.fromDDL(LATEST_OUT_SCHEMA)
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in want
+    ]
 
 
 def test_stateful_publish_exact_equals_batch(spark):
@@ -654,6 +723,18 @@ def test_split_router_retry_is_idempotent(spark):
     assert per_route == {"valid": 10, "quarantine": 12}
     null_routes = [r.route for r in out.filter("value IS NULL").collect()]
     assert null_routes == ["quarantine", "quarantine"]
+
+
+def test_split_router_rejects_route_column(spark, tmp_path):
+    """A batch that already carries `route` is refused with ValueError (a
+    check that `python -O` keeps), before anything is written."""
+    from kinesis_customer_sample_spark.streaming.sinks import foreach_batch_split_router
+
+    apply = foreach_batch_split_router(str(tmp_path), "value >= 5.0")
+    df = spark.createDataFrame([(1, 6.0, "x")], "event_id long, value double, route string")
+    with pytest.raises(ValueError, match="'route' column"):
+        apply(df, 0)
+    assert not os.path.exists(os.path.join(tmp_path, "epoch=0"))
 
 
 def test_transform_with_state_v2_availability_probe():
