@@ -1,5 +1,7 @@
 """Engine-agnostic function builders shared by queries and their oracles."""
 
+import os
+
 from kinesis_customer_sample_spark.functions.porthash import (  # noqa: F401
     MOD_P,
     band_hash_expr,
@@ -35,6 +37,20 @@ def fixed_sum(col, scale: int = 2, out_scale: int = 2):
     return F.round(F.sum(fixed_units(col, scale)) / float(10 ** scale), out_scale)
 
 
+def _env_int(name: str, default: int) -> int:
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(f"{name} must be an integer, got {raw!r}") from None
+
+
+# rows; read once at import so a malformed value fails loudly and early
+BROADCAST_ROW_CAP = _env_int("SPARK_GRAFT_BROADCAST_ROW_CAP", 2_000_000)
+
+
 def broadcast_if_bounded(df, n_rows: int, row_cap: int | None = None):
     """Broadcast-hint `df` only when its MEASURED row count is under the
     cap; otherwise return it unhinted so AQE picks the join strategy from
@@ -51,12 +67,10 @@ def broadcast_if_bounded(df, n_rows: int, row_cap: int | None = None):
     executor memory here and parameterised for production via
     SPARK_GRAFT_BROADCAST_ROW_CAP.
     """
-    import os
-
     from pyspark.sql import functions as F
 
     if row_cap is None:
-        row_cap = int(os.environ.get("SPARK_GRAFT_BROADCAST_ROW_CAP", "2000000"))
+        row_cap = BROADCAST_ROW_CAP
     return F.broadcast(df) if n_rows <= row_cap else df
 
 

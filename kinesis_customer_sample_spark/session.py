@@ -17,6 +17,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding both this package and the worker entry module
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "kinesis-customer-sample-spark",
@@ -24,7 +27,21 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's defaults."""
+    """Build (or reuse) a SparkSession with the engine's defaults.
+
+    Python workers run `pyspark_graft_worker` (next to this package) instead
+    of `pyspark.worker`. Before CPython 3.13 every Python task otherwise
+    re-reads the central directory of every zip archive on the worker's
+    `sys.path` (pyspark.zip, the py4j zip, the spark-core jar), ~0.2 s per
+    task whatever the task does; the entry module re-reads an archive only
+    when it changed. The workers' PYTHONPATH gets the directory holding the
+    entry module and this package, so they import both from any launch
+    directory (they inherit the JVM's environment, not the driver's
+    `sys.path`). On a cluster the executors need the repository at the same
+    path, as they already did for the package itself. Both are static
+    confs: a session that already exists, or one the engine did not build,
+    keeps Spark's own worker.
+    """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus))
@@ -59,6 +76,8 @@ def get_spark(
         # events.parquet carries ns-precision timestamps Spark can't map
         # natively; read as long and convert in the catalog (catalog.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.worker.module", "pyspark_graft_worker")
+        .config("spark.executorEnv.PYTHONPATH", _ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

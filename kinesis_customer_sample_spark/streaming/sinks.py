@@ -3,7 +3,7 @@
 `foreach_batch_upsert` maintains a parquet "document table" keyed by the
 content-operation key: each micro-batch's latest-state rows are merged with
 the existing table (newest event time wins, deletes drop keys) and the table
-is atomically swapped. At test scale this is a read-merge-rewrite; on a real
+is swapped in by rename. At test scale this is a read-merge-rewrite; on a real
 deployment the same callback body becomes a Delta/Iceberg `MERGE INTO`
 (jars not in this image — SURVEY.md §4.2 physical-layout notes), with the
 table partitioned by event date so merges only rewrite touched partitions.
@@ -22,13 +22,21 @@ KEY = ["organization_id", "id", "branch", "published"]
 
 def merge_latest(existing: DataFrame | None, updates: DataFrame) -> DataFrame:
     """Newest-wins merge of update rows into the existing table; rows whose
-    winning operation is a delete are removed (guide:72 replace-or-delete)."""
-    merged = updates if existing is None else existing.unionByName(updates)
-    w = Window.partitionBy(*KEY).orderBy(F.col("last_us").desc())
+    winning operation is a delete are removed (guide:72 replace-or-delete).
+
+    On an event-time tie the update beats the table row: the keyed state
+    already broke that tie by arrival sequence before emitting the update,
+    and the table row came from an earlier epoch."""
+    merged = updates.withColumn("_incoming", F.lit(True))
+    if existing is not None:
+        merged = existing.withColumn("_incoming", F.lit(False)).unionByName(merged)
+    w = Window.partitionBy(*KEY).orderBy(
+        F.col("last_us").desc(), F.col("_incoming").desc()
+    )
     return (
         merged.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        .drop("_rn", "_incoming")
         .filter(F.col("last_operation").startswith("insert-"))
     )
 
@@ -36,10 +44,23 @@ def merge_latest(existing: DataFrame | None, updates: DataFrame) -> DataFrame:
 def foreach_batch_upsert(table_dir: str):
     """Build a foreachBatch callback that upserts latest-state rows into a
     parquet table at `table_dir` (exactly-once via idempotent newest-wins
-    merge + atomic directory swap)."""
+    merge + directory swap).
+
+    The swap renames the table aside (`<table>.old`), renames the new
+    version in, then deletes the old one, so at every instant one complete
+    table exists on disk. A crash between the two renames leaves only
+    `.old`; the next call (the replayed epoch) puts it back before merging,
+    instead of rebuilding the table from that one batch and losing every
+    key the batch does not carry."""
+    old = f"{table_dir}.old"
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
+        if os.path.exists(old):
+            if os.path.exists(table_dir):
+                shutil.rmtree(old)  # crashed after the swap: stale copy
+            else:
+                os.rename(old, table_dir)  # crashed mid-swap: restore
         existing = None
         if os.path.exists(table_dir):
             existing = spark.read.parquet(table_dir)
@@ -47,9 +68,11 @@ def foreach_batch_upsert(table_dir: str):
         tmp = f"{table_dir}.tmp-{epoch_id}"
         merged.write.mode("overwrite").parquet(tmp)
         # materialize before swap (merged lazily reads table_dir)
-        if os.path.exists(table_dir):
-            shutil.rmtree(table_dir)
+        if existing is not None:
+            os.rename(table_dir, old)
         os.rename(tmp, table_dir)
+        if existing is not None:
+            shutil.rmtree(old)
 
     return apply
 

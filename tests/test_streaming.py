@@ -5,6 +5,7 @@ their batch twins, watermark late-data handling, dedup, foreachBatch upsert
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 import pandas as pd
@@ -307,6 +308,61 @@ def test_merge_latest_delete_wins_then_reinsert(spark):
     )
     merged = merge_latest(merge_latest(a, b), c)
     assert merged.count() == 1 and merged.collect()[0].last_us == 300
+
+
+_DOC_SCHEMA = (
+    "organization_id string, id string, branch string, published boolean,"
+    " last_operation string, last_us long, body string"
+)
+
+
+def _doc(doc_id, op, last_us, body):
+    return ("w", doc_id, "default", True, op, last_us, body)
+
+
+def _table(spark, target):
+    return {r.id: (r.last_us, r.body) for r in spark.read.parquet(target).collect()}
+
+
+def test_upsert_event_time_tie_goes_to_later_epoch(spark, tmp_path):
+    """A key whose two updates share an event time but land in different
+    epochs ends with the later epoch's row: the state emitted it as the
+    tie's winner (larger arrival sequence), so the sink must not keep the
+    table's row. Same for a delete that ties with the stored insert."""
+    target = str(tmp_path / "cms_table")
+    upsert = foreach_batch_upsert(target)
+    first = [_doc(f"d{i}", "insert-story", 100, f"old{i}") for i in range(8)]
+    upsert(spark.createDataFrame(first, _DOC_SCHEMA), 0)
+    later = [_doc(f"d{i}", "insert-story", 100, f"new{i}") for i in range(7)]
+    later.append(_doc("d7", "delete-story", 100, None))
+    upsert(spark.createDataFrame(later, _DOC_SCHEMA), 1)
+    assert _table(spark, target) == {f"d{i}": (100, f"new{i}") for i in range(7)}
+
+
+def test_upsert_recovers_from_crash_mid_swap(spark, tmp_path):
+    """A crash between renaming the table aside and renaming the new
+    version in leaves only `<table>.old` (plus the epoch's tmp output). The
+    replayed epoch must put the old table back and merge into it, not
+    rebuild the table from its own rows alone."""
+    target = str(tmp_path / "cms_table")
+    upsert = foreach_batch_upsert(target)
+    base = [_doc("a", "insert-story", 100, "a"), _doc("b", "insert-story", 100, "b")]
+    upsert(spark.createDataFrame(base, _DOC_SCHEMA), 0)
+    batch = spark.createDataFrame([_doc("c", "insert-story", 200, "c")], _DOC_SCHEMA)
+
+    os.rename(target, target + ".old")  # the crash state
+    os.makedirs(target + ".tmp-1")
+    upsert(batch, 1)  # replay
+    want = {"a": (100, "a"), "b": (100, "b"), "c": (200, "c")}
+    assert _table(spark, target) == want
+    assert not os.path.exists(target + ".old")
+
+    # crashed after the swap, before deleting the aside copy: the table is
+    # already current and the stale copy is dropped
+    shutil.copytree(target, target + ".old")
+    upsert(batch, 1)
+    assert _table(spark, target) == want
+    assert not os.path.exists(target + ".old")
 
 
 def test_session_window_stream_equals_batch(spark, sf_dir):
