@@ -21,6 +21,7 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 from kinesis_customer_sample_spark.registry import load_registry
+from kinesis_customer_sample_spark.runner import select, sweep, timed_noop, warm_up
 from kinesis_customer_sample_spark.session import get_spark
 
 # Headline set: one representative per operator family (kept in sync with
@@ -399,66 +400,22 @@ def main() -> None:
         "calib_start": _calibrate(),
     }
     registry = load_registry()
-    names = [n for n in HEADLINE if n in registry]
+    names, unknown = select(registry, HEADLINE)
 
     spark = get_spark(app_name="kcss-bench")
-    # Warm-up: JVM codegen paths, shuffle machinery, and — critically — the
-    # Python worker pool (mapInPandas/pandas_udf spawn one worker per core
-    # on first use, ~5-8 s; workers are reused afterwards, so without this
-    # the first Python-edge query is billed the pool spin-up).
-    from pyspark.sql import functions as F
-
-    spark.range(100_000).groupBy(F.col("id") % 7).count().write.format(
-        "noop"
-    ).mode("overwrite").save()
-    spark.range(100_000).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    # One untimed REGISTRY query before the timed loop (r9 verdict task #4):
-    # the synthetic warm-ups above exercise shuffle + the Python pool but
-    # not the catalog/parquet-scan path or a realistic codegen compile, so
-    # the suite's first query kept billing that session cost and minting
-    # single-shot false alarms in the driver's recorded bench.
-    try:
-        registry[names[0]].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        spark.catalog.clearCache()
-    except Exception:  # noqa: BLE001 — warm-up must never kill the bench
-        pass
-
-    # Three executions per query, report the min: single-JVM timings here
-    # show multi-second transient stalls (GC / JIT deopt) that land on
-    # arbitrary queries — the min measures the plan, not the pause (min-of-2
-    # still let one stall through per ~30-query suite). Plans are rebuilt
-    # per execution AND the cache is cleared between runs: queries that
-    # .persist() intermediates (q69's signature table) would otherwise have
-    # Spark's CacheManager substitute the still-cached InMemoryRelation into
-    # the plan-identical second run, making the min a cache-assisted number
-    # (round-1 advice). clearCache also unpersists those intermediates so
-    # they can't leak executor memory across the suite.
-    # Per-query isolation: one query raising must not zero out the whole
-    # suite (round 2 lost its bench line to a single fixture-dtype error).
-    # A failed query is reported under "errors" and excluded from the total;
-    # rc stays 0 so the JSON line is always emitted and recorded.
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in names:
-        best = float("inf")
-        try:
-            for _ in range(3):
-                spark.catalog.clearCache()  # both runs compute from source
-                # t0 BEFORE fn(): queries that eagerly materialize inside
-                # the builder (localCheckpoint'd intermediates) must be
-                # billed for it — timing only the sink write would hide
-                # real work outside the window
-                t0 = time.perf_counter()
-                df = registry[name].fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            timings[name] = round(best, 3)
-        except Exception as ex:  # noqa: BLE001 — isolate, report, continue
-            errors[name] = f"{type(ex).__name__}: {str(ex)[:200]}"
+    if names:
+        warm_up(spark, registry[names[0]], sf_dir)
+    # Min-of-3 per query, each run computed from source (runner.timed_noop;
+    # min-of-2 still let one stall through per ~30-query suite). Per-query
+    # isolation: one query raising must
+    # not zero out the whole suite (round 2 lost its bench line to a single
+    # fixture-dtype error). A failed query, or a HEADLINE name the registry
+    # lacks, is reported under "errors" and excluded from the total; rc
+    # stays 0 so the JSON line is always emitted and recorded.
+    timings, errors = sweep(
+        names, lambda name: round(timed_noop(spark, registry[name], sf_dir), 3)
+    )
+    errors.update((name, "KeyError: not in the registry") for name in unknown)
     spark.catalog.clearCache()
 
     total = round(sum(timings.values()), 3)

@@ -349,10 +349,10 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     q180/q270 shared shape with its per-order fan-out bound. Edge list
     persists across rounds."""
     from kinesis_customer_sample_spark.queries.graph_quality_ops import (
-        shared_copurchase_edges,
+        _copurchase_edges,
     )
 
-    e0 = shared_copurchase_edges(spark, sf_dir).select(
+    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False).select(
         F.col("a").alias("s"), F.col("b").alias("t")
     )
     e = e0.unionByName(e0.select(F.col("t").alias("s"), F.col("s").alias("t"))).persist()
@@ -465,10 +465,10 @@ def wl_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-sized. The same plan repeats per round — fixpoint-many at
     production, structurally identical."""
     from kinesis_customer_sample_spark.queries.graph_quality_ops import (
-        shared_copurchase_edges,
+        _copurchase_edges,
     )
 
-    e0 = shared_copurchase_edges(spark, sf_dir).select(
+    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False).select(
         F.col("a").alias("s"), F.col("b").alias("t")
     )
     # hash-cluster the symmetrized edges by s ONCE before persisting: every

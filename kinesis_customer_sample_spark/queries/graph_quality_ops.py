@@ -47,37 +47,6 @@ _EDGES_SQL = """
 """
 
 
-# Session-scoped memo for the materialized co-purchase edge list, keyed by
-# (applicationId, sf_dir) — the q338 pair-set pattern applied to the graph
-# family: at 100 TB the co-purchase graph is written to parquet ONCE and
-# every graph workload (triangles, LPA, k-core, WL, link prediction) reads
-# the product instead of re-running the per-order self-join.
-_EDGE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def shared_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The canonical undirected (a < b) co-purchase edge set, materialized
-    once per session+sf_dir via lazy localCheckpoint (survives
-    `clearCache`, same rationale as dedup.shared_minhash_pairs). New
-    graph operators consume this; the original per-query builders remain
-    for the driver-certified queries whose plan audits pin the full
-    edge-build chain."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    df = _EDGE_MEMO.get(key)
-    if df is None:
-        df = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
-        _EDGE_MEMO[key] = df
-    return df
-
-
-def clear_edge_memo() -> None:
-    """Drop memoized edge sets — for tests/plan audits that must see the
-    full edge-build chain instead of a checkpoint scan."""
-    _EDGE_MEMO.clear()
-
-
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a = li.alias("x")
@@ -798,12 +767,12 @@ def local_clustering_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (orientation-free here; the corner credit needs all three
     corners anyway).
 
-    Scale posture (100 TB): triangle enumeration reuses the
-    materialized edge product (shared_copurchase_edges); the corner
+    Scale posture (100 TB): triangle enumeration reads the edge
+    product, checkpointed once for the query; the corner
     fan-out is ×3 map-side; per-node rollup and the decile grid are
     hash aggs. At hub-heavy graphs the q180 degree-orientation bound
     applies to the enumeration join's build side."""
-    und = shared_copurchase_edges(spark, sf_dir)
+    und = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))

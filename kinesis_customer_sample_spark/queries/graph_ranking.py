@@ -366,13 +366,13 @@ def adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: candidates from the capped co-neighbor postings join
     (hot hubs bounded exactly like q68's DF cap — a degree-k hub would
     otherwise mint k² pairs), never all-pairs; existing edges drop via
-    anti-join; top-20 via TakeOrderedAndProject. Consumes the
-    session-materialized edge product (shared_copurchase_edges)."""
+    anti-join; top-20 via TakeOrderedAndProject. The edge product is
+    checkpointed once for the query."""
     from kinesis_customer_sample_spark.queries.graph_quality_ops import (
-        shared_copurchase_edges,
+        _copurchase_edges,
     )
 
-    e0 = shared_copurchase_edges(spark, sf_dir)
+    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     e = e0.select(F.col("a").alias("s"), F.col("b").alias("t")).unionAll(
         e0.select(F.col("b").alias("s"), F.col("a").alias("t"))
     )
@@ -458,13 +458,13 @@ def harmonic_centrality_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalable truncation (full harmonic needs all-pairs BFS); the 2-hop
     set is DISTINCT-deduped before counting so hub double-paths don't
     inflate reach, and the hot-hub cap bounds the postings fan-out. One
-    more hop = one more postings join round. Consumes the shared edge
-    product."""
+    more hop = one more postings join round. The edge product is
+    checkpointed once for the query."""
     from kinesis_customer_sample_spark.queries.graph_quality_ops import (
-        shared_copurchase_edges,
+        _copurchase_edges,
     )
 
-    e0 = shared_copurchase_edges(spark, sf_dir)
+    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     e = e0.select(F.col("a").alias("s"), F.col("b").alias("t")).unionAll(
         e0.select(F.col("b").alias("s"), F.col("a").alias("t"))
     )
@@ -582,10 +582,10 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB makes the state a small fraction of the graph — the
     standard push-style PPR advantage.""".format(k=_PPR_TOPK)
     from kinesis_customer_sample_spark.queries.graph_quality_ops import (
-        shared_copurchase_edges,
+        _copurchase_edges,
     )
 
-    e0 = shared_copurchase_edges(spark, sf_dir)
+    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     e = (
         e0.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(e0.select(F.col("b").alias("src"), F.col("a").alias("dst")))
@@ -687,16 +687,15 @@ def brand_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     double expression is the same fixed text both engines evaluate;
     rounded in-query.
 
-    Scale posture: consumes the session-materialized edge product
-    (shared_copurchase_edges, built once per 100 TB pipeline run);
-    brand labels arrive via broadcast dimension joins (part is the
+    Scale posture: reads the edge product, checkpointed once for the
+    query; brand labels arrive via broadcast dimension joins (part is the
     small side); two hash-aggs to a 25-row community table — no
     shuffle ever carries more than the edge list itself."""
     from kinesis_customer_sample_spark.queries.graph_quality_ops import (
-        shared_copurchase_edges,
+        _copurchase_edges,
     )
 
-    e0 = shared_copurchase_edges(spark, sf_dir)
+    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     brands = F.broadcast(
         table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     )
@@ -804,14 +803,14 @@ def degree_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e12 nodes — logs grow slowly), floor-µ-quantized on output (signed
     quotient; round-on-quotient outputs banned per SCALE.md).
 
-    Scale posture (100 TB): reuses the materialized edge product; degree
+    Scale posture (100 TB): reads the checkpointed edge product; degree
     is one hash-agg, the histogram another (<= max-degree rows); the fit
     is a 1-row broadcast. Nothing beyond the edge list ever shuffles."""
     from kinesis_customer_sample_spark.queries.graph_quality_ops import (
-        shared_copurchase_edges,
+        _copurchase_edges,
     )
 
-    und = shared_copurchase_edges(spark, sf_dir)
+    und = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))

@@ -37,10 +37,14 @@ def get_spark(
     when it changed. The workers' PYTHONPATH gets the directory holding the
     entry module and this package, so they import both from any launch
     directory (they inherit the JVM's environment, not the driver's
-    `sys.path`). On a cluster the executors need the repository at the same
-    path, as they already did for the package itself. Both are static
-    confs: a session that already exists, or one the engine did not build,
-    keeps Spark's own worker.
+    `sys.path`). `PYTHONSAFEPATH=1` (CPython >= 3.11) keeps the launch
+    directory off the front of the workers' `sys.path`, where
+    `python -m pyspark.daemon` would put it: a `pandas.py` or a package
+    directory there would shadow the real module in every worker. On a
+    cluster the executors need the repository at the same path, as they
+    already did for the package itself. These are static confs: a session
+    that already exists, or one the engine did not build, keeps Spark's own
+    worker.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     shuffle_partitions = shuffle_partitions or int(
@@ -78,6 +82,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.worker.module", "pyspark_graft_worker")
         .config("spark.executorEnv.PYTHONPATH", _ROOT)
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

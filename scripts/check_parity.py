@@ -1,52 +1,53 @@
 """Dev harness: oracle-compare a subset of registered queries.
 
 Usage: python scripts/check_parity.py [prefix ...]   (default: all)
+Env:   PARITY_SF_DIR (default /root/testdata/sf0.01)
 """
 
 import os
 import sys
 import time
 
-from kinesis_customer_sample_spark.compare import compare_query, duckdb_connection
-from kinesis_customer_sample_spark.registry import load_registry
-from kinesis_customer_sample_spark.session import get_spark
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
+
+from kinesis_customer_sample_spark.compare import compare_query, duckdb_connection  # noqa: E402
+from kinesis_customer_sample_spark.registry import load_registry  # noqa: E402
+from kinesis_customer_sample_spark.runner import select, sweep  # noqa: E402
+from kinesis_customer_sample_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
 
 
 def main() -> int:
-    prefixes = tuple(sys.argv[1:])
     reg = load_registry()
+    names, unknown = select(reg, sys.argv[1:])
     spark = get_spark(cpus="8")
     con = duckdb_connection(SF_DIR)
-    failed = []
-    timings = []
-    for name, q in sorted(reg.items()):
-        if prefixes and not name.startswith(prefixes):
-            continue
+
+    def check(name: str) -> tuple[bool, float]:
+        q = reg[name]
+        spark.catalog.clearCache()
         t0 = time.monotonic()
         if q.oracle is None:
             n = q.fn(spark, SF_DIR).count()
             dt = time.monotonic() - t0
-            timings.append((dt, name))
             print(f"CHECK [..] {name}: rows-only, {n} rows ({dt:.2f}s)", flush=True)
-            continue
-        try:
-            res = compare_query(spark, q, SF_DIR, con)
-        except Exception as ex:  # surface engine errors as failures
-            print(f"CHECK [XX] {name}: ERROR {str(ex)[:500]}", flush=True)
-            failed.append(name)
-            timings.append((time.monotonic() - t0, name))
-            continue
+            return True, dt
+        res = compare_query(spark, q, SF_DIR, con)
         dt = time.monotonic() - t0
-        timings.append((dt, name))
         print(f"CHECK {res.report()} ({dt:.2f}s)", flush=True)
-        if not res.ok:
-            failed.append(name)
+        return res.ok, dt
+
+    results, errors = sweep(names, check)
     spark.stop()
-    total = sum(t for t, _ in timings)
-    print(f"CHECK TOTAL: {total:.1f}s over {len(timings)} queries", flush=True)
-    print("CHECK SLOWEST:", [(n, round(t, 2)) for t, n in sorted(timings, reverse=True)[:12]], flush=True)
+    for name, err in errors.items():
+        print(f"CHECK [XX] {name}: ERROR {err}", flush=True)
+    failed = [n for n, (ok, _) in results.items() if not ok] + list(errors) + unknown
+    timings = sorted(((dt, n) for n, (_, dt) in results.items()), reverse=True)
+    print(f"CHECK TOTAL: {sum(t for t, _ in timings):.1f}s over {len(timings)} queries", flush=True)
+    print("CHECK SLOWEST:", [(n, round(t, 2)) for t, n in timings[:12]], flush=True)
     print("CHECK FAILED:", failed, flush=True)
     return 1 if failed else 0
 

@@ -10,18 +10,18 @@ whose merge step silently assumes a layout. The repo's discipline is
 "no float ever enters an aggregate" (SCALE.md); this sweep PROVES it per
 query by running each query twice in one session —
 
-  run A: the engine defaults (spark.sql.shuffle.partitions = 32,
-         spark.sql.files.maxPartitionBytes = 128m), and
+  run A: the session's own confs (get_spark: shuffle.partitions = cores,
+         maxPartitionBytes = 128m, AQE on), and
   run B: a hostile layout (shuffle.partitions = 7, maxPartitionBytes =
          1m — many small scan splits, different reduce fan-in)
 
 — and diffing the canonical sorted row tuples (compare.py's exact
 comparator, NULL-vs-NaN-faithful, no float widening).
 
-Usage: PYTHONPATH=/root/repo python scripts/check_partition_invariance.py [prefix...]
+Usage: python scripts/check_partition_invariance.py [prefix...]
 Env:   PARITY_SF_DIR (default /root/testdata/sf0.01)
 
-Prints one line per query and a CHECK FAILED summary, mirroring
+Prints one line per query and an INVAR FAILED summary, mirroring
 scripts/check_parity.py.
 
 Cross-process mode — executor-count independence (spark.range fixtures
@@ -47,8 +47,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-from kinesis_customer_sample_spark.compare import _arrow_rows  # noqa: E402
 from kinesis_customer_sample_spark.registry import load_registry  # noqa: E402
+from kinesis_customer_sample_spark.runner import canonical_rows, select, sweep  # noqa: E402
 from kinesis_customer_sample_spark.session import get_spark  # noqa: E402
 
 _PERTURBED = {
@@ -58,16 +58,6 @@ _PERTURBED = {
     # a second layout axis the default run exercises and this one removes
     "spark.sql.adaptive.enabled": "false",
 }
-_DEFAULTS = {
-    "spark.sql.shuffle.partitions": "32",
-    "spark.sql.files.maxPartitionBytes": "128m",
-    "spark.sql.adaptive.enabled": "true",
-}
-
-
-def _rows(spark, q, sf_dir):
-    spark.catalog.clearCache()
-    return _arrow_rows(q.fn(spark, sf_dir).toArrow())
 
 
 def _row_hash(cols, rows) -> str:
@@ -78,126 +68,108 @@ def _row_hash(cols, rows) -> str:
     return h.hexdigest()
 
 
-def _cross_process(mode: str, path: str, prefixes: list[str]) -> None:
+def _cross_process(mode: str, path: str, patterns: list[str], sf_dir: str) -> list[str]:
     """--dump / --compare: canonical-row hashes across separate processes
-    (the executor-count axis — see module docstring)."""
-    sf_dir = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
+    (the executor-count axis — see module docstring). Returns the failures."""
     reg = load_registry()
-    names = [
-        n
-        for n in reg
-        if not prefixes or any(n.startswith(p) or p in n for p in prefixes)
-    ]
-    spark = get_spark(app_name="kcss-cross-process-invariance")
-    hashes: dict[str, str] = {}
-    failed: list[str] = []
+    names, unknown = select(reg, patterns)
     baseline = json.load(open(path)) if mode == "--compare" else {}
-    for name in names:
-        try:
-            cols, rows = _rows(spark, reg[name], sf_dir)
-            hashes[name] = _row_hash(cols, rows)
-            if mode == "--compare":
-                want = baseline.get(name)
-                if want is None:
-                    print(f"INVAR [ERR] {name}: not in baseline dump")
-                    failed.append(name)
-                elif want != hashes[name]:
-                    print(f"INVAR [FAIL] {name}: hash differs across processes")
-                    failed.append(name)
-                else:
-                    print(f"INVAR [OK] {name}: cross-process hash match")
-        except Exception as ex:  # noqa: BLE001
-            failed.append(name)
-            print(f"INVAR [ERR] {name}: {type(ex).__name__}: {str(ex)[:160]}")
-        sys.stdout.flush()
+    spark = get_spark(app_name="kcss-cross-process-invariance")
+    hashes, errors = sweep(
+        names, lambda name: _row_hash(*canonical_rows(spark, reg[name], sf_dir))
+    )
+    spark.stop()
+    for name, err in errors.items():
+        print(f"INVAR [ERR] {name}: {err}")
+    failed = list(errors) + unknown
     if mode == "--dump":
         json.dump(hashes, open(path, "w"))
         print(f"INVAR DUMPED: {len(hashes)} hashes -> {path}")
-    if mode == "--compare":
-        # Symmetric coverage check: baseline entries the current run never
-        # examined mean the registry shrank or a prefix filter was typo'd —
-        # the gate must not pass silently with reduced coverage (r8 advice).
-        # Scope the check to the same prefix filter as the run itself: a
-        # prefix-scoped --compare against a full --dump is a documented
-        # workflow and must not fail on the baseline's out-of-scope keys
-        # (r9 advice).
-        in_scope = {
-            n
-            for n in baseline
-            if not prefixes or any(n.startswith(p) or p in n for p in prefixes)
-        }
-        unexamined = sorted(in_scope - set(names))
-        if unexamined:
-            print(
-                f"INVAR [ERR] baseline-only entries never examined "
-                f"({len(unexamined)}): {unexamined[:10]}"
-                f"{' ...' if len(unexamined) > 10 else ''}"
+        return failed
+    for name, got in hashes.items():
+        want = baseline.get(name)
+        if want is None:
+            print(f"INVAR [ERR] {name}: not in baseline dump")
+        elif want != got:
+            print(f"INVAR [FAIL] {name}: hash differs across processes")
+        else:
+            print(f"INVAR [OK] {name}: cross-process hash match")
+        if want != got:
+            failed.append(name)
+    # Symmetric coverage check: baseline entries the current run never
+    # examined mean the registry shrank or a prefix filter was typo'd —
+    # the gate must not pass silently with reduced coverage (r8 advice).
+    # Scope the check to the same patterns as the run itself: a
+    # prefix-scoped --compare against a full --dump is a documented
+    # workflow and must not fail on the baseline's out-of-scope keys
+    # (r9 advice).
+    in_scope, _ = select(baseline, patterns)
+    unexamined = sorted(set(in_scope) - set(names))
+    if unexamined:
+        print(
+            f"INVAR [ERR] baseline-only entries never examined "
+            f"({len(unexamined)}): {unexamined[:10]}"
+            f"{' ...' if len(unexamined) > 10 else ''}"
+        )
+    return failed + unexamined
+
+
+def _layout_sweep(patterns: list[str], sf_dir: str) -> list[str]:
+    """Run A on the session's own confs, run B on `_PERTURBED`. Returns the
+    failures."""
+    reg = load_registry()
+    names, unknown = select(reg, patterns)
+    spark = get_spark(app_name="kcss-partition-invariance")
+    defaults = {k: spark.conf.get(k) for k in _PERTURBED}
+
+    def check(name: str) -> tuple[bool, float]:
+        q = reg[name]
+        t0 = time.perf_counter()
+        cols_a, rows_a = canonical_rows(spark, q, sf_dir)
+        try:
+            for k, v in _PERTURBED.items():
+                spark.conf.set(k, v)
+            cols_b, rows_b = canonical_rows(spark, q, sf_dir)
+        finally:
+            for k, v in defaults.items():
+                spark.conf.set(k, v)
+        dt = time.perf_counter() - t0
+        if cols_a != cols_b:
+            print(f"INVAR [FAIL] {name}: schema drift {cols_a} vs {cols_b}")
+        elif rows_a != rows_b:
+            n_diff = sum(1 for a, b in zip(rows_a, rows_b) if a != b) + abs(
+                len(rows_a) - len(rows_b)
             )
-            failed.extend(unexamined)
-    print(f"INVAR FAILED: {failed}")
+            print(
+                f"INVAR [FAIL] {name}: {n_diff} rows differ under perturbed"
+                f" partitioning ({len(rows_a)} vs {len(rows_b)} rows)"
+            )
+            for a, b in [ab for ab in zip(rows_a, rows_b) if ab[0] != ab[1]][:3]:
+                print(f"    A={a!r}\n    B={b!r}")
+        else:
+            print(f"INVAR [OK] {name}: {len(rows_a)} rows invariant ({dt:.2f}s)")
+        sys.stdout.flush()
+        return (cols_a, rows_a) == (cols_b, rows_b), dt
+
+    t_all = time.perf_counter()
+    results, errors = sweep(names, check)
     spark.stop()
-    sys.exit(1 if failed else 0)
+    for name, err in errors.items():
+        print(f"INVAR [ERR] {name}: {err}")
+    slowest = sorted(results.items(), key=lambda kv: -kv[1][1])[:10]
+    print(f"INVAR TOTAL: {time.perf_counter() - t_all:.1f}s over {len(names)} queries")
+    print(f"INVAR SLOWEST: {[(n, round(dt, 2)) for n, (_, dt) in slowest]}")
+    return [n for n, (ok, _) in results.items() if not ok] + list(errors) + unknown
 
 
 def main() -> None:
     sf_dir = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
-    prefixes = sys.argv[1:]
-    if prefixes and prefixes[0] in ("--dump", "--compare"):
-        _cross_process(prefixes[0], prefixes[1], prefixes[2:])
-        return
-    reg = load_registry()
-    names = [
-        n
-        for n in reg
-        if not prefixes or any(n.startswith(p) or p in n for p in prefixes)
-    ]
-    spark = get_spark(app_name="kcss-partition-invariance")
-    failed: list[str] = []
-    timings: list[tuple[str, float]] = []
-    t_all = time.perf_counter()
-    for name in names:
-        q = reg[name]
-        t0 = time.perf_counter()
-        try:
-            for k, v in _DEFAULTS.items():
-                spark.conf.set(k, v)
-            cols_a, rows_a = _rows(spark, q, sf_dir)
-            for k, v in _PERTURBED.items():
-                spark.conf.set(k, v)
-            cols_b, rows_b = _rows(spark, q, sf_dir)
-            for k, v in _DEFAULTS.items():
-                spark.conf.set(k, v)
-            dt = time.perf_counter() - t0
-            timings.append((name, dt))
-            if cols_a != cols_b:
-                failed.append(name)
-                print(f"INVAR [FAIL] {name}: schema drift {cols_a} vs {cols_b}")
-            elif rows_a != rows_b:
-                failed.append(name)
-                n_diff = sum(1 for a, b in zip(rows_a, rows_b) if a != b) + abs(
-                    len(rows_a) - len(rows_b)
-                )
-                print(
-                    f"INVAR [FAIL] {name}: {n_diff} rows differ under perturbed"
-                    f" partitioning ({len(rows_a)} vs {len(rows_b)} rows)"
-                )
-                for a, b in list(zip(rows_a, rows_b))[:3]:
-                    if a != b:
-                        print(f"    A={a!r}\n    B={b!r}")
-            else:
-                print(
-                    f"INVAR [OK] {name}: {len(rows_a)} rows invariant ({dt:.2f}s)"
-                )
-        except Exception as ex:  # noqa: BLE001 — isolate, report, continue
-            failed.append(name)
-            print(f"INVAR [ERR] {name}: {type(ex).__name__}: {str(ex)[:160]}")
-        sys.stdout.flush()
-    total = time.perf_counter() - t_all
-    timings.sort(key=lambda kv: -kv[1])
-    print(f"INVAR TOTAL: {total:.1f}s over {len(names)} queries")
-    print(f"INVAR SLOWEST: {[(n, round(t, 2)) for n, t in timings[:10]]}")
+    args = sys.argv[1:]
+    if args and args[0] in ("--dump", "--compare"):
+        failed = _cross_process(args[0], args[1], args[2:], sf_dir)
+    else:
+        failed = _layout_sweep(args, sf_dir)
     print(f"INVAR FAILED: {failed}")
-    spark.stop()
     sys.exit(1 if failed else 0)
 
 

@@ -3,17 +3,20 @@ module:line, tags, oracle status, and first docstring sentence — so the
 operator inventory the engine CLAIMS (SURVEY.md §2) can be cross-checked
 against what the registry actually SHIPS, line by line.
 
-Usage: PYTHONPATH=/root/repo python scripts/gen_inventory.py > INVENTORY.md
+Usage: python scripts/gen_inventory.py > INVENTORY.md
 """
 
 from __future__ import annotations
 
 import inspect
 import os
+import sys
 
-from kinesis_customer_sample_spark.registry import load_registry
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from kinesis_customer_sample_spark.registry import load_registry  # noqa: E402
 
 
 def main() -> None:
@@ -25,14 +28,14 @@ def main() -> None:
           f"{sum(1 for q in reg.values() if not q.oracle)} rows-only.")
     print()
     print("Registry order = driver-walk priority. Regenerate with")
-    print("`PYTHONPATH=/root/repo python scripts/gen_inventory.py > INVENTORY.md`.")
+    print("`python scripts/gen_inventory.py > INVENTORY.md`.")
     print()
     print("| # | query | defined at | oracle | tags | summary |")
     print("|---|---|---|---|---|---|")
     for i, (name, q) in enumerate(reg.items(), 1):
         src = inspect.getsourcefile(q.fn)
         line = inspect.getsourcelines(q.fn)[1]
-        rel = os.path.relpath(src, ROOT)
+        rel = os.path.relpath(src, REPO)
         first = (q.doc.split(".")[0].replace("\n", " ").strip() + ".") if q.doc else ""
         first = first.replace("|", "\\|")
         tags = " ".join(q.tags)

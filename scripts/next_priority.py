@@ -1,6 +1,6 @@
 """Compute the next round's driver-walk priority list.
 
-Usage: PYTHONPATH=/root/repo python scripts/next_priority.py
+Usage: python scripts/next_priority.py
 
 Reads every CORRECTNESS_r*.json in the repo root and the current registry,
 then prints, in order:
@@ -19,10 +19,13 @@ import glob
 import json
 import os
 import re
+import sys
 
-from kinesis_customer_sample_spark.registry import load_registry
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from kinesis_customer_sample_spark.registry import load_registry  # noqa: E402
 
 
 def main() -> None:
@@ -37,7 +40,7 @@ def main() -> None:
         return int(m.group(1)) if m else None
 
     rounds = sorted(
-        (p for p in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))
+        (p for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
          if round_of(p) is not None),
         key=round_of,
     )

@@ -4,6 +4,7 @@
 
 Usage: python scripts/profile_queries.py [--plans-dir DIR] name [name ...]
 
+Names select queries by the runner's rule (a name or a prefix of names).
 For each query: runs via the noop sink (guide §1.4) with a job description
 (guide §1.5), reports min-of-3 wall seconds, and writes the
 `.explain("formatted")` output to DIR/<name>_<tag>.txt (tag from
@@ -13,17 +14,18 @@ Exchange count, join strategies, Python-eval nodes, scan count.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-from kinesis_customer_sample_spark.registry import load_registry
-from kinesis_customer_sample_spark.session import get_spark
+from kinesis_customer_sample_spark.registry import load_registry  # noqa: E402
+from kinesis_customer_sample_spark.runner import select, sweep, timed_noop, warm_up  # noqa: E402
+from kinesis_customer_sample_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 TAG = os.environ.get("PROFILE_TAG", "before")
@@ -56,61 +58,37 @@ def main() -> int:
         args = args[2:]
         os.makedirs(plans_dir, exist_ok=True)
     reg = load_registry()
-    names = [n for n in args if n in reg]
-    missing = [n for n in args if n not in reg]
-    # allow prefixes
-    for m in list(missing):
-        hits = [n for n in reg if n.startswith(m)]
-        if len(hits) == 1:
-            names.append(hits[0])
-            missing.remove(m)
-    if missing:
-        print("UNKNOWN:", missing)
-    import json
+    names, unknown = select(reg, args)
+    if unknown:
+        print("UNKNOWN:", unknown)
 
     extra = json.loads(os.environ.get("PROFILE_EXTRA_CONF", "{}"))
     spark = get_spark(app_name="kcss-profile", extra_conf=extra or None)
-    from pyspark.sql import functions as F
-
-    spark.range(100_000).groupBy(F.col("id") % 7).count().write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.range(100_000).repartition(
-        int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    ).mapInPandas(lambda it: it, "id long").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    if names:
+        warm_up(spark, reg[names[0]], SF_DIR)
     sc = spark.sparkContext
-    results = []
-    for name in names:
+
+    def profile(name: str) -> float:
+        spark.catalog.clearCache()  # the plan a timed run executes
+        df = reg[name].fn(spark, SF_DIR)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        sc.setJobDescription(f"profile:{name}")
         try:
-            spark.catalog.clearCache()
-            sc.setJobDescription(f"profile:{name}")
-            tracker = sc.statusTracker()
-            jobs_before = len(tracker.getJobIdsForGroup(None) or [])
-            best = float("inf")
-            plan = None
-            for i in range(RUNS):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                df = reg[name].fn(spark, SF_DIR)
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                best = min(best, dt)
-                if plan is None:
-                    plan = df._sc._jvm.PythonSQLUtils.explainString(
-                        df._jdf.queryExecution(), "formatted"
-                    )
+            best = timed_noop(spark, reg[name], SF_DIR, RUNS)
+        finally:
             sc.setJobDescription(None)
-            if plans_dir and plan:
-                with open(os.path.join(plans_dir, f"{name}_{TAG}.txt"), "w") as fh:
-                    fh.write(plan)
-            cen = census(plan or "")
-            results.append((best, name, cen))
-            print(f"PROF {best:7.3f}s  {name}  [{cen}]", flush=True)
-        except Exception as ex:  # noqa: BLE001
-            print(f"PROF ERROR {name}: {type(ex).__name__}: {str(ex)[:200]}", flush=True)
-    print("PROF TOTAL:", round(sum(r[0] for r in results), 3), "over", len(results))
+        if plans_dir:
+            with open(os.path.join(plans_dir, f"{name}_{TAG}.txt"), "w") as fh:
+                fh.write(plan)
+        print(f"PROF {best:7.3f}s  {name}  [{census(plan)}]", flush=True)
+        return best
+
+    results, errors = sweep(names, profile)
+    for name, err in errors.items():
+        print(f"PROF ERROR {name}: {err}", flush=True)
+    print("PROF TOTAL:", round(sum(results.values()), 3), "over", len(results))
     spark.stop()
     return 0
 

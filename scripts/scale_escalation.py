@@ -7,7 +7,7 @@ SCALE.md's "Round-14 one-off scale escalation" ledger entries. It is
 deliberately NOT a test: a full pass takes ~3 minutes on local[32] and
 belongs in a round's strong-record battery, not in every pytest run.
 
-Usage: PYTHONPATH=/root/repo python scripts/scale_escalation.py [shape ...]
+Usage: python scripts/scale_escalation.py [shape ...]
 Shapes: sessionize salted_join rollup_cascade stream_stream semantic_dedup
         cc_chains bom_walk minhash_band sorted_neighborhood
         (default: all, at the SCALE.md-recorded sizes)
@@ -27,7 +27,11 @@ import time
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from kinesis_customer_sample_spark.session import get_spark
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
+
+from kinesis_customer_sample_spark.session import get_spark  # noqa: E402
 
 
 def _synth_events(spark, n: int, n_users: int):

@@ -20,8 +20,8 @@ from __future__ import annotations
 
 import pytest
 
-from kinesis_customer_sample_spark.compare import _arrow_rows
 from kinesis_customer_sample_spark.registry import load_registry
+from kinesis_customer_sample_spark.runner import canonical_rows
 
 REGISTRY = load_registry()
 
@@ -49,13 +49,11 @@ _PERTURBED = {
 def test_canonical_rows_survive_layout_perturbation(spark, sf_dir, name):
     q = REGISTRY[name]
     defaults = {k: spark.conf.get(k) for k in _PERTURBED}
-    spark.catalog.clearCache()
-    base = _arrow_rows(q.fn(spark, sf_dir).toArrow())
+    base = canonical_rows(spark, q, sf_dir)
     try:
         for k, v in _PERTURBED.items():
             spark.conf.set(k, v)
-        spark.catalog.clearCache()
-        perturbed = _arrow_rows(q.fn(spark, sf_dir).toArrow())
+        perturbed = canonical_rows(spark, q, sf_dir)
     finally:
         for k, v in defaults.items():
             spark.conf.set(k, v)

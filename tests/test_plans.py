@@ -1514,15 +1514,10 @@ def test_fertility_and_data_card_single_scan(spark, sf_dir):
 def test_leakage_matrix_inherits_bucketing(spark, sf_dir):
     """q338: the pair set must come from q69's bucket-blocked join (no
     cartesian anywhere) and the source join-backs read only two columns
-    of documents. The pair-set memo is cleared first so the audit sees
-    the full candidate-generation chain, not a checkpoint scan."""
-    from kinesis_customer_sample_spark.queries.dedup import clear_pair_set_memo
-
-    clear_pair_set_memo()
+    of documents."""
     facts = audit_of(spark, sf_dir, "q338_cross_source_leakage_matrix")
     assert not facts.has_cartesian
     assert facts.has_partial_agg
-    clear_pair_set_memo()  # drop the lazy checkpoint this audit registered
 
 
 def test_percent_of_parent_hierarchy_sized_join(spark, sf_dir):
@@ -1998,13 +1993,7 @@ def test_kcore_rounds_are_semi_joins(spark, sf_dir):
     semi-join peel per branch (3.96 → 2.06 s at sf0.1, r16). Pin: no
     cartesian, the returned plan reads checkpoints and re-runs no edge
     scan or semi-join above them."""
-    from kinesis_customer_sample_spark.queries.graph_quality_ops import (
-        clear_edge_memo,
-    )
-
-    clear_edge_memo()
     facts = audit_of(spark, sf_dir, "q385_kcore_peel")
-    clear_edge_memo()
     assert not facts.has_cartesian
     assert "ExistingRDD" in facts.text
     assert "LeftSemi" not in facts.text  # peel ran at build, not per branch
@@ -2102,16 +2091,8 @@ def test_item_cf_capped_self_join(spark, sf_dir):
 
 def test_wl_round_is_join_plus_sorted_fold(spark, sf_dir):
     """q397: each round is an edge-keyed hash join + list agg; no
-    cartesian; distinct-color counts combine partially. The edge memo is
-    cleared first so the audit sees the full edge-build chain (q338
-    pattern), not a checkpoint scan."""
-    from kinesis_customer_sample_spark.queries.graph_quality_ops import (
-        clear_edge_memo,
-    )
-
-    clear_edge_memo()
+    cartesian; distinct-color counts combine partially."""
     facts = audit_of(spark, sf_dir, "q397_wl_refinement")
-    clear_edge_memo()
     assert not facts.has_cartesian
     assert sum(facts.join_strategies.values()) >= 2  # edge build + rounds
     assert "Window" not in facts.text
@@ -2273,13 +2254,7 @@ def test_theil_single_agg_grid(spark, sf_dir):
 def test_local_clustering_no_cartesian(spark, sf_dir):
     """q413: triangle enumeration is equi-joins over the edge product;
     corner credit is a map-side union; grids are hash aggs."""
-    from kinesis_customer_sample_spark.queries.graph_quality_ops import (
-        clear_edge_memo,
-    )
-
-    clear_edge_memo()
     facts = audit_of(spark, sf_dir, "q413_local_clustering_profile")
-    clear_edge_memo()
     assert not facts.has_cartesian
     assert facts.has_partial_agg
 
@@ -2403,13 +2378,7 @@ def test_adamic_adar_capped_postings_no_cartesian(spark, sf_dir):
     """q424: candidates come from the capped co-neighbor postings join
     (equi on the shared neighbor), never all-pairs; the anti-join drops
     existing edges; top-k is TakeOrderedAndProject."""
-    from kinesis_customer_sample_spark.queries.graph_quality_ops import (
-        clear_edge_memo,
-    )
-
-    clear_edge_memo()
     facts = audit_of(spark, sf_dir, "q424_adamic_adar")
-    clear_edge_memo()
     assert not facts.has_cartesian
     assert "TakeOrderedAndProject" in facts.text
     assert facts.has_partial_agg
@@ -2419,13 +2388,7 @@ def test_harmonic_centrality_distinct_before_count(spark, sf_dir):
     """q425: the 2-hop witness set is DISTINCT-deduped before counting
     (hub double-paths must not inflate reach) and direct edges drop via
     anti-join; nothing cartesian."""
-    from kinesis_customer_sample_spark.queries.graph_quality_ops import (
-        clear_edge_memo,
-    )
-
-    clear_edge_memo()
     facts = audit_of(spark, sf_dir, "q425_harmonic_centrality_2hop")
-    clear_edge_memo()
     assert not facts.has_cartesian
     assert facts.has_partial_agg
     assert "TakeOrderedAndProject" in facts.text
@@ -2593,13 +2556,7 @@ def test_ltv_cumsum_partitioned_by_cohort(spark, sf_dir):
 def test_ppr_iterates_join_agg_rounds(spark, sf_dir):
     """q434: three unrolled message rounds — each a keyed join + hash
     agg over checkpointed edges; no cartesian anywhere."""
-    from kinesis_customer_sample_spark.queries.graph_quality_ops import (
-        clear_edge_memo,
-    )
-
-    clear_edge_memo()
     facts = audit_of(spark, sf_dir, "q434_personalized_pagerank")
-    clear_edge_memo()
     assert not facts.has_cartesian
     assert facts.has_partial_agg
     assert "TakeOrderedAndProject" in facts.text

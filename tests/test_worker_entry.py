@@ -111,10 +111,14 @@ _DECODE_PROBE = textwrap.dedent(
 def test_workers_import_engine_from_any_cwd(spark, tmp_path):
     """Launched outside the repo with PYTHONPATH unset, decode's pandas UDFs
     still import the engine in the Python workers and return the same rows
-    as an in-repo run."""
+    as an in-repo run. A decoy package of the engine's name in the launch
+    directory must not shadow the real one in the workers."""
     from kinesis_customer_sample_spark.fixtures import kinesis_records_df
     from kinesis_customer_sample_spark.sources.decode import decode_records
 
+    decoy = tmp_path / "kinesis_customer_sample_spark"
+    decoy.mkdir()
+    (decoy / "__init__.py").write_text("raise ImportError('decoy imported from the launch cwd')\n")
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_LOCAL_DIRS"] = str(tmp_path / "local")
     out = subprocess.run(
