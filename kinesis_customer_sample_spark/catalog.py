@@ -55,18 +55,8 @@ TABLES = (
 # build cost (register_views over 10 tables per execution) drops
 # ~0.8 s → ~0 on re-execution, and the 514-query parity sweep saves the
 # footer re-reads wholesale. Fixture directories are read-only, so the
-# cached file listing cannot go stale; clear_table_memo() exists for code
-# that rewrites a fixture path in place (none in-repo today).
+# cached file listing cannot go stale.
 _MEMO_ATTR = "_kcss_table_memo"
-
-
-def clear_table_memo(spark: SparkSession | None = None) -> None:
-    """Drop memoized scan relations (use after rewriting a fixture path
-    in place, which nothing in-repo currently does). With no argument the
-    active session's memo (if any) is cleared."""
-    target = spark or SparkSession.getActiveSession()
-    if target is not None and hasattr(target, _MEMO_ATTR):
-        getattr(target, _MEMO_ATTR).clear()
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

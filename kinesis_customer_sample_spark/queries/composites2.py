@@ -34,8 +34,8 @@ from kinesis_customer_sample_spark.functions import (
     fixed_sum,
     tok_hash_expr,
 )
-from kinesis_customer_sample_spark.queries.pipeline_ops import _DUCK_PAIRS as _DUCK_PAIRS_REF
-from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.queries import pipeline_ops  # noqa: F401  registers q90
+from kinesis_customer_sample_spark.registry import REGISTRY, query
 
 _LATE_DAYS = 60
 
@@ -256,24 +256,7 @@ def _small_star(edges_can: DataFrame) -> DataFrame:
 
 @query(
     "q106_dedup_clusters_altstar",
-    oracle=f"""
-    WITH RECURSIVE {_DUCK_PAIRS_REF},
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(doc, lbl) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.doc = e.src
-    ),
-    comp AS (SELECT doc AS doc_id, min(lbl) AS component_id FROM reach GROUP BY doc)
-    SELECT c.doc_id, c.component_id,
-           count(*) OVER (PARTITION BY c.component_id) AS component_size,
-           c.doc_id = min(c.doc_id) OVER (PARTITION BY c.component_id) AS is_keeper
-    FROM comp c
-    """,
+    oracle=REGISTRY["q90_dedup_clusters"].oracle,  # same fixpoint as q90
     tags=("dedup", "clusters", "connected-components", "alternating", "iterative"),
 )
 def dedup_clusters_altstar(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -43,7 +43,6 @@ walk.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -52,6 +51,7 @@ from pyspark.sql import functions as F
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.functions import duck_fixed_sum, fixed_sum
 from kinesis_customer_sample_spark.functions.porthash import cosine_expr
+from kinesis_customer_sample_spark.queries.graph_quality_ops import _EDGES_SQL
 from kinesis_customer_sample_spark.registry import query
 
 
@@ -203,12 +203,7 @@ _BFS_MAX_HOPS = 3
 @query(
     "q120_copurchase_bfs",
     oracle=f"""
-    WITH RECURSIVE und AS (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM lineitem a
-      JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-                     AND a.l_partkey < b.l_partkey
-    ),
+    WITH RECURSIVE und(src, dst) AS ({_EDGES_SQL}),
     bidir AS (
       SELECT src, dst FROM und
       UNION ALL
@@ -240,22 +235,18 @@ def copurchase_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     takes min(dist), which equals BFS's first-visit distance — the
     cross-check that the iterative operator implements shortest-hops, not
     reachability order."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
+    from kinesis_customer_sample_spark.queries.graph_quality_ops import (
+        _copurchase_edges,
+    )
+
+    und = _copurchase_edges(spark, sf_dir).select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
     )
     bidir = und.unionAll(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()  # materialize once; reused every round
-    root = li.agg(F.min("l_partkey")).collect()[0][0]  # scalar seed, one light job
+    # scalar seed, one light job
+    root = table(spark, sf_dir, "lineitem").agg(F.min("l_partkey")).collect()[0][0]
     visited = spark.createDataFrame(
         [(int(root), 0)], "part_key bigint, hops int"
     )
@@ -554,7 +545,10 @@ def stream_update_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsert is newest-epoch-wins, so replays/retries are idempotent."""
     from pyspark.sql import types as T
 
-    from kinesis_customer_sample_spark.streaming.replay import run_scratch_dir
+    from kinesis_customer_sample_spark.streaming.replay import (
+        run_scratch_dir,
+        scratch_checkpoint,
+    )
 
     ev = table(spark, sf_dir, "events").select("user_id", "value")
     # per-run leaf under a stable fixture-keyed base: concurrent runs
@@ -579,15 +573,15 @@ def stream_update_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.withColumn("_epoch", F.lit(epoch_id)).write.mode("append").parquet(out_dir)
 
-    ckpt = tempfile.mkdtemp(prefix="ckpt_q124_")
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with scratch_checkpoint("q124") as ckpt:
+        (
+            agg.writeStream.outputMode("update")
+            .foreachBatch(upsert)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
     w = W.partitionBy("user_id").orderBy(F.col("_epoch").desc())
     return (
         spark.read.parquet(out_dir)
@@ -1357,17 +1351,11 @@ _PR_INIT_MU = 1_000_000
 def _pr_oracle() -> str:
     """Unrolled power-iteration CTE chain mirroring the Spark loop —
     integer micro-unit ranks with truncating division on both engines."""
-    cte = """
-    WITH e0 AS (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    cte = f"""
+    WITH e0(src, dst) AS ({_EDGES_SQL}),
     e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
     deg AS (SELECT src AS node, count(*)::BIGINT AS deg FROM e GROUP BY src),
-    r0 AS (SELECT node, deg, {init}::BIGINT AS r FROM deg)""".format(
-        init=_PR_INIT_MU
-    )
+    r0 AS (SELECT node, deg, {_PR_INIT_MU}::BIGINT AS r FROM deg)"""
     prev = "r0"
     for k in range(1, _PR_ITERS + 1):
         cte += """,
@@ -1401,16 +1389,12 @@ def pagerank_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     once and reused, the Pregel message-passing shape. The undirected
     graph has no dangling nodes by construction (every node has degree
     ≥ 1), so no redistribution term is needed."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
+    from kinesis_customer_sample_spark.queries.graph_quality_ops import (
+        _copurchase_edges,
+    )
+
+    und = _copurchase_edges(spark, sf_dir).select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
     )
     edges = und.unionAll(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1442,12 +1426,8 @@ def pagerank_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q168_recursive_cte_reachability",
-    oracle="""
-    WITH RECURSIVE e0 AS (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    oracle=f"""
+    WITH RECURSIVE e0(src, dst) AS ({_EDGES_SQL}),
     e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
     walk(part_key, hops) AS (
       SELECT CAST((SELECT min(src) FROM e) AS BIGINT), 0
@@ -1472,16 +1452,12 @@ def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup), so depth is bounded tightly — unbounded traversals belong to
     the frontier-dedup BFS operator (q120), which stays linear in nodes
     per round. The two operators cross-check each other's first rounds."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
+    from kinesis_customer_sample_spark.queries.graph_quality_ops import (
+        _copurchase_edges,
+    )
+
+    und = _copurchase_edges(spark, sf_dir).select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
     )
     edges = und.unionAll(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

@@ -6,11 +6,12 @@ k-per-group cap that domain-mix pipelines use to bound any one source.
 
 Scale posture (100 TB):
 - q184 inherits each stage's posture: q119's (lang, length-band) blocking
-  keeps candidate pairs near-linear; the CC loop is one join + min-agg
-  per round over a label table with one row per doc, lineage truncated by
-  localCheckpoint, converging in O(cluster diameter) rounds (entity
-  clusters are shallow); survivorship is one max_by hash-agg keyed by the
-  entity id the loop already shuffles on.
+  keeps candidate pairs near-linear; the CC loop is
+  graph_components.hash_min_components (one join + min-agg per round over
+  a label table with one row per matched doc, lineage truncated by
+  localCheckpoint, converging in O(cluster diameter) rounds — entity
+  clusters are shallow), and unmatched docs keep their own id;
+  survivorship is one max_by hash-agg keyed by the entity id.
 - q185 is one partitioned window ordered by a portable hash — per-group
   uniform-without-replacement sampling with a hard k cap, deterministic
   across engines, partitionings, and reruns. Heavy groups cost their own
@@ -88,42 +89,21 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity id, canonical doc, member count, is_canonical. The oracle
     reaches the same fixpoint via a recursive CTE — a different
     algorithm, so agreement checks semantics, not plan shape."""
+    from kinesis_customer_sample_spark.queries.graph_components import (
+        hash_min_components,
+    )
+
     pairs = (
         fuzzy_join_levenshtein(spark, sf_dir)
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
-    edges = pairs.unionByName(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).persist()
+    labels = hash_min_components(pairs)
     docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    labels = docs.select("doc_id").withColumn("entity_id", F.col("doc_id"))
-    while True:
-        neighbor_min = (
-            edges.join(labels, edges.doc_a == labels.doc_id)
-            .groupBy(F.col("doc_b").alias("doc_id"))
-            .agg(F.min("entity_id").alias("nbr_min"))
-        )
-        updated = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least("entity_id", F.coalesce("nbr_min", "entity_id")).alias(
-                    "new_entity_id"
-                ),
-                (
-                    F.least("entity_id", F.coalesce("nbr_min", "entity_id"))
-                    != F.col("entity_id")
-                ).alias("changed"),
-            )
-            .localCheckpoint()
-        )
-        changed = updated.filter("changed").count()
-        labels = updated.select("doc_id", F.col("new_entity_id").alias("entity_id"))
-        if changed == 0:
-            break
-    edges.unpersist()
-    joined = labels.join(docs, "doc_id")
+    # singletons (no match edge) are their own entity
+    joined = docs.join(labels, docs["doc_id"] == labels["node"], "left").select(
+        "doc_id", F.coalesce("lab", "doc_id").alias("entity_id"), "n_chars"
+    )
     canon = joined.groupBy("entity_id").agg(
         F.expr("max_by(doc_id, n_chars * 1000000 + doc_id)").alias(
             "canonical_doc_id"

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
+from kinesis_customer_sample_spark.queries.graph_quality_ops import _EDGES_SQL
 from kinesis_customer_sample_spark.registry import query
 
 # Sparsifier for the customer-supplier graph: only "major" lineitems (top
@@ -49,15 +50,18 @@ _TR_WINDOW_H = 24  # influence window: same key seen within 24h
 
 
 def hash_min_components(e0: DataFrame) -> DataFrame:
-    """Hash-min connected components to exact fixpoint.
+    """Hash-min connected components to exact fixpoint — the engine's one
+    min-label components loop (q90, q184, q292 and the scale smokes, which
+    run it on 2M-node synthetic graphs with a known component structure).
 
     `e0`: undirected edge list with two integer endpoint columns (first
     two columns are taken as the endpoints). Returns (node, lab) with lab
-    = min node id of the component. Each round: min-label over neighbors,
-    combined with own label; stops when a bounded driver count() reports
-    zero changes — rounds = graph diameter. localCheckpoint keeps plan
-    depth O(1) per round. Shared by q292 and the scale smokes (the smokes
-    run it on 2M-node synthetic graphs with a known component structure)."""
+    = min node id of the component, for every node that has an edge. Each
+    round: min-label over neighbors, combined with own label, and a
+    `changed` flag carried through the round's localCheckpoint (which
+    keeps plan depth O(1) per round), so the driver's count() of changed
+    labels scans checkpointed rows instead of joining new labels to old;
+    it stops at zero changes — rounds = graph diameter."""
     a, b = e0.columns[0], e0.columns[1]
     edges = (
         e0.select(F.col(a).alias("src"), F.col(b).alias("dst"))
@@ -75,23 +79,17 @@ def hash_min_components(e0: DataFrame) -> DataFrame:
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("lab").alias("nlab"))
         )
-        new_labels = (
+        updated = (
             labels.join(cand, "node", "left")
             .select(
                 "node",
-                F.least(F.col("lab"), F.coalesce(F.col("nlab"), F.col("lab"))).alias(
-                    "lab"
-                ),
+                F.least("lab", "nlab").alias("lab"),  # least() skips a null nlab
+                (F.col("nlab") < F.col("lab")).alias("changed"),
             )
-            .localCheckpoint()  # cut lineage: O(1) plan depth per round
+            .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("p"), "node")
-            .filter(F.col("n.lab") != F.col("p.lab"))
-            .count()
-        )
-        labels = new_labels
+        changed = updated.filter("changed").count()
+        labels = updated.select("node", "lab")
         if changed == 0:
             break
     return labels
@@ -298,11 +296,7 @@ _KCORE_ROUNDS = 3
 @query(
     "q385_kcore_peel",
     oracle=f"""
-    WITH e0 AS (
-      SELECT DISTINCT a.l_partkey AS s, b.l_partkey AS t
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    WITH e0(s, t) AS ({_EDGES_SQL}),
     e AS (SELECT s, t FROM e0 UNION ALL SELECT t, s FROM e0),
     n0 AS (SELECT s AS node FROM e GROUP BY s HAVING count(*) >= {_KCORE_K}),
     e1 AS (SELECT e.s, e.t FROM e
@@ -415,11 +409,7 @@ _WL_ROUNDS = 2
 @query(
     "q397_wl_refinement",
     oracle=f"""
-    WITH e0 AS (
-      SELECT DISTINCT a.l_partkey AS s, b.l_partkey AS t
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    WITH e0(s, t) AS ({_EDGES_SQL}),
     e AS (SELECT s, t FROM e0 UNION ALL SELECT t, s FROM e0),
     l0 AS (
       SELECT s AS node, count(*)::BIGINT AS lab FROM e GROUP BY s

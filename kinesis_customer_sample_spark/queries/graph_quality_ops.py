@@ -38,7 +38,8 @@ from pyspark.sql import functions as F
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
 
-# canonical undirected co-purchase edges (a < b), shared with q120/q159
+# canonical undirected co-purchase edges (a < b): the one oracle text for
+# the edge list; graph oracles rename its columns with a CTE column list
 _EDGES_SQL = """
     SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
     FROM lineitem a
@@ -48,6 +49,10 @@ _EDGES_SQL = """
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one Spark builder of the co-purchase edge list (`_EDGES_SQL`'s
+    twin). Consumers in other modules import it inside their builders,
+    so a test that replaces it on this module reaches every consumer; each
+    consumer keeps its own barrier over it."""
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a = li.alias("x")
     b = li.alias("y")
@@ -368,12 +373,8 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q270_label_propagation",
-    oracle="""
-    WITH e0 AS (
-      SELECT DISTINCT a.l_partkey AS s, b.l_partkey AS t
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    oracle=f"""
+    WITH e0(s, t) AS ({_EDGES_SQL}),
     e AS (SELECT s, t FROM e0 UNION ALL SELECT t, s FROM e0),
     l0 AS (SELECT DISTINCT s AS node, s AS lab FROM e),
     c1 AS (
@@ -440,11 +441,7 @@ _LP_TOPK = 20
 @query(
     "q286_link_prediction_jaccard",
     oracle=f"""
-    WITH e0 AS (
-      SELECT DISTINCT a.l_partkey AS s, b.l_partkey AS t
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    WITH e0(s, t) AS ({_EDGES_SQL}),
     e AS (SELECT s, t FROM e0 UNION ALL SELECT t, s FROM e0),
     deg AS (SELECT s AS node, count(*) AS d FROM e GROUP BY s),
     kept AS (

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
+from kinesis_customer_sample_spark.queries.graph_quality_ops import _EDGES_SQL
 from kinesis_customer_sample_spark.registry import query
 
 _HITS_MU = 1_000_000
@@ -113,12 +114,8 @@ def _bf_oracle() -> str:
     """Unrolled Bellman-Ford rounds (same integer weights as the Spark
     path: w = (src + dst) % 9 + 1 on the symmetrized co-purchase graph,
     source = min part key)."""
-    cte = """
-    WITH e0 AS (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    cte = f"""
+    WITH e0(src, dst) AS ({_EDGES_SQL}),
     e AS (
       SELECT src, dst, (src + dst) % 9 + 1 AS w FROM e0
       UNION ALL
@@ -160,17 +157,14 @@ def bellman_ford_cheapest(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer distances for everything within 3 relaxation rounds; the
     oracle unrolls the identical rounds, so the hash match proves the
     relaxation order is immaterial (min is idempotent/commutative)."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-        .withColumn("w", (F.col("src") + F.col("dst")) % 9 + 1)
+    from kinesis_customer_sample_spark.queries.graph_quality_ops import (
+        _copurchase_edges,
+    )
+
+    und = _copurchase_edges(spark, sf_dir).select(
+        F.col("a").alias("src"),
+        F.col("b").alias("dst"),
+        ((F.col("a") + F.col("b")) % 9 + 1).alias("w"),
     )
     edges = und.unionAll(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
@@ -195,13 +189,8 @@ def bellman_ford_cheapest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q345_degree_assortativity",
-    oracle="""
-    WITH und AS (
-      SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-      FROM lineitem a
-      JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-                     AND a.l_partkey < b.l_partkey
-    ),
+    oracle=f"""
+    WITH und AS ({_EDGES_SQL}),
     deg AS (
       SELECT node, count(*)::BIGINT AS d FROM (
         SELECT a AS node FROM und UNION ALL SELECT b AS node FROM und
@@ -314,18 +303,12 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2-hop harmonic centrality over the shared co-purchase edge product.
 _AA_DEG_CAP = 50   # shared-neighbor degree cap (q286/q68 hot-hub bound)
 _AA_TOPK = 20
-_EDGES_SQL_UND = """
-    SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-    FROM lineitem a
-    JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-                   AND a.l_partkey < b.l_partkey
-"""
 
 
 @query(
     "q424_adamic_adar",
     oracle=f"""
-    WITH e0 AS ({_EDGES_SQL_UND}),
+    WITH e0 AS ({_EDGES_SQL}),
     e AS (SELECT a AS s, b AS t FROM e0 UNION ALL SELECT b, a FROM e0),
     deg AS (SELECT s AS node, count(*)::BIGINT AS d FROM e GROUP BY s),
     kept AS (
@@ -417,7 +400,7 @@ def adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q425_harmonic_centrality_2hop",
     oracle=f"""
-    WITH e0 AS ({_EDGES_SQL_UND}),
+    WITH e0 AS ({_EDGES_SQL}),
     e AS (SELECT a AS s, b AS t FROM e0 UNION ALL SELECT b, a FROM e0),
     deg AS (SELECT s AS node, count(*)::BIGINT AS d FROM e GROUP BY s),
     kept AS (
@@ -525,7 +508,7 @@ def _ppr_oracle() -> str:
     """Unrolled PPR power iteration (q159's oracle pattern with a
     seed-restricted restart term; seed = min node of the edge set)."""
     cte = f"""
-    WITH e0 AS ({_EDGES_SQL_UND}),
+    WITH e0 AS ({_EDGES_SQL}),
     e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b, a FROM e0),
     deg AS (SELECT src AS node, count(*)::BIGINT AS deg FROM e GROUP BY src),
     seed AS (SELECT min(node) AS s FROM deg),
@@ -637,7 +620,7 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q472_brand_modularity",
     oracle=f"""
-    WITH e0 AS ({_EDGES_SQL_UND}),
+    WITH e0 AS ({_EDGES_SQL}),
     m AS (SELECT count(*)::BIGINT AS m FROM e0),
     nodes AS (
       SELECT node, count(*)::BIGINT AS deg FROM (
@@ -759,7 +742,7 @@ def brand_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q501_degree_powerlaw_fit",
     oracle=f"""
-    WITH e0 AS ({_EDGES_SQL_UND}),
+    WITH e0 AS ({_EDGES_SQL}),
     deg AS (
       SELECT node, count(*)::BIGINT AS d FROM (
         SELECT a AS node FROM e0 UNION ALL SELECT b AS node FROM e0

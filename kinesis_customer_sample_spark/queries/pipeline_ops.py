@@ -76,43 +76,17 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop, alternating-algorithm variants cut rounds further). The oracle
     reaches the same fixpoint via a recursive CTE — a genuinely different
     algorithm, so agreement checks the semantics, not the plan."""
+    from kinesis_customer_sample_spark.queries.graph_components import (
+        hash_min_components,
+    )
+
     # materialize the pair list ONCE: the q68 postings subtree (tokenize +
     # shingle + inverted-index join) is the expensive part, and building
     # edges as pairs ∪ swap(pairs) would otherwise evaluate it twice
     pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
-    edges = pairs.unionByName(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).persist()
-    labels = edges.select(F.col("doc_a").alias("doc_id")).distinct().withColumn(
-        "component_id", F.col("doc_id")
+    labels = hash_min_components(pairs).select(
+        F.col("node").alias("doc_id"), F.col("lab").alias("component_id")
     )
-    while True:
-        neighbor_min = (
-            edges.join(labels, edges.doc_a == labels.doc_id)
-            .groupBy(F.col("doc_b").alias("doc_id"))
-            .agg(F.min("component_id").alias("nbr_min"))
-        )
-        # one pass per round: carry a changed flag through the (eager)
-        # localCheckpoint instead of re-joining new labels against old
-        updated = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least("component_id", F.coalesce("nbr_min", "component_id")).alias(
-                    "new_component_id"
-                ),
-                (
-                    F.least("component_id", F.coalesce("nbr_min", "component_id"))
-                    != F.col("component_id")
-                ).alias("changed"),
-            )
-            .localCheckpoint()  # truncate lineage each round
-        )
-        changed = updated.filter("changed").count()  # scan of checkpointed rows
-        labels = updated.select("doc_id", F.col("new_component_id").alias("component_id"))
-        if changed == 0:
-            break
-    edges.unpersist()
     w = W.partitionBy("component_id")
     return labels.select(
         "doc_id",

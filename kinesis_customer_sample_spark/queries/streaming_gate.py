@@ -35,7 +35,6 @@ the checkpoint guarantees each shard is gated exactly once.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +53,7 @@ from kinesis_customer_sample_spark.queries.text_analysis import _DUCK_TOKS, _SPA
 from kinesis_customer_sample_spark.registry import query
 from kinesis_customer_sample_spark.streaming.replay import (
     run_scratch_dir,
+    scratch_checkpoint,
     write_ordered_shards,
 )
 
@@ -194,14 +194,14 @@ def stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_q303_")
-    q = (
-        sdf.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with scratch_checkpoint("q303") as ckpt:
+        (
+            sdf.writeStream.foreachBatch(gate)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
     return spark.read.parquet(f"{out_dir}/epoch=*").select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         (F.col("doc_id") % _N_SHARDS).cast("bigint").alias("shard"),

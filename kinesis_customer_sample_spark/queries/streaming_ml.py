@@ -31,7 +31,6 @@ driver-held for the bounded 4-batch replay, as q149 does per iteration.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +39,7 @@ from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
 from kinesis_customer_sample_spark.streaming.replay import (
     run_scratch_dir,
+    scratch_checkpoint,
     write_ordered_shards,
 )
 
@@ -214,14 +214,14 @@ def stream_minibatch_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_q305_")
-    q = (
-        sdf.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with scratch_checkpoint("q305") as ckpt:
+        (
+            sdf.writeStream.foreachBatch(fold_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
 
     final_rows = [
         (cid, cnt, s, seeds[cid]) for cid, (cnt, s) in sorted(state.items())

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.fixtures import content_ops_values_sql
 from kinesis_customer_sample_spark.queries.content_ops import _ops
-from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.registry import REGISTRY, query
 from kinesis_customer_sample_spark.streaming.replay import events_stream, run_to_completion
 
 
@@ -357,19 +357,14 @@ def stream_ewma_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# importing the module registers q205 (no import cycle: timeseries_ops does
+# not import streaming_queries)
+from kinesis_customer_sample_spark.queries import timeseries_ops as _timeseries  # noqa: E402,F401
+
+
 @query(
     "q222_stream_ohlc",
-    oracle="""
-    SELECT event_type,
-           time_bucket(INTERVAL 15 MINUTE, ts) AS bucket_start,
-           first(value ORDER BY ts, event_id) AS open,
-           max(value)                         AS high,
-           min(value)                         AS low,
-           last(value ORDER BY ts, event_id)  AS close,
-           count(*)::BIGINT                   AS n_obs
-    FROM events
-    GROUP BY 1, 2
-    """,
+    oracle=REGISTRY["q205_ohlc_downsample"].oracle,  # q205 verbatim: stream = batch
     tags=("streaming", "timeseries", "resample"),
 )
 def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -879,9 +874,8 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # importing the module registers q262 (no import cycle: alerting_ops does
 # not import streaming_queries)
 from kinesis_customer_sample_spark.queries import alerting_ops as _alerting  # noqa: E402,F401
-from kinesis_customer_sample_spark.registry import REGISTRY as _REG_SO_FAR
 
-_Q262_ORACLE = _REG_SO_FAR["q262_hysteresis_alert_state"].oracle
+_Q262_ORACLE = REGISTRY["q262_hysteresis_alert_state"].oracle
 
 
 @query(
@@ -1224,10 +1218,8 @@ def stream_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
 # set post-registration because stats_tests imports after this module)
 import dataclasses as _dc  # noqa: E402
 
-from kinesis_customer_sample_spark.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["q339_stream_sprt_sequential"] = _dc.replace(
-    _REG["q339_stream_sprt_sequential"], oracle=_sprt_oracle().strip()
+REGISTRY["q339_stream_sprt_sequential"] = _dc.replace(
+    REGISTRY["q339_stream_sprt_sequential"], oracle=_sprt_oracle().strip()
 )
 
 

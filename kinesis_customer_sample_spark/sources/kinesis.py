@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.fixtures import RECORD_SCHEMA
-from kinesis_customer_sample_spark.sources.decode import Fetch, decode_records, http_fetch
 
 _KINESIS_FORMAT = "aws-kinesis"
 
@@ -134,11 +133,3 @@ def write_record_batches(df_records, out_dir: str, n_batches: int = 2) -> None:
             shutil.move(os.path.join(tmp, parts[0]), dst)
             os.utime(dst, (1_700_000_000 + 1000 * i, 1_700_000_000 + 1000 * i))
         shutil.rmtree(tmp)
-
-
-def content_operation_stream(records: DataFrame, fetch: Fetch = http_fetch) -> DataFrame:
-    """records (batch OR stream) → decoded, validated content operations.
-    The decode stage is the same code path either way (R2-R6): pandas-UDF
-    gunzip → pointer dereference → error→null → from_json envelope →
-    projection."""
-    return decode_records(records, fetch=fetch)

@@ -10,8 +10,11 @@ the driver (batch-equivalence, SURVEY.md §5.2.3).
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,22 +116,35 @@ def documents_stream(
     return reader.parquet(_stream_dir(sf_dir, "documents"))
 
 
+@contextmanager
+def scratch_checkpoint(name: str) -> Iterator[str]:
+    """A fresh checkpoint directory for one streaming query, deleted when
+    the block exits — also when the query fails. Only for queries that
+    terminate inside the block and whose rows are read from a sink (the
+    memory sink or an output directory), never from the checkpoint."""
+    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
+    try:
+        yield ckpt
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_to_completion(
     sdf: DataFrame, output_mode: str = "complete", name: str | None = None
 ) -> DataFrame:
     """Execute a streaming DataFrame to exhaustion (availableNow) via a
     memory sink; return the final result as a batch DataFrame."""
     name = name or f"stream_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with scratch_checkpoint(name) as ckpt:
+        (
+            sdf.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
     return sdf.sparkSession.table(name)
 
 
@@ -140,19 +156,19 @@ def run_until_caught_up(
     processAllAvailable() (blocks until the source reports no new
     offsets), stop, and return the sink table."""
     name = name or f"stream_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    with scratch_checkpoint(name) as ckpt:
+        q = (
+            sdf.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination()
     return sdf.sparkSession.table(name)
 
 
@@ -165,8 +181,6 @@ def write_ordered_shards(
     micro-batches — the deterministic-arrival harness q303/q305 gate their
     stream/batch-equivalence oracles on (FileStreamSource orders pending
     files by modification time)."""
-    import shutil
-
     os.makedirs(src_dir, exist_ok=True)
     base = os.path.dirname(src_dir)
     for s in range(n_shards):

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from kinesis_customer_sample_spark.fixtures import kinesis_records_df
 from kinesis_customer_sample_spark.sources.decode import decode_records
 from kinesis_customer_sample_spark.sources.kinesis import (
-    content_operation_stream,
     file_record_stream,
     kinesis_stream,
     write_record_batches,
@@ -27,7 +26,7 @@ def test_stream_decode_equals_batch_decode(spark):
     with tempfile.TemporaryDirectory() as td:
         write_record_batches(records, td, n_batches=3)
         stream = file_record_stream(spark, td)
-        decoded = content_operation_stream(stream, fetch=fetch)
+        decoded = decode_records(stream, fetch=fetch)
         got = run_to_completion(decoded, output_mode="append")
         want = decode_records(records, fetch=fetch)
         key = ["shard_id", "sequence_number"]
@@ -52,7 +51,7 @@ def test_stream_decode_drops_invalid_and_expired(spark):
 
 def test_wire_stream_feeds_stateful_latest_state(spark):
     """The documented source→decode→stateful wiring runs end-to-end on the
-    REAL wire columns: content_operation_stream output (sequence_number,
+    REAL wire columns: decode_records output (sequence_number,
     no fixture op_id) drives latest_state_stream, and the converged state
     equals the batch latest-state derivation. (Round-1 advice: the stateful
     ops previously keyed arrival order on the fixture-only op_id column and
@@ -67,7 +66,7 @@ def test_wire_stream_feeds_stateful_latest_state(spark):
     fetch = s3_store.__getitem__
     with tempfile.TemporaryDirectory() as td:
         write_record_batches(records, td, n_batches=3)
-        decoded = content_operation_stream(file_record_stream(spark, td), fetch=fetch)
+        decoded = decode_records(file_record_stream(spark, td), fetch=fetch)
         out = run_to_completion(latest_state_stream(decoded), output_mode="update")
         final = (
             out.withColumn(
@@ -118,7 +117,7 @@ def test_wire_latest_state_restarts_from_checkpoint(spark, tmp_path):
         src.mkdir(exist_ok=True)
         for f in files_now:
             shutil.copy2(f, src / f.name)  # keeps the mtime replay order
-        decoded = content_operation_stream(file_record_stream(spark, str(src)), fetch=fetch)
+        decoded = decode_records(file_record_stream(spark, str(src)), fetch=fetch)
         q = (
             latest_state_stream(decoded)
             .writeStream.outputMode("update")

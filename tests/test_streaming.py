@@ -4,9 +4,11 @@ their batch twins, watermark late-data handling, dedup, foreachBatch upsert
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
+import uuid
 
 import pandas as pd
 import pytest
@@ -189,6 +191,23 @@ def test_stateful_publish_exact_equals_batch(spark):
     # publish/unpublish/publish for story-1/published
     story1 = sorted(k[3:] for k in got if k[1] == "story-1" and k[2] == "default")
     assert [k[1] for k in story1] == ["publish", "unpublish", "publish"]
+
+
+@pytest.mark.parametrize("mode", ["complete", "append"])
+def test_run_to_completion_deletes_its_checkpoint(spark, sf_dir, mode):
+    """run_to_completion deletes its checkpoint directory once the query
+    has ended: after a complete run (the rows come from the memory sink)
+    and when the query fails (an aggregate without a watermark cannot run
+    in append mode)."""
+    name = f"ckpt_probe_{uuid.uuid4().hex[:8]}"
+    agg = events_stream(spark, sf_dir).groupBy("event_type").count()
+    if mode == "complete":
+        out = run_to_completion(agg, output_mode=mode, name=name)
+        assert out.count() > 0
+    else:
+        with pytest.raises(Exception):
+            run_to_completion(agg, output_mode=mode, name=name)
+    assert glob.glob(os.path.join(tempfile.gettempdir(), f"ckpt_{name}_*")) == []
 
 
 def test_streaming_dedup_within_watermark(spark, sf_dir):
