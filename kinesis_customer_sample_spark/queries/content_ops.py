@@ -283,28 +283,10 @@ def priority_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q96_wire_decode_roundtrip",
-    oracle="""
-    SELECT doc_id,
-           'washpost'           AS organization_id,
-           'insert-story'       AS operation,
-           'doc-' || doc_id     AS id,
-           true                 AS published,
-           text                 AS body_text,
-           length(text)::BIGINT AS body_len
-    FROM documents
-    """,
-    tags=("contentops", "decode", "wire"),
-)
-def wire_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL wire decode path under the oracle gate: every document is
-    wrapped into a gzip-compressed content-operation record (the producer
-    side of guide:17-19), then decoded by the production pipeline
-    (sources/decode.py: gunzip pandas-UDF → envelope from_json → type
-    validation → projection, R2/R5/R6). The oracle states what must come
-    out the other end; a hash-match proves encode∘decode is lossless over
-    the whole corpus, not just the 18-record fixture."""
+def _documents_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every document wrapped as a gzip-compressed content-operation wire
+    record (the producer side of guide:17-19): one insert-story per doc,
+    shard `doc_id % 4`, sequence number = doc_id."""
     import gzip as _gzip
     import json as _json
     from typing import Iterator
@@ -312,7 +294,6 @@ def wire_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from kinesis_customer_sample_spark.catalog import table
-    from kinesis_customer_sample_spark.sources.decode import decode_records
 
     docs = table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
@@ -354,10 +335,36 @@ def wire_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(out, columns=["shard_id", "sequence_number", "data"])
 
-    records = docs.mapInPandas(
+    return docs.mapInPandas(
         encode, schema="shard_id string, sequence_number string, data binary"
     )
-    decoded = decode_records(records)
+
+
+@query(
+    "q96_wire_decode_roundtrip",
+    oracle="""
+    SELECT doc_id,
+           'washpost'           AS organization_id,
+           'insert-story'       AS operation,
+           'doc-' || doc_id     AS id,
+           true                 AS published,
+           text                 AS body_text,
+           length(text)::BIGINT AS body_len
+    FROM documents
+    """,
+    tags=("contentops", "decode", "wire"),
+)
+def wire_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The FULL wire decode path under the oracle gate: every document is
+    wrapped into a gzip-compressed content-operation record (the producer
+    side of guide:17-19), then decoded by the production pipeline
+    (sources/decode.py: gunzip pandas-UDF → envelope from_json → type
+    validation → projection, R2/R5/R6). The oracle states what must come
+    out the other end; a hash-match proves encode∘decode is lossless over
+    the whole corpus, not just the 18-record fixture."""
+    from kinesis_customer_sample_spark.sources.decode import decode_records
+
+    decoded = decode_records(_documents_wire(spark, sf_dir))
     return decoded.select(
         F.col("sequence_number").cast("bigint").alias("doc_id"),
         "organization_id",
@@ -396,59 +403,19 @@ def dead_letter_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream). The anti-join keys on (shard, seq) — the same key the
     decode already carries — and per-shard rates are integer basis
     points."""
-    import gzip as _gzip
-    import json as _json
-    from typing import Iterator
-
-    import pandas as pd
-
-    from kinesis_customer_sample_spark.catalog import table
     from kinesis_customer_sample_spark.sources.decode import decode_records
 
-    docs = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
+    records = (
+        _documents_wire(spark, sf_dir)
+        .withColumn(
+            "data",
+            F.when(  # deterministic corruption: gzip truncated to 5 bytes
+                F.expr("CAST(sequence_number AS BIGINT) % 7 = 0"),
+                F.substring("data", 1, 5),
+            ).otherwise(F.col("data")),
+        )
+        .localCheckpoint()  # encode once; inputs and decode share the batch
     )
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload = _json.dumps(
-                    {
-                        "type": "content-operation",
-                        "organization_id": "washpost",
-                        "operation": "insert-story",
-                        "date": "2024-01-01T00:00:00Z",
-                        "id": f"doc-{doc_id}",
-                        "branch": "default",
-                        "published": True,
-                        "created": True,
-                        "trigger": {
-                            "type": "story",
-                            "id": f"doc-{doc_id}",
-                            "referent_update": False,
-                            "priority": "standard",
-                            "app_name": "fixture",
-                        },
-                        "body": {"text": text},
-                    },
-                    sort_keys=True,
-                )
-                data = _gzip.compress(payload.encode("utf-8"))
-                if doc_id % 7 == 0:  # deterministic corruption
-                    data = data[:5]
-                out.append(
-                    {
-                        "shard_id": f"shard-{doc_id % 4}",
-                        "sequence_number": str(doc_id),
-                        "data": data,
-                    }
-                )
-            yield pd.DataFrame(out, columns=["shard_id", "sequence_number", "data"])
-
-    records = docs.mapInPandas(
-        encode, schema="shard_id string, sequence_number string, data binary"
-    ).localCheckpoint()  # encode once; inputs and decode share the batch
     decoded = decode_records(records).select("shard_id", "sequence_number")
     inputs = records.select("shard_id", "sequence_number")
     dead = inputs.join(decoded, ["shard_id", "sequence_number"], "left_anti")

@@ -27,21 +27,21 @@ Scale posture (100 TB):
   window/join algebra happens on the grid;
 - lag joins are integer equi-joins on (key, period+k) — shuffle-bounded
   by the grid, broadcastable lag dimensions;
-- Croston's sequential recursion uses the q297 secondary-sort
-  mapInPandas pattern (repartition by key + sortWithinPartitions +
-  carry-state across Arrow batches): O(rows) Python, no per-group
-  pandas tax, arbitrarily many keys;
+- Croston's sequential recursion runs in the sorted-key fold
+  (`operators/sorted_fold.py`: repartition by key + sortWithinPartitions
+  + one mapInPandas pass): O(rows) Python, no per-group pandas tax,
+  arbitrarily many keys;
 - drawdown windows are partitioned per segment over the bounded day
   grid — never a `No Partition Defined` window.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
+from kinesis_customer_sample_spark.operators.sorted_fold import sorted_key_fold
 from kinesis_customer_sample_spark.registry import query
 
 # q440: seasonal-naive horizon (days) for the MASE numerator
@@ -228,10 +228,10 @@ def croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed by the oracle's recursive CTE (q297 discipline).
 
     Scale: one codegen hash-agg to the (part, week) demand grid; the
-    inherently-sequential smoothing runs via the q297 secondary-sort
-    pattern — repartition by part, sortWithinPartitions by (part, week),
-    ONE mapInPandas pass with carry-state across Arrow batches: O(rows)
-    Python for arbitrarily many parts, no per-group pandas tax.""".format(
+    inherently-sequential smoothing runs in the sorted-key fold —
+    repartition by part, sortWithinPartitions by (part, week), ONE
+    mapInPandas pass: O(rows) Python for arbitrarily many parts, no
+    per-group pandas tax.""".format(
         a=_CR_ALPHA
     )
     li = table(spark, sf_dir, "lineitem")
@@ -261,54 +261,27 @@ def croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def croston_over(weekly: DataFrame) -> DataFrame:
-    """Croston recursion over a (pk, w, q) demand-occurrence grid via the
-    q297 secondary-sort pattern; exposed for the scale smoke."""
+    """Croston recursion over a (pk, w, q) demand-occurrence grid, run by
+    the sorted-key fold; exposed for the scale smoke."""
     alpha, beta = _CR_ALPHA, 1 - _CR_ALPHA
 
-    def croston_partition(batches):
-        cur_pk = None
-        last_w = z = p = None
-        n = 0
-        out: dict[str, list] = {
-            "partkey": [], "n_demands": [], "size_level": [],
-            "interval_level": [], "forecast": [],
-        }
+    def croston(pk, rows):
+        w0, q0 = rows[0]
+        z, p, last_w = float(int(q0)), 1.0, int(w0)
+        for w, q in rows[1:]:
+            w, q = int(w), int(q)
+            z = alpha * q + beta * z
+            p = alpha * (w - last_w) + beta * p
+            last_w = w
+        return int(pk), len(rows), z, p, z / p
 
-        def flush():
-            if cur_pk is None:
-                return
-            out["partkey"].append(cur_pk)
-            out["n_demands"].append(n)
-            out["size_level"].append(z)
-            out["interval_level"].append(p)
-            out["forecast"].append(z / p)
-
-        for pdf in batches:
-            for pk, w, q in zip(
-                pdf["pk"].to_numpy(), pdf["w"].to_numpy(), pdf["q"].to_numpy()
-            ):
-                pk, w, q = int(pk), int(w), int(q)
-                if pk != cur_pk:
-                    flush()
-                    cur_pk, n = pk, 1
-                    z, p, last_w = float(q), 1.0, w
-                else:
-                    n += 1
-                    z = alpha * q + beta * z
-                    p = alpha * (w - last_w) + beta * p
-                    last_w = w
-            # NB: q297 carries state across Arrow batches the same way
-        flush()
-        yield pd.DataFrame(out)
-
-    return (
-        weekly.repartition("pk")
-        .sortWithinPartitions("pk", "w")
-        .mapInPandas(
-            croston_partition,
-            "partkey bigint, n_demands bigint, size_level double, "
-            "interval_level double, forecast double",
-        )
+    return sorted_key_fold(
+        weekly,
+        "pk",
+        "w",
+        croston,
+        "partkey bigint, n_demands bigint, size_level double, "
+        "interval_level double, forecast double",
     )
 
 

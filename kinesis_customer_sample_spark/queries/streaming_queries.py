@@ -456,12 +456,12 @@ def contentops_streaming_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_customer_sample_spark.streaming.stateful import publish_events_stream
 
     records, s3_store = kinesis_records_df(spark)
-    td = tempfile.mkdtemp(prefix="kcss_wire_stream_")
-    records.coalesce(1).write.mode("overwrite").parquet(td)
-    stream = spark.readStream.schema(RECORD_SCHEMA).parquet(td)
-    decoded = decode_records(stream, fetch=s3_store.__getitem__)
-    events = publish_events_stream(decoded)
-    out = run_to_completion(events, output_mode="append")
+    with tempfile.TemporaryDirectory(prefix="kcss_wire_stream_") as td:
+        records.coalesce(1).write.mode("overwrite").parquet(td)
+        stream = spark.readStream.schema(RECORD_SCHEMA).parquet(td)
+        decoded = decode_records(stream, fetch=s3_store.__getitem__)
+        events = publish_events_stream(decoded)
+        out = run_to_completion(events, output_mode="append")
     return out.select("organization_id", "id", "branch", "event_us", "kind")
 
 
@@ -539,14 +539,15 @@ def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("event_id", F.lit(-1).cast("long"))
         .withColumn("batch_id", F.lit(2))
     )
-    src_dir = os.path.join(tempfile.mkdtemp(prefix="kcss_sess_timeout_"), "src")
-    write_ordered_shards(real.unionByName(sentinel), src_dir, 3, "batch_id")
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, event_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    out = run_to_completion(session_timeout_stream(stream), output_mode="append")
+    with tempfile.TemporaryDirectory(prefix="kcss_sess_timeout_") as td:
+        src_dir = os.path.join(td, "src")
+        write_ordered_shards(real.unionByName(sentinel), src_dir, 3, "batch_id")
+        stream = (
+            spark.readStream.schema("user_id long, ts timestamp, event_id long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
+        )
+        out = run_to_completion(session_timeout_stream(stream), output_mode="append")
     return out.filter(
         F.col("session_start") <= F.timestamp_micros(F.lit(hi))
     ).select(
@@ -782,39 +783,40 @@ def stream_chained_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("click").alias("event_type"),
         F.col("id").cast("int").alias("batch_id"),
     )
-    src_dir = os.path.join(tempfile.mkdtemp(prefix="kcss_chain_aggs_"), "src")
-    write_ordered_shards(real.unionByName(sentinels), src_dir, 4, "batch_id")
-    ev = (
-        spark.readStream.schema("ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    minutely = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "10 minutes"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    hourly = (
-        # chain via window_time() over the PRESERVED window struct — the
-        # only column form that carries the event-time watermark into the
-        # second stateful operator (selecting window.start strips it)
-        minutely.groupBy(
-            F.window(F.window_time("window"), "1 hour"), "event_type"
+    with tempfile.TemporaryDirectory(prefix="kcss_chain_aggs_") as td:
+        src_dir = os.path.join(td, "src")
+        write_ordered_shards(real.unionByName(sentinels), src_dir, 4, "batch_id")
+        ev = (
+            spark.readStream.schema("ts timestamp, event_type string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
         )
-        .agg(
-            F.max("n").alias("peak_10min"),
-            F.sum("n").alias("total"),
-            F.count(F.lit(1)).alias("n_buckets"),
+        minutely = (
+            ev.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "10 minutes"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-        .select(
-            F.col("window.start").cast("timestamp_ntz").alias("h_start"),
-            "event_type",
-            "peak_10min",
-            "total",
-            "n_buckets",
+        hourly = (
+            # chain via window_time() over the PRESERVED window struct — the
+            # only column form that carries the event-time watermark into the
+            # second stateful operator (selecting window.start strips it)
+            minutely.groupBy(
+                F.window(F.window_time("window"), "1 hour"), "event_type"
+            )
+            .agg(
+                F.max("n").alias("peak_10min"),
+                F.sum("n").alias("total"),
+                F.count(F.lit(1)).alias("n_buckets"),
+            )
+            .select(
+                F.col("window.start").cast("timestamp_ntz").alias("h_start"),
+                "event_type",
+                "peak_10min",
+                "total",
+                "n_buckets",
+            )
         )
-    )
-    out = run_to_completion(hourly, output_mode="append")
+        out = run_to_completion(hourly, output_mode="append")
     return out.filter(
         F.col("h_start") <= F.timestamp_micros(F.lit(hi)).cast("timestamp_ntz")
     )
@@ -1107,17 +1109,18 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     doubled = ev.withColumn("batch_id", F.lit(0)).unionByName(
         ev.withColumn("batch_id", F.lit(1))  # the duplicate delivery
     )
-    src_dir = os.path.join(tempfile.mkdtemp(prefix="kcss_dedup_wm_"), "src")
-    write_ordered_shards(doubled, src_dir, 2, "batch_id")
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    out = run_to_completion(deduped, output_mode="append")
+    with tempfile.TemporaryDirectory(prefix="kcss_dedup_wm_") as td:
+        src_dir = os.path.join(td, "src")
+        write_ordered_shards(doubled, src_dir, 2, "batch_id")
+        stream = (
+            spark.readStream.schema("event_id long, ts timestamp, event_type string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
+        )
+        deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
+            ["event_id"]
+        )
+        out = run_to_completion(deduped, output_mode="append")
     # plain count(*) vs the oracle's count(DISTINCT): a duplicate that
     # survived the stream-side dedup would inflate the row count and
     # hash-mismatch — a batch countDistinct here would mask exactly the
@@ -1178,14 +1181,15 @@ def stream_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         "batch_id",
         F.when(F.unix_micros("ts") <= F.lit(mid), F.lit(0)).otherwise(F.lit(1)),
     )
-    src_dir = os.path.join(tempfile.mkdtemp(prefix="kcss_sprt_stream_"), "src")
-    write_ordered_shards(sharded, src_dir, 2, "batch_id")
-    stream = (
-        spark.readStream.schema("arm long, ts timestamp, event_id long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    out = run_to_completion(sprt_stream(stream), output_mode="update")
+    with tempfile.TemporaryDirectory(prefix="kcss_sprt_stream_") as td:
+        src_dir = os.path.join(td, "src")
+        write_ordered_shards(sharded, src_dir, 2, "batch_id")
+        stream = (
+            spark.readStream.schema("arm long, ts timestamp, event_id long, value double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
+        )
+        out = run_to_completion(sprt_stream(stream), output_mode="update")
     w = W.partitionBy("arm").orderBy(F.col("n").desc())
     final = (
         out.withColumn("rk", F.row_number().over(w))
@@ -1320,9 +1324,9 @@ def stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming histogram quantiles — q211's mergeable fixed-bin
-    histogram carried as keyed STREAM STATE (`applyInPandasWithState`):
-    per event type the state is a constant 20-bin count vector over
-    value cents, each micro-batch folds its rows in by vector addition
+    histogram carried as keyed STREAM STATE (a built-in streaming
+    aggregate): per event type the state is a constant 20-bin count
+    vector over value cents, each micro-batch adds its rows' counts
     (associative + commutative — retry- and repartition-safe), and the
     emitted p50/p90/p99 are the bin floors at ceil(n·p) rank. The batch
     oracle derives identical quantiles from a windowed cumulative over
@@ -1407,9 +1411,9 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     in by vector addition (commutative — order-, retry- and
     repartition-safe, the q439 discipline), and PSI is computed AFTER
     the stream in Spark SQL over the final emitted vectors with the
-    +1-smoothed integer micro-nat algebra — no transcendental ever
-    runs in Python, so the stream and the batch oracle share the exact
-    ln-of-integers terms.
+    +1-smoothed integer micro-nat algebra. The stream is a built-in
+    aggregate and no transcendental runs in a worker, so the stream and
+    the batch oracle share the exact ln-of-integers terms.
 
     Scale posture: state is 2×20 longs per key regardless of stream
     length; the monitor pattern at 100 TB is this exact shape with the

@@ -23,21 +23,20 @@ Cross-engine determinism (registry parity rules):
 Scale posture (100 TB):
 - q297 aggregates events to per-(user, day) integer partials in codegen
   (the only full-data pass), then runs the O(days) recursion per user via
-  repartition-by-user + partition-local sort + one mapInPandas pass —
-  O(rows) Python cost, one (level, trend, sse) state triple per user,
-  no global window, no driver loop.
+  the sorted-key fold (repartition-by-user + partition-local sort + one
+  mapInPandas pass) — O(rows) Python cost, no global window, no driver
+  loop.
 - q298/q299 are pure two-level hash aggregations; the kappa marginals
   join is |labels|² at most — broadcast-sized by construction.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
+from kinesis_customer_sample_spark.operators.sorted_fold import sorted_key_fold
 from kinesis_customer_sample_spark.queries.text_analysis import lang_id_heuristic
 from kinesis_customer_sample_spark.registry import REGISTRY as _REGISTRY
 from kinesis_customer_sample_spark.registry import query
@@ -96,12 +95,10 @@ def holt_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     the textbook init l₁=y₁, b₁=y₂−y₁, plus the in-sample one-step SSE
     and the 7-step-ahead forecast l+7b. The per-day aggregation (the only
     full-data pass) is exact integer cents in codegen; the linear
-    recursion — inherently sequential per key — runs via the
-    secondary-sort pattern: repartition by user, sortWithinPartitions by
-    (user, day), then ONE `mapInPandas` pass whose carry-state survives
-    Arrow-batch splits. That keeps Python cost O(rows); applyInPandas
-    would pay a measured ~1.3 ms/GROUP in per-call pandas construction —
-    a fixed tax that dominates at feature-store user counts. The oracle
+    recursion — inherently sequential per key — runs in the sorted-key
+    fold (`operators/sorted_fold.py`): repartition by user,
+    sortWithinPartitions by (user, day), then ONE `mapInPandas` pass —
+    O(rows) Python, no per-group applyInPandas tax. The oracle
     replays the identical IEEE op sequence via a recursive CTE marching
     the day index, so a hash match proves bit-exact state replication."""
     daily = (
@@ -110,57 +107,26 @@ def holt_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.expr(_CENTS)).alias("cents"))
     )
 
-    # Secondary-sort grouped streaming, NOT applyInPandas: per-group
-    # invocation costs a measured ~1.3 ms/group in pandas construction
-    # alone (O(|users|) fixed tax — ruinous at feature-store user counts),
-    # while repartition-by-key + sortWithinPartitions + mapInPandas runs
-    # the same recursion at O(rows) with one pandas frame per Arrow batch.
-    # A user's rows all land in one partition and arrive day-ordered, but
-    # MAY split across Arrow batches — state (uid, ys) carries across the
-    # iterator and flushes only on a key change or end-of-partition.
-    def holt_partition(batches):
-        cur_uid, ys = None, []
-        out: dict[str, list] = {
-            "user_id": [], "n_days": [], "level": [],
-            "trend": [], "forecast7": [], "sse": [],
-        }
+    def holt(uid, rows):
+        if len(rows) < 2:  # no trend from a single point
+            return None
+        ys = [float(c) / 100.0 for _, c in rows]
+        l, b, sse = ys[0], ys[1] - ys[0], 0.0
+        for y in ys[1:]:
+            p = l + b
+            l_new = _ALPHA * y + _ONE_M_ALPHA * p
+            b = _BETA * (l_new - l) + _ONE_M_BETA * b
+            sse = sse + (y - p) * (y - p)
+            l = l_new
+        return int(uid), len(ys), l, b, l + _H * b, sse
 
-        def flush():
-            n = len(ys)
-            if cur_uid is None or n < 2:  # no trend from a single point
-                return
-            l, b, sse = ys[0], ys[1] - ys[0], 0.0
-            for y in ys[1:]:
-                p = l + b
-                l_new = _ALPHA * y + _ONE_M_ALPHA * p
-                b = _BETA * (l_new - l) + _ONE_M_BETA * b
-                sse = sse + (y - p) * (y - p)
-                l = l_new
-            out["user_id"].append(cur_uid)
-            out["n_days"].append(n)
-            out["level"].append(l)
-            out["trend"].append(b)
-            out["forecast7"].append(l + _H * b)
-            out["sse"].append(sse)
-
-        for pdf in batches:
-            for u, c in zip(pdf["user_id"].to_numpy(), pdf["cents"].to_numpy()):
-                u = int(u)
-                if u != cur_uid:
-                    flush()
-                    cur_uid, ys = u, []
-                ys.append(float(c) / 100.0)
-        flush()
-        yield pd.DataFrame(out)
-
-    out = (
-        daily.repartition("user_id")
-        .sortWithinPartitions("user_id", "day")
-        .mapInPandas(
-            holt_partition,
-            "user_id bigint, n_days bigint, level double, trend double, "
-            "forecast7 double, sse double",
-        )
+    out = sorted_key_fold(
+        daily,
+        "user_id",
+        "day",
+        holt,
+        "user_id bigint, n_days bigint, level double, trend double, "
+        "forecast7 double, sse double",
     )
     return out.select(
         "user_id",
@@ -569,9 +535,8 @@ def holt_winters_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
     state variables instead of 2).
 
     Scale: the dense (user, day) grid is one hash-agg + a broadcast
-    30-row day dim; the inherently-sequential recursion runs via the
-    q297 secondary-sort mapInPandas pattern — O(rows) Python,
-    carry-state across Arrow batches, arbitrarily many users."""
+    30-row day dim; the inherently-sequential recursion runs in the
+    sorted-key fold (q297's) — O(rows) Python, arbitrarily many users."""
     spend = (
         table(spark, sf_dir, "events")
         .groupBy(
@@ -597,49 +562,28 @@ def holt_winters_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
     be, omb = _HW_BETA, _HW_1MB
     ga, omg = _HW_GAMMA, _HW_1MG
 
-    def hw_partition(batches):
-        cur_uid, ys = None, []
-        out: dict[str, list] = {
-            "user_id": [], "level": [], "trend": [], "next_day_forecast": [],
-        }
+    def hw(uid, rows):
+        if len(rows) != days_n:
+            return None
+        ys = [float(y) for _, y in rows]
+        l = sum(ys[:m]) / m
+        b = (sum(ys[m : 2 * m]) - sum(ys[:m])) / (m * m)
+        s = [ys[j] - l for j in range(m)]
+        for t in range(m, days_n):
+            y = ys[t]
+            ph = t % m
+            l_new = al * (y - s[ph]) + oma * (l + b)
+            b = be * (l_new - l) + omb * b
+            s[ph] = ga * (y - l_new) + omg * s[ph]
+            l = l_new
+        return int(uid), l, b, l + b + s[days_n % m]
 
-        def flush():
-            if cur_uid is None or len(ys) != days_n:
-                return
-            l = sum(ys[:m]) / m
-            b = (sum(ys[m : 2 * m]) - sum(ys[:m])) / (m * m)
-            s = [ys[j] - l for j in range(m)]
-            for t in range(m, days_n):
-                y = ys[t]
-                ph = t % m
-                l_new = al * (y - s[ph]) + oma * (l + b)
-                b = be * (l_new - l) + omb * b
-                s[ph] = ga * (y - l_new) + omg * s[ph]
-                l = l_new
-            out["user_id"].append(cur_uid)
-            out["level"].append(l)
-            out["trend"].append(b)
-            out["next_day_forecast"].append(l + b + s[days_n % m])
-
-        for pdf in batches:
-            for u, t, y in zip(
-                pdf["user_id"].to_numpy(), pdf["t"].to_numpy(), pdf["y"].to_numpy()
-            ):
-                u = int(u)
-                if u != cur_uid:
-                    flush()
-                    cur_uid, ys = u, []
-                ys.append(float(y))
-        flush()
-        yield pd.DataFrame(out)
-
-    out = (
-        grid.repartition("user_id")
-        .sortWithinPartitions("user_id", "t")
-        .mapInPandas(
-            hw_partition,
-            "user_id bigint, level double, trend double, next_day_forecast double",
-        )
+    out = sorted_key_fold(
+        grid,
+        "user_id",
+        "t",
+        hw,
+        "user_id bigint, level double, trend double, next_day_forecast double",
     )
     # floor-µ outputs (SCALE.md round-on-quotient ban): the recursion
     # doubles are engine-identical; quantize by floor, never round
@@ -660,55 +604,28 @@ _KAL_R = 400.0  # observation noise variance
 
 def kalman_over(daily: DataFrame) -> DataFrame:
     """Per-key 1-D Kalman local-level recursion over (event_type, day, y)
-    rows — the reusable secondary-sort mapInPandas core of q474 (shared
-    with the scale smokes, the croston_over pattern). Carry-state across
-    Arrow batches: a key's series may arrive split over many batches
-    within the sorted partition; the fold only flushes on key change or
-    end of partition."""
+    rows — the recursion of q474, run by the sorted-key fold and shared
+    with the scale smokes."""
     q, r = _KAL_Q, _KAL_R
 
-    def kalman_partition(batches):
-        cur, ys = None, []
-        out: dict[str, list] = {
-            "event_type": [], "n_days": [], "level": [],
-            "kalman_gain": [], "pvar": [], "innov_sse": [],
-        }
+    def kalman(et, rows):
+        ys = [float(y) for _, y in rows]
+        l, p, k, sse = ys[0], r, 0.0, 0.0
+        for y in ys[1:]:
+            k = (p + q) / ((p + q) + r)
+            l_new = l + ((p + q) / ((p + q) + r)) * (y - l)
+            sse = sse + (y - l) * (y - l)
+            p_new = (1.0 - ((p + q) / ((p + q) + r))) * (p + q)
+            l, p = l_new, p_new
+        return str(et), len(ys), l, k, p, sse
 
-        def flush():
-            if cur is None or not ys:
-                return
-            l, p, k, sse = ys[0], r, 0.0, 0.0
-            for y in ys[1:]:
-                k = (p + q) / ((p + q) + r)
-                l_new = l + ((p + q) / ((p + q) + r)) * (y - l)
-                sse = sse + (y - l) * (y - l)
-                p_new = (1.0 - ((p + q) / ((p + q) + r))) * (p + q)
-                l, p = l_new, p_new
-            out["event_type"].append(cur)
-            out["n_days"].append(len(ys))
-            out["level"].append(l)
-            out["kalman_gain"].append(k)
-            out["pvar"].append(p)
-            out["innov_sse"].append(sse)
-
-        for pdf in batches:
-            for et, y in zip(pdf["event_type"].to_numpy(), pdf["y"].to_numpy()):
-                et = str(et)
-                if et != cur:
-                    flush()
-                    cur, ys = et, []
-                ys.append(float(y))
-        flush()
-        yield pd.DataFrame(out)
-
-    return (
-        daily.repartition("event_type")
-        .sortWithinPartitions("event_type", "day")
-        .mapInPandas(
-            kalman_partition,
-            "event_type string, n_days bigint, level double, "
-            "kalman_gain double, pvar double, innov_sse double",
-        )
+    return sorted_key_fold(
+        daily,
+        "event_type",
+        "day",
+        kalman,
+        "event_type string, n_days bigint, level double, "
+        "kalman_gain double, pvar double, innov_sse double",
     )
 
 
@@ -770,10 +687,9 @@ def kalman_local_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline; a hash match proves bit-exact state replication.
 
     Scale posture: one codegen hash-agg to the (type, day) grid, then
-    the inherently-sequential per-key recursion via repartition-by-key +
-    sortWithinPartitions + ONE mapInPandas pass (carry-state across
-    Arrow batches, O(rows) Python, arbitrarily many keys in parallel —
-    the q297 secondary-sort pattern, not per-group applyInPandas)."""
+    the inherently-sequential per-key recursion in the sorted-key fold
+    (q297's: repartition-by-key + sortWithinPartitions + ONE mapInPandas
+    pass, O(rows) Python, not per-group applyInPandas)."""
     daily = (
         table(spark, sf_dir, "events")
         .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))

@@ -22,15 +22,6 @@ from pyspark.sql import types as T
 
 from kinesis_customer_sample_spark.session import ensure_engine_conf
 
-def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """Physical schema of the events fixture, read from the parquet footer
-    (a metadata-only batch read — no data scan). Older fixture generations
-    store ts as ns-as-long (under spark.sql.legacy.parquet.nanosAsLong);
-    current ones as native timestamp[us]. File streams must declare the
-    physical schema, so detect rather than assume."""
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-
 def _stream_dir(sf_dir: str, name: str) -> str:
     """File-stream sources need a directory; expose `<sf_dir>/<name>.parquet`
     (a single file) through a symlinked temp directory. The dir tag is a
@@ -67,41 +58,33 @@ def run_scratch_dir(name: str, sf_dir: str) -> str:
     return tempfile.mkdtemp(prefix="run_", dir=stable)
 
 
+def _file_stream(
+    spark: SparkSession, sf_dir: str, name: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """The `<sf_dir>/<name>.parquet` fixture table as a file-source stream.
+    File streams must declare a schema; it is read from the parquet footer
+    (a metadata-only batch read), because fixture generations have changed
+    physical dtypes (events.ts: ns-as-long under
+    spark.sql.legacy.parquet.nanosAsLong, now native timestamp[us]) and a
+    static declared schema would silently mismatch a re-typed column."""
+    ensure_engine_conf(spark)
+    reader = spark.readStream.schema(
+        spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    )
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(_stream_dir(sf_dir, name))
+
+
 def events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """The events table as a file-source stream (per-partition ordering ≈
     per-shard ordering, guide:13)."""
-    ensure_engine_conf(spark)
-    raw_schema = _events_raw_schema(spark, sf_dir)
-    reader = spark.readStream.schema(raw_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(_stream_dir(sf_dir, "events"))
+    df = _file_stream(spark, sf_dir, "events", max_files_per_trigger)
     # session-TZ timestamp (not NTZ): watermarks require TIMESTAMP, and the
     # session is pinned to UTC so the wall clock matches the batch catalog
-    if isinstance(raw_schema["ts"].dataType, T.LongType):  # legacy ns-as-long
+    if isinstance(df.schema["ts"].dataType, T.LongType):  # legacy ns-as-long
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-_DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-
-def documents_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """Physical schema of the documents fixture from the parquet footer
-    (metadata-only read) — the drift-proof source of truth for file
-    streams, same rationale as _events_raw_schema: driver-regenerated
-    fixtures have changed physical dtypes across rounds (the round-2
-    bench crash class), and a static declared schema would silently
-    mismatch a re-typed column."""
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").schema
 
 
 def documents_stream(
@@ -109,11 +92,7 @@ def documents_stream(
 ) -> DataFrame:
     """The documents table as a file-source stream — the corpus-ingest
     replay double (new crawl shards arriving as files)."""
-    ensure_engine_conf(spark)
-    reader = spark.readStream.schema(documents_raw_schema(spark, sf_dir))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(_stream_dir(sf_dir, "documents"))
+    return _file_stream(spark, sf_dir, "documents", max_files_per_trigger)
 
 
 @contextmanager

@@ -9,9 +9,15 @@ older record can never overwrite newer state (the guide:104-106
 ingestion-lag case). The engine keeps the aggregate in its own state store
 (RocksDB-backed in production) with no Python in the per-key loop.
 
-Publish detection uses `applyInPandasWithState`: it is an arrival-order
-state machine that emits events, not an aggregate. Each group's rows are
-sorted by `arrival_seq` before the fold.
+The histogram sketches of q439 (`hist_quantile_stream`) and q457
+(`psi_drift_stream`) are built-in streaming aggregates too: one
+conditional count per bin, bin arrays and quantile floors projected after
+the aggregate. These three are the native operators.
+
+The other operators here use `applyInPandasWithState`, because their folds
+depend on arrival order, micro-batch boundaries or a timeout. Publish detection is an
+arrival-order state machine that emits events, not an aggregate; each
+group's rows are sorted by `arrival_seq` before the fold.
 
 Arrival ordering contract: both operators key arrival order on
 `arrival_seq`, derived by `_with_arrival_seq` from whichever ordering
@@ -599,11 +605,11 @@ def twap_stream(obs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Mergeable fixed-bin histogram state (q439): per event_type the state is a
-# 20-bin count vector over value cents — the constant-size mergeable sketch
-# that answers any quantile at read time (q211's batch histogram carried as
-# stream state). Bins merge by vector addition, so the operator is
-# associative/commutative — the property that makes it safe under retries
+# Mergeable fixed-bin histogram state (q439): per event_type a 20-bin count
+# vector over value cents — the constant-size mergeable sketch that answers
+# any quantile at read time (q211's batch histogram carried as stream
+# state). Each bin is a built-in conditional count, so the state store
+# merges bins by addition: associative and commutative, safe under retries
 # and repartitioning.
 
 HIST_NBINS = 20
@@ -611,56 +617,50 @@ HIST_BIN_W_C = 2500  # cents per bin ($25); values cap into the last bin
 HIST_OUT_SCHEMA = (
     "event_type string, n_obs long, p50_lo_c long, p90_lo_c long, p99_lo_c long"
 )
-HIST_STATE_SCHEMA = "bins array<long>, n_obs long"
 _HIST_QS_BP = (5000, 9000, 9900)
 
 
-def _hist_quantile_lo(bins: list, n: int, p_bp: int) -> int:
-    rank = (n * p_bp + 9999) // 10000
-    cum = 0
-    for i, c in enumerate(bins):
-        cum += c
-        if cum >= rank:
-            return i * HIST_BIN_W_C
-    return (HIST_NBINS - 1) * HIST_BIN_W_C
+def _bins(cond):
+    """Per-bin counts over value cents of the rows where `cond` holds: one
+    built-in conditional count per bin, packed into an array in bin order
+    after the aggregate."""
+    from pyspark.sql import functions as F
+
+    b = F.least(
+        F.expr(f"CAST(round(value * 100) AS BIGINT) div {HIST_BIN_W_C}"),
+        F.lit(HIST_NBINS - 1),
+    )
+    return F.array(*[F.count_if(cond & (b == j)) for j in range(HIST_NBINS)])
 
 
-def hist_quantile_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    bins, n = (
-        (list(state.get[0]), state.get[1]) if state.exists else ([0] * HIST_NBINS, 0)
-    )
-    for pdf in pdfs:
-        for v in pdf["value"]:
-            c = int(round(float(v) * 100))
-            b = min(c // HIST_BIN_W_C, HIST_NBINS - 1)
-            bins[b] += 1
-            n += 1
-    state.update((bins, n))
-    qs = [_hist_quantile_lo(bins, n, p) for p in _HIST_QS_BP]
-    yield pd.DataFrame(
-        [
-            {
-                "event_type": key[0],
-                "n_obs": n,
-                "p50_lo_c": qs[0],
-                "p90_lo_c": qs[1],
-                "p99_lo_c": qs[2],
-            }
-        ]
-    )
+def _total(bins: str) -> str:
+    return f"aggregate({bins}, 0L, (a, c) -> a + c)"
 
 
 def hist_quantile_stream(events: DataFrame) -> DataFrame:
     """Streaming per-type histogram-quantile state (update mode: each
-    micro-batch emits the type's current p50/p90/p99 bin floors)."""
-    return events.groupBy("event_type").applyInPandasWithState(
-        hist_quantile_fn,
-        outputStructType=HIST_OUT_SCHEMA,
-        stateStructType=HIST_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    micro-batch emits the type's current p50/p90/p99 bin floors, the
+    floor of the first bin whose cumulative count reaches rank
+    ceil(n·p))."""
+    from pyspark.sql import functions as F
+
+    cum = "transform(bins, (c, i) -> " + _total("slice(bins, 1, i + 1)") + ")"
+    floors = [
+        F.expr(
+            "(array_position(transform(cum, c -> "
+            f"c >= (n_obs * {p} + 9999) div 10000), true) - 1) * {HIST_BIN_W_C}"
+        ).alias(f"p{p // 100}_lo_c")
+        for p in _HIST_QS_BP
+    ]
+    return (
+        events.groupBy("event_type")
+        .agg(_bins(F.lit(True)).alias("bins"))
+        .select(
+            "event_type",
+            F.expr(_total("bins")).alias("n_obs"),
+            F.expr(cum).alias("cum"),
+        )
+        .select("event_type", "n_obs", *floors)
     )
 
 
@@ -668,54 +668,31 @@ def hist_quantile_stream(events: DataFrame) -> DataFrame:
 # Reference/current split at a FIXED event-time boundary so the fold stays
 # commutative (order- and repartition-safe): rows before the boundary build
 # the frozen reference histogram, rows after it the current one. PSI itself
-# is computed OUTSIDE the stream (Spark SQL over the emitted bin vectors),
-# so no transcendental ever runs in Python.
+# is computed OUTSIDE the stream (Spark SQL over the emitted bin vectors).
 PSI_SPLIT_TS = "2024-01-15"
 PSI_OUT_SCHEMA = (
     "event_type string, n_ref long, n_cur long, "
     "ref_bins array<long>, cur_bins array<long>"
 )
-PSI_STATE_SCHEMA = "ref_bins array<long>, cur_bins array<long>"
-
-
-def psi_drift_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        ref, cur = list(state.get[0]), list(state.get[1])
-    else:
-        ref, cur = [0] * HIST_NBINS, [0] * HIST_NBINS
-    split = pd.Timestamp(PSI_SPLIT_TS)
-    for pdf in pdfs:
-        for v, ts in zip(pdf["value"], pdf["ts"]):
-            c = int(round(float(v) * 100))
-            b = min(c // HIST_BIN_W_C, HIST_NBINS - 1)
-            if ts < split:
-                ref[b] += 1
-            else:
-                cur[b] += 1
-    state.update((ref, cur))
-    yield pd.DataFrame(
-        [
-            {
-                "event_type": key[0],
-                "n_ref": sum(ref),
-                "n_cur": sum(cur),
-                "ref_bins": ref,
-                "cur_bins": cur,
-            }
-        ]
-    )
 
 
 def psi_drift_stream(events: DataFrame) -> DataFrame:
     """Streaming per-type reference/current histogram state for the PSI
     drift monitor (update mode: each micro-batch re-emits the key's bin
     vectors)."""
-    return events.groupBy("event_type").applyInPandasWithState(
-        psi_drift_fn,
-        outputStructType=PSI_OUT_SCHEMA,
-        stateStructType=PSI_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    from pyspark.sql import functions as F
+
+    is_ref = F.coalesce(
+        F.col("ts") < F.lit(PSI_SPLIT_TS).cast("timestamp"), F.lit(False)
+    )
+    return (
+        events.groupBy("event_type")
+        .agg(_bins(is_ref).alias("ref_bins"), _bins(~is_ref).alias("cur_bins"))
+        .select(
+            "event_type",
+            F.expr(_total("ref_bins")).alias("n_ref"),
+            F.expr(_total("cur_bins")).alias("n_cur"),
+            "ref_bins",
+            "cur_bins",
+        )
     )

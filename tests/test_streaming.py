@@ -166,6 +166,53 @@ def test_latest_state_is_a_native_aggregate(spark, tmp_path):
     ]
 
 
+@pytest.mark.parametrize(
+    "make, out_schema",
+    [
+        ("hist_quantile_stream", "HIST_OUT_SCHEMA"),
+        ("psi_drift_stream", "PSI_OUT_SCHEMA"),
+    ],
+)
+def test_histogram_sketches_are_native_aggregates(spark, sf_dir, make, out_schema):
+    """q439's and q457's bin counts are built-in streaming aggregates: the
+    engine's state store holds them, no Python state function is in the
+    physical plan, and the output keeps its declared columns."""
+    from pyspark.sql.types import StructType
+
+    from kinesis_customer_sample_spark.plans import plan_text
+    from kinesis_customer_sample_spark.streaming import stateful
+
+    ev = events_stream(spark, sf_dir).select("event_type", "ts", "value")
+    out = getattr(stateful, make)(ev)
+    text = plan_text(out)
+    assert "StateStoreSave" in text
+    assert "FlatMapGroupsInPandasWithState" not in text
+    want = StructType.fromDDL(getattr(stateful, out_schema))
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        (f.name, f.dataType.simpleString()) for f in want
+    ]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q233_contentops_streaming_e2e",
+        "q245_stream_session_timeout",
+        "q254_stream_chained_aggs",
+        "q324_stream_dedup_within_watermark",
+        "q339_stream_sprt_sequential",
+    ],
+)
+def test_memory_sink_builders_leave_no_scratch(spark, sf_dir, tmp_path, monkeypatch, name):
+    """Builders whose rows come back from the memory sink delete their
+    replay source directories once the stream has run."""
+    from kinesis_customer_sample_spark.registry import load_registry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert load_registry()[name].fn(spark, sf_dir).count() > 0
+    assert list(tmp_path.iterdir()) == []
+
+
 def test_stateful_publish_exact_equals_batch(spark):
     """Streaming exact publish detection (R11) == batch lag derivation.
     In-order delivery per key (the guide:13 per-shard contract) — publish
