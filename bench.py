@@ -416,7 +416,6 @@ def main() -> None:
         names, lambda name: round(timed_noop(spark, registry[name], sf_dir), 3)
     )
     errors.update((name, "KeyError: not in the registry") for name in unknown)
-    spark.catalog.clearCache()
 
     total = round(sum(timings.values()), 3)
     box["loadavg1_end"] = round(os.getloadavg()[0], 2)

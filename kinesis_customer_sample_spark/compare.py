@@ -33,6 +33,7 @@ import duckdb
 
 from kinesis_customer_sample_spark.catalog import TABLES
 from kinesis_customer_sample_spark.registry import Query
+from kinesis_customer_sample_spark.scope import query_scope
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -145,14 +146,15 @@ class CompareResult:
 
 
 def compare_query(spark, q: Query, sf_dir: str, con=None) -> CompareResult:
-    """Run q.fn on Spark and q.oracle on DuckDB; exact-compare canonical rows."""
+    """Run q.fn (one query scope) and q.oracle; exact-compare canonical rows."""
     if q.oracle is None:
         raise ValueError(f"{q.name} has no oracle SQL (rows-only query)")
     own_con = con is None
     if own_con:
         con = duckdb_connection(sf_dir)
     try:
-        spark_tbl = q.fn(spark, sf_dir).toArrow()
+        with query_scope(spark):
+            spark_tbl = q.fn(spark, sf_dir).toArrow()
         duck_tbl = con.execute(q.oracle).arrow()
     finally:
         if own_con:

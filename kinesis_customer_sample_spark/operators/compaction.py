@@ -21,6 +21,10 @@ rewrites a table directory into few large, key-sorted, ZSTD files:
   Crash-safety is handled instead: stale `.old`/staging leftovers from a
   crashed prior run are removed up front, and the staging dir is cleaned
   on write failure, so a crashed compaction never wedges the next one.
+
+The staging dir is made beside the table and renamed into it, so it is the
+table, not scratch. Leftovers beside the table are swept, so the table needs
+a parent of its own (q187: `<scope.scratch>/docs`), never the temp root.
 """
 
 from __future__ import annotations

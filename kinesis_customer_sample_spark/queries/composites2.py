@@ -21,8 +21,6 @@ by additions (queries/__init__.py ordering contract).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as WINDOW
 from pyspark.sql import functions as F
@@ -36,6 +34,7 @@ from kinesis_customer_sample_spark.functions import (
 )
 from kinesis_customer_sample_spark.queries import pipeline_ops  # noqa: F401  registers q90
 from kinesis_customer_sample_spark.registry import REGISTRY, query
+from kinesis_customer_sample_spark.scope import scratch
 
 _LATE_DAYS = 60
 
@@ -316,7 +315,7 @@ def orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     column-pruning machinery as parquet at scale. The oracle states the
     expected rows from the parquet source, so a hash match proves the ORC
     write→read round-trip is lossless."""
-    out = os.path.join("/tmp", "spark_graft_orc_roundtrip")
+    out = scratch("q105")
     table(spark, sf_dir, "region").select("r_regionkey", "r_name").write.mode(
         "overwrite"
     ).orc(out)

@@ -22,8 +22,6 @@ walk.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -33,6 +31,7 @@ from kinesis_customer_sample_spark.functions import duck_fixed_sum, fixed_sum
 from kinesis_customer_sample_spark.operators.zorder import zorder_key
 from kinesis_customer_sample_spark.queries.text_analysis import _DUCK_TOKS, _LEXICON
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import scratch
 
 _MKT_NATION = "NATION_18"
 _MKT_REGION = "EUROPE"
@@ -312,9 +311,6 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ZORDER_OUT = os.path.join("/tmp", "spark_graft_zorder")
-
-
 @query(
     "q110_zorder_clustering",
     oracle="""
@@ -347,8 +343,9 @@ def zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         .sortWithinPartitions("zkey")
         .drop("zkey")
     )
-    clustered.write.mode("overwrite").parquet(ZORDER_OUT)
-    return spark.read.parquet(ZORDER_OUT)
+    out = scratch("q110")
+    clustered.write.mode("overwrite").parquet(out)
+    return spark.read.parquet(out)
 
 
 @query(

@@ -543,17 +543,14 @@ def stream_update_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     posture: update mode ships per-batch deltas, not full state (complete
     mode re-emits everything — unusable on an unbounded key space); the
     upsert is newest-epoch-wins, so replays/retries are idempotent."""
+    import tempfile
+
     from pyspark.sql import types as T
 
-    from kinesis_customer_sample_spark.streaming.replay import (
-        run_scratch_dir,
-        scratch_checkpoint,
-    )
+    from kinesis_customer_sample_spark.scope import scratch
 
     ev = table(spark, sf_dir, "events").select("user_id", "value")
-    # per-run leaf under a stable fixture-keyed base: concurrent runs
-    # against the same fixture must not rmtree each other (r4 advice)
-    base = run_scratch_dir("q124", sf_dir)
+    base = scratch("q124")
     src_dir = os.path.join(base, "src")
     out_dir = os.path.join(base, "out")
     ev.repartition(4).write.parquet(src_dir)
@@ -573,7 +570,7 @@ def stream_update_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.withColumn("_epoch", F.lit(epoch_id)).write.mode("append").parquet(out_dir)
 
-    with scratch_checkpoint("q124") as ckpt:
+    with tempfile.TemporaryDirectory(prefix="ckpt_q124_") as ckpt:
         (
             agg.writeStream.outputMode("update")
             .foreachBatch(upsert)

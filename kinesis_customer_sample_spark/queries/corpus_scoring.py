@@ -22,8 +22,6 @@ No Python UDFs anywhere; everything is whole-stage-codegen'd SQL.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -39,11 +37,7 @@ from kinesis_customer_sample_spark.queries.text_analysis import (
     _docs_with_tokens,
 )
 from kinesis_customer_sample_spark.registry import query
-
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".scratch",
-)
+from kinesis_customer_sample_spark.scope import scratch
 
 # Laplace-smoothed unigram surprisal threshold: docs whose mean token
 # surprisal exceeds 3.41 nats read as unusual under the corpus's own
@@ -416,8 +410,7 @@ def partitioned_layout_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     test asserted) prove only `event_type=click` files are read, the
     100 TB version of "don't scan what you didn't ask for". Per-row cents
     flooring before the sum keeps the double aggregation order-free."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(_SCRATCH, sf_tag, "events_by_type")
+    path = scratch("q155")
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )

@@ -184,22 +184,17 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     against production tables. File-count and sortedness claims are
     asserted separately (tests/test_compaction.py). At 100 TB this runs
     per date-partition, each partition independently."""
-    import os
-
     from kinesis_customer_sample_spark.operators.compaction import compact_table
+    from kinesis_customer_sample_spark.scope import scratch
 
-    scratch = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        os.path.basename(os.path.normpath(sf_dir)),
-        "docs_compaction",
-    )
+    # the table gets its own parent: compaction stages and swaps beside it
+    path = f"{scratch('q187')}/docs"
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    docs.repartition(64).write.mode("overwrite").parquet(scratch)
-    compact_table(spark, scratch, sort_keys=["doc_id"], target_files=4)
-    return spark.read.parquet(scratch)
+    docs.repartition(64).write.mode("overwrite").parquet(path)
+    compact_table(spark, path, sort_keys=["doc_id"], target_files=4)
+    return spark.read.parquet(path)
 
 
 @query(

@@ -2,17 +2,17 @@
 sinks"): CSV and JSON-lines readers with explicit schemas, plus the batch
 parquet sink round-trip.
 
-Pattern: export a fixture table to the alternate format under the repo's
-scratch dir, read it back with an *explicit* StructType (schema inference on
+Pattern: export a fixture table to the alternate format in a directory the
+run's query scope owns (`scope.scratch`, deleted once the result has been
+consumed), read it back with an *explicit* StructType (schema inference on
 a production source is both slow — extra full pass — and unstable across
 runs; SURVEY.md §1.3), and aggregate. The oracle computes the same result
 straight from the canonical table, so the scan path itself is what's being
-verified. Writes stay inside the repo scratch dir (never the read-only
-testdata)."""
+verified. Nothing is written to the read-only testdata."""
 
 from __future__ import annotations
 
-import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -20,13 +20,7 @@ from pyspark.sql import types as T
 
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
-
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_SCRATCH, sf_tag, name)
+from kinesis_customer_sample_spark.scope import scratch
 
 
 _NATION_SCHEMA = T.StructType(
@@ -53,7 +47,7 @@ def csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema (no inference pass), aggregate. The oracle aggregates
     the canonical table directly, so a hash-match proves the CSV
     write/read path is lossless for these types."""
-    path = _scratch(sf_dir, "nation_csv")
+    path = scratch("q80")
     nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     nation.write.mode("overwrite").option("header", "true").csv(path)
     back = spark.read.schema(_NATION_SCHEMA).option("header", "true").csv(path)
@@ -77,7 +71,7 @@ def jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema. Mirrors the reference's decoded-payload shape (each line one
     JSON document, guide:56-58) minus the gzip/S3 envelope handled in
     sources/decode.py."""
-    path = _scratch(sf_dir, "region_jsonl")
+    path = scratch("q81")
     region = table(spark, sf_dir, "region")
     region.write.mode("overwrite").json(path)
     schema = T.StructType(
@@ -107,7 +101,7 @@ def parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     direct aggregation proves the sink round-trip preserves values, which
     is the invariant the streaming upsert sink (streaming/sinks.py) builds
     on."""
-    path = _scratch(sf_dir, "custagg_parquet")
+    path = scratch("q82")
     agg = (
         table(spark, sf_dir, "customer")
         .groupBy("c_mktsegment")
@@ -144,7 +138,7 @@ def csv_malformed_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     the recovery contract in closed form from the corruption rule (the
     q204 dead-letter pattern at the batch-source layer): hash-match
     proves PERMISSIVE recovery loses nothing and mislabels nothing."""
-    path = _scratch(sf_dir, "docs_badcsv")
+    path = scratch("q243")
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     lines = docs.select(
         F.concat_ws(
@@ -210,8 +204,7 @@ def federated_union_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     federated union is how type drift sneaks in. Each leg prunes and
     pushes down independently at scale."""
     base = table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    csv_path = _scratch(sf_dir, "nation_fed_csv")
-    jsonl_path = _scratch(sf_dir, "nation_fed_jsonl")
+    csv_path, jsonl_path = scratch("q252_csv"), scratch("q252_jsonl")
     base.write.mode("overwrite").option("header", "true").csv(csv_path)
     base.write.mode("overwrite").json(jsonl_path)
     csv_leg = spark.read.schema(_NATION_SCHEMA).option("header", "true").csv(csv_path)
@@ -357,41 +350,38 @@ def schema_drift_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan); the diff is a full outer join over column-count rows. The
     scratch write is fixture-sized here but the operator's cost at any
     scale is the two footer reads."""
-    import os as _os
-
-    from kinesis_customer_sample_spark.streaming.replay import run_scratch_dir
-
-    base = run_scratch_dir("q406", sf_dir)
     o = table(spark, sf_dir, "orders")
-    v1_path, v2_path = _os.path.join(base, "v1"), _os.path.join(base, "v2")
-    o.select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
-    ).limit(100).write.mode("overwrite").parquet(v1_path)
-    # bound the scratch fixture BEFORE the rank window: only the written
-    # FOOTER feeds the result (the diff reads schemas, never data), and a
-    # post-window limit would sort the whole table through one task for
-    # 100 unordered keeper rows (guide §2.2 — the global-window trap)
-    o.limit(100).select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("o_totalprice"),
-        "o_orderdate",
-        F.dense_rank()
-        .over(W.orderBy("o_orderpriority"))
-        .cast("int")
-        .alias("priority_rank"),
-    ).write.mode("overwrite").parquet(v2_path)
+    # the result holds the footers' schemas, not the files: they go on return
+    with tempfile.TemporaryDirectory(prefix="kcss_q406_") as base:
+        v1_path, v2_path = f"{base}/v1", f"{base}/v2"
+        o.select(
+            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
+        ).limit(100).write.mode("overwrite").parquet(v1_path)
+        # bound the scratch fixture BEFORE the rank window: only the written
+        # FOOTER feeds the result (the diff reads schemas, never data), and a
+        # post-window limit would sort the whole table through one task for
+        # 100 unordered keeper rows (guide §2.2 — the global-window trap)
+        o.limit(100).select(
+            "o_orderkey",
+            "o_custkey",
+            "o_orderstatus",
+            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("o_totalprice"),
+            "o_orderdate",
+            F.dense_rank()
+            .over(W.orderBy("o_orderpriority"))
+            .cast("int")
+            .alias("priority_rank"),
+        ).write.mode("overwrite").parquet(v2_path)
 
-    def schema_df(path: str, tag: str) -> DataFrame:
-        fields = [
-            (f.name, f.dataType.simpleString())
-            for f in spark.read.parquet(path).schema.fields
-        ]
-        return spark.createDataFrame(fields, f"col string, {tag} string")
+        def schema_df(path: str, tag: str) -> DataFrame:
+            fields = [
+                (f.name, f.dataType.simpleString())
+                for f in spark.read.parquet(path).schema.fields
+            ]
+            return spark.createDataFrame(fields, f"col string, {tag} string")
 
-    a = schema_df(v1_path, "v1_type")
-    b = schema_df(v2_path, "v2_type")
+        a = schema_df(v1_path, "v1_type")
+        b = schema_df(v2_path, "v2_type")
     return (
         a.withColumnRenamed("col", "col_a")
         .join(

@@ -35,6 +35,7 @@ the checkpoint guarantees each shard is gated exactly once.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,11 +52,8 @@ from kinesis_customer_sample_spark.queries.dedup import (
 )
 from kinesis_customer_sample_spark.queries.text_analysis import _DUCK_TOKS, _SPARK_TOKS
 from kinesis_customer_sample_spark.registry import query
-from kinesis_customer_sample_spark.streaming.replay import (
-    run_scratch_dir,
-    scratch_checkpoint,
-    write_ordered_shards,
-)
+from kinesis_customer_sample_spark.scope import scratch
+from kinesis_customer_sample_spark.streaming.replay import write_ordered_shards
 
 _N_SHARDS = 4
 
@@ -132,7 +130,7 @@ def stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index. Emits one verdict row per document. The oracle computes
     global first-wins-by-(shard, doc_id) in closed form — hash equality
     proves the 4-batch incremental index reproduces the batch answer."""
-    base = run_scratch_dir("q303", sf_dir)
+    base = scratch("q303")
     src_dir = os.path.join(base, "src")
     idx_dir = os.path.join(base, "index")
     out_dir = os.path.join(base, "out")
@@ -194,7 +192,7 @@ def stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    with scratch_checkpoint("q303") as ckpt:
+    with tempfile.TemporaryDirectory(prefix="ckpt_q303_") as ckpt:
         (
             sdf.writeStream.foreachBatch(gate)
             .option("checkpointLocation", ckpt)

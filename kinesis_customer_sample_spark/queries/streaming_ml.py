@@ -31,17 +31,14 @@ driver-held for the bounded 4-batch replay, as q149 does per iteration.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
-from kinesis_customer_sample_spark.streaming.replay import (
-    run_scratch_dir,
-    scratch_checkpoint,
-    write_ordered_shards,
-)
+from kinesis_customer_sample_spark.streaming.replay import write_ordered_shards
 
 _K = 8
 _DIM = 64
@@ -158,13 +155,7 @@ def stream_minibatch_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the batch replay — the strongest stream/batch-equivalence claim an
     incremental ML operator can make. Emits each centroid's final visit
     count and integer micro-unit signature."""
-    base = run_scratch_dir("q305", sf_dir)
-    src_dir = os.path.join(base, "src")
-    os.makedirs(src_dir)
-
     emb = table(spark, sf_dir, "embeddings")
-    write_ordered_shards(emb, src_dir, _N_SHARDS, "vec_id")
-
     seeds = {
         int(r["vec_id"]): list(r["vi"])
         for r in emb.filter(F.col("vec_id") < _K)
@@ -209,15 +200,18 @@ def stream_minibatch_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         # collected rows — atomic for retry purposes once collect returns.
         folded.add(epoch_id)
 
-    sdf = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    with scratch_checkpoint("q305") as ckpt:
+    # the rows come from the driver-held state, not from these files
+    with tempfile.TemporaryDirectory(prefix="kcss_q305_") as base:
+        src_dir = os.path.join(base, "src")
+        write_ordered_shards(emb, src_dir, _N_SHARDS, "vec_id")
+        sdf = (
+            spark.readStream.schema(emb.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
+        )
         (
             sdf.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
             .trigger(availableNow=True)
             .start()
             .awaitTermination()

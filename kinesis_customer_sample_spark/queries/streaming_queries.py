@@ -1027,25 +1027,16 @@ def stream_split_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle tags each event with its route in batch — equality proves
     no record was lost, duplicated, or mis-routed through the split."""
     import os
-    import shutil
-    import tempfile
 
+    from kinesis_customer_sample_spark.scope import scratch
     from kinesis_customer_sample_spark.streaming.replay import events_stream
     from kinesis_customer_sample_spark.streaming.sinks import (
         foreach_batch_split_router,
         read_routed,
     )
 
-    # Stable scratch path: Python's str hash is salted per process, so
-    # hash(sf_dir) would mint a fresh /tmp dir every run and leak the old
-    # ones (each run cleans only its own path). md5 is run-stable, so reruns
-    # reuse — and first rmtree — the same directory (q268's zone-map layout
-    # uses the same convention).
-    import hashlib
-
-    sf_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"kcss_router_{sf_tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    # the routed epochs are read lazily: they live in the run's query scope
+    base = scratch("q285")
     ckpt = os.path.join(base, "_ckpt")
     ev = events_stream(spark, sf_dir)
     q = (

@@ -20,18 +20,14 @@ warehouse cheap to MAINTAIN —
 from __future__ import annotations
 
 import os
-import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
-
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".scratch",
-)
+from kinesis_customer_sample_spark.scope import drop_at_exit, scratch
 
 # incremental-merge cut: orders strictly before the cut are the "already
 # aggregated" base, the rest are the incoming delta
@@ -149,8 +145,7 @@ def schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     old petabytes are never rewritten for a column add. The version
     partition directory becomes a column, so version-aware queries
     partition-prune."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(_SCRATCH, sf_tag, "nation_evo")
+    root = scratch("q162")
     n = table(spark, sf_dir, "nation")
     n.select("n_nationkey", "n_name").write.mode("overwrite").parquet(
         os.path.join(root, "v=v1")
@@ -187,17 +182,15 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture scale Catalyst may legitimately pick broadcast instead — also
     shuffle-free; at 100 TB neither fact side broadcasts and the bucketed
     sort-merge path is the only shuffle-free plan)."""
-    # External tables with explicit .scratch locations: the warehouse dir
-    # is a STATIC conf owned by whoever built the session (the driver's
-    # harness may run from any CWD), and stale table dirs/catalog entries
-    # survive across sessions — so pin the path and clear both sides
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    paths = {
-        t: os.path.join(_SCRATCH, sf_tag, t) for t in ("q163_orders", "q163_lineitem")
-    }
-    for t, p in paths.items():
+    # External tables at scratch locations: the warehouse dir is a STATIC
+    # conf owned by whoever built the session (the driver's harness may run
+    # from any CWD). The query scope drops the entries with the files; a
+    # direct call outside one replaces the previous call's entries.
+    base = scratch("q163")
+    paths = {t: os.path.join(base, t) for t in ("q163_orders", "q163_lineitem")}
+    for t in paths:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(p, ignore_errors=True)
+        drop_at_exit(t)
     table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     ).write.option("path", paths["q163_orders"]).bucketBy(8, "o_orderkey").sortBy(
@@ -672,6 +665,8 @@ def cdc_net_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ZM_FILES = 16
 _ZM_LO, _ZM_HI = "1995-06-01", "1995-08-31"
+# the manifest rows whose file the predicate can touch
+_ZM_OVERLAP = f"mx >= DATE '{_ZM_LO}' AND mn <= DATE '{_ZM_HI}'"
 
 
 @query(
@@ -701,26 +696,9 @@ def zonemap_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops from 16 files to the ~4 covering the date range
     (tests/test_round3_ops asserts real skipping). The oracle proves the
     pruned scan is lossless for the predicate."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(_SCRATCH, sf_tag, "q268_zonemap")
-    shutil.rmtree(root, ignore_errors=True)
-    li = table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_shipdate",
-        F.expr("CAST(floor(l_extendedprice * 100) AS BIGINT)").alias("price_cents"),
-    )
-    li.repartitionByRange(_ZM_FILES, "l_shipdate").write.mode("overwrite").parquet(root)
-    manifest = (
-        spark.read.parquet(root)
-        .groupBy(F.col("_metadata.file_path").alias("file"))
-        .agg(F.min("l_shipdate").alias("mn"), F.max("l_shipdate").alias("mx"))
-    )
-    keep = [
-        r.file
-        for r in manifest.filter(
-            (F.col("mx") >= F.lit(_ZM_LO)) & (F.col("mn") <= F.lit(_ZM_HI))
-        ).collect()
-    ]
+    root = scratch("q268")
+    manifest = _zonemap_manifest(spark, sf_dir, root)
+    keep = [r.file for r in manifest.filter(_ZM_OVERLAP).collect()]
     pruned = spark.read.parquet(*keep) if keep else spark.read.parquet(root)
     return (
         pruned.filter(F.col("l_shipdate").between(_ZM_LO, _ZM_HI))
@@ -732,20 +710,28 @@ def zonemap_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def zonemap_pruned_file_count(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
-    """Test hook: (surviving, total) file counts for q268's predicate."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(_SCRATCH, sf_tag, "q268_zonemap")
-    manifest = (
+def _zonemap_manifest(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+    """Write q268's range-partitioned layout under `root`; return its per-file
+    min/max shipdate manifest."""
+    li = table(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        "l_shipdate",
+        F.expr("CAST(floor(l_extendedprice * 100) AS BIGINT)").alias("price_cents"),
+    )
+    li.repartitionByRange(_ZM_FILES, "l_shipdate").write.mode("overwrite").parquet(root)
+    return (
         spark.read.parquet(root)
         .groupBy(F.col("_metadata.file_path").alias("file"))
         .agg(F.min("l_shipdate").alias("mn"), F.max("l_shipdate").alias("mx"))
     )
-    total = manifest.count()
-    keep = manifest.filter(
-        (F.col("mx") >= F.lit(_ZM_LO)) & (F.col("mn") <= F.lit(_ZM_HI))
-    ).count()
-    return keep, total
+
+
+def zonemap_pruned_file_count(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
+    """Test hook: (surviving, total) file counts for q268's predicate, over
+    a layout written the way q268 writes its own."""
+    with tempfile.TemporaryDirectory() as root:
+        manifest = _zonemap_manifest(spark, sf_dir, root)
+        return manifest.filter(_ZM_OVERLAP).count(), manifest.count()
 
 
 _LPM_MOD = 4294967296  # 2^32 — synthetic IPv4 space
@@ -887,13 +873,10 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     thousands of rows for petabyte tables), read driver-side exactly as
     real table formats do; file pruning happens before any data I/O, so
     a selective predicate touches O(matching files), and appends never
-    rewrite old files. Scratch is per-run (run_scratch_dir, r4-advice
-    convention)."""
+    rewrite old files. The table lives in the run's query scope (`scratch`)."""
     import json
 
-    from kinesis_customer_sample_spark.streaming.replay import run_scratch_dir
-
-    base = run_scratch_dir("q318", sf_dir)
+    base = scratch("q318")
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     ).withColumn("bucket", (F.col("o_orderkey") % 4).cast("int"))
@@ -1156,10 +1139,8 @@ def positional_delete_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstones during its own scan with zero shuffle; here the equi-join
     on the composite key is the engine-level equivalent, with the
     delete side orders-of-magnitude smaller (1/{_PD_DEL_MOD} of rows)
-    and broadcastable. Writes per-run scratch (run_scratch_dir)."""
-    from kinesis_customer_sample_spark.streaming.replay import run_scratch_dir
-
-    base_dir = run_scratch_dir("q344", sf_dir)
+    and broadcastable. The files live in the run's query scope (`scratch`)."""
+    base_dir = scratch("q344")
     o = (
         table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
@@ -1429,10 +1410,8 @@ def dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale posture (100 TB): partition count = months (bounded metadata);
     the dim is month-grain (broadcast); pruning happens before file
-    listing I/O. Scratch layout is written per run (run_scratch_dir)."""
-    from kinesis_customer_sample_spark.streaming.replay import run_scratch_dir
-
-    base = run_scratch_dir("q357", sf_dir)
+    listing I/O. The layout lives in the run's query scope (`scratch`)."""
+    base = scratch("q357")
     li = table(spark, sf_dir, "lineitem").select(
         F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"),
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),

@@ -3,8 +3,8 @@
 `bench.py`, `scripts/profile_queries.py`, `scripts/check_parity.py` and
 `scripts/check_partition_invariance.py` all select queries with `select`,
 isolate per-query failures with `sweep`, and execute through `timed_noop` or
-`canonical_rows`. Every execution clears the cache first and rebuilds the
-query's plan, so each run computes from source: no run is helped by an
+`canonical_rows`. Every execution is one `scope.query_scope` that rebuilds
+the plan, so each run computes from source: no run is helped by an
 intermediate that an earlier run or an earlier query materialised.
 """
 
@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.compare import _arrow_rows
 from kinesis_customer_sample_spark.registry import Query
+from kinesis_customer_sample_spark.scope import query_scope
 
 
 def select(
@@ -79,10 +80,10 @@ def warm_up(spark: SparkSession, q: Query, sf_dir: str) -> None:
         .mapInPandas(lambda it: it, "id long")
     )
     try:
-        _noop(q.fn(spark, sf_dir))
+        with query_scope(spark):
+            _noop(q.fn(spark, sf_dir))
     except Exception:  # noqa: BLE001 — warm-up must never kill the caller
         pass
-    spark.catalog.clearCache()
 
 
 def timed_noop(spark: SparkSession, q: Query, sf_dir: str, runs: int = 3) -> float:
@@ -90,18 +91,19 @@ def timed_noop(spark: SparkSession, q: Query, sf_dir: str, runs: int = 3) -> flo
     sink.
 
     The min measures the plan, not the multi-second GC / JIT stalls that
-    land on arbitrary queries in a long JVM. Before each run the cache is
-    cleared and the plan rebuilt: a `.persist()`ed intermediate would
+    land on arbitrary queries in a long JVM. Each run rebuilds the plan in
+    its own query scope, whose untimed release drops what it persisted or
+    checkpointed: a `.persist()`ed intermediate would
     otherwise be substituted into the plan-identical next run and make the
     min a cache-assisted number, and would leak executor memory across a
     suite. `t0` is taken before the builder runs, so work a builder does
     eagerly (an eager `localCheckpoint`) is billed to the query."""
     best = float("inf")
     for _ in range(runs):
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        _noop(q.fn(spark, sf_dir))
-        best = min(best, time.perf_counter() - t0)
+        with query_scope(spark):
+            t0 = time.perf_counter()
+            _noop(q.fn(spark, sf_dir))
+            best = min(best, time.perf_counter() - t0)
     return best
 
 
@@ -110,5 +112,6 @@ def canonical_rows(
 ) -> tuple[list[str], list[tuple]]:
     """`q`'s result as (sorted column names, sorted canonical row tuples),
     computed from source — the exact comparator of `compare.py`."""
-    spark.catalog.clearCache()
-    return _arrow_rows(q.fn(spark, sf_dir).toArrow())
+    with query_scope(spark):
+        tbl = q.fn(spark, sf_dir).toArrow()
+    return _arrow_rows(tbl)

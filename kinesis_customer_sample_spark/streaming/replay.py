@@ -13,49 +13,28 @@ import os
 import shutil
 import tempfile
 import uuid
-from collections.abc import Iterator
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kinesis_customer_sample_spark.scope import drop_at_exit, shared_scratch
 from kinesis_customer_sample_spark.session import ensure_engine_conf
+
 
 def _stream_dir(sf_dir: str, name: str) -> str:
     """File-stream sources need a directory; expose `<sf_dir>/<name>.parquet`
-    (a single file) through a symlinked temp directory. The dir tag is a
-    stable md5 of the path (NOT python hash(), which is salted per
-    process and would leak one fresh /tmp dir per run — the q285 advice
-    fix applied here too)."""
+    (a single file) through a symlink in a scope-owned directory. Within one
+    query scope the same table gets the same directory, so a stream
+    restarted from its checkpoint sees the same source path."""
     import hashlib
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    td = os.path.join(tempfile.gettempdir(), f"kcss_stream_{name}_{tag}")
-    os.makedirs(td, exist_ok=True)
+    td = shared_scratch(f"stream_{name}_{tag}")
     link = os.path.join(td, f"{name}.parquet")
     if not os.path.exists(link):
-        try:
-            os.symlink(os.path.abspath(f"{sf_dir}/{name}.parquet"), link)
-        except FileExistsError:
-            pass  # concurrent run won the race — same target, share it
+        os.symlink(os.path.abspath(f"{sf_dir}/{name}.parquet"), link)
     return td
-
-
-def run_scratch_dir(name: str, sf_dir: str) -> str:
-    """Per-run scratch directory under a stable fixture-keyed base:
-    `<tmp>/kcss_<name>_<md5(sf_dir)[:8]>/run_*`. The stable outer tag keeps
-    /tmp from leaking one fresh base per process (the q285 salted-hash()
-    advice fix), while the mkdtemp leaf isolates concurrent runs against
-    the same fixture — the r4 advice flagged that q303/q305 rmtree'd the
-    shared base on entry, destroying a concurrent run's in-progress
-    index/output."""
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    stable = os.path.join(tempfile.gettempdir(), f"kcss_{name}_{tag}")
-    os.makedirs(stable, exist_ok=True)
-    return tempfile.mkdtemp(prefix="run_", dir=stable)
 
 
 def _file_stream(
@@ -95,26 +74,15 @@ def documents_stream(
     return _file_stream(spark, sf_dir, "documents", max_files_per_trigger)
 
 
-@contextmanager
-def scratch_checkpoint(name: str) -> Iterator[str]:
-    """A fresh checkpoint directory for one streaming query, deleted when
-    the block exits — also when the query fails. Only for queries that
-    terminate inside the block and whose rows are read from a sink (the
-    memory sink or an output directory), never from the checkpoint."""
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    try:
-        yield ckpt
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def run_to_completion(
     sdf: DataFrame, output_mode: str = "complete", name: str | None = None
 ) -> DataFrame:
     """Execute a streaming DataFrame to exhaustion (availableNow) via a
-    memory sink; return the final result as a batch DataFrame."""
+    memory sink; return the final result as a batch DataFrame, valid until
+    the query scope drops the sink's view."""
     name = name or f"stream_{uuid.uuid4().hex[:12]}"
-    with scratch_checkpoint(name) as ckpt:
+    drop_at_exit(name)
+    with tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_") as ckpt:
         (
             sdf.writeStream.format("memory")
             .queryName(name)
@@ -135,7 +103,8 @@ def run_until_caught_up(
     processAllAvailable() (blocks until the source reports no new
     offsets), stop, and return the sink table."""
     name = name or f"stream_{uuid.uuid4().hex[:12]}"
-    with scratch_checkpoint(name) as ckpt:
+    drop_at_exit(name)
+    with tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_") as ckpt:
         q = (
             sdf.writeStream.format("memory")
             .queryName(name)

@@ -15,6 +15,7 @@ if REPO not in sys.path:
 from kinesis_customer_sample_spark.compare import compare_query, duckdb_connection  # noqa: E402
 from kinesis_customer_sample_spark.registry import load_registry  # noqa: E402
 from kinesis_customer_sample_spark.runner import select, sweep  # noqa: E402
+from kinesis_customer_sample_spark.scope import query_scope  # noqa: E402
 from kinesis_customer_sample_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
@@ -28,10 +29,10 @@ def main() -> int:
 
     def check(name: str) -> tuple[bool, float]:
         q = reg[name]
-        spark.catalog.clearCache()
         t0 = time.monotonic()
         if q.oracle is None:
-            n = q.fn(spark, SF_DIR).count()
+            with query_scope(spark):
+                n = q.fn(spark, SF_DIR).count()
             dt = time.monotonic() - t0
             print(f"CHECK [..] {name}: rows-only, {n} rows ({dt:.2f}s)", flush=True)
             return True, dt

@@ -25,6 +25,7 @@ if REPO not in sys.path:
 
 from kinesis_customer_sample_spark.registry import load_registry  # noqa: E402
 from kinesis_customer_sample_spark.runner import select, sweep, timed_noop, warm_up  # noqa: E402
+from kinesis_customer_sample_spark.scope import query_scope  # noqa: E402
 from kinesis_customer_sample_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -69,11 +70,11 @@ def main() -> int:
     sc = spark.sparkContext
 
     def profile(name: str) -> float:
-        spark.catalog.clearCache()  # the plan a timed run executes
-        df = reg[name].fn(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        with query_scope(spark):  # the plan a timed run executes
+            df = reg[name].fn(spark, SF_DIR)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
         sc.setJobDescription(f"profile:{name}")
         try:
             best = timed_noop(spark, reg[name], SF_DIR, RUNS)

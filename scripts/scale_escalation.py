@@ -19,7 +19,6 @@ Exit code is non-zero if any invariant fails.
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 import tempfile
 import time
@@ -125,8 +124,7 @@ def rollup_cascade(spark, n: int = 50_000_000, n_users: int = 500_000) -> bool:
 def stream_stream(spark, n: int = 20_000_000, n_users: int = 100_000) -> bool:
     """q111's stream-stream interval join replayed over time-ordered
     files: streamed pair count == batch self-join exactly."""
-    tmp = tempfile.mkdtemp()
-    try:
+    with tempfile.TemporaryDirectory() as tmp:
         src = os.path.join(tmp, "ss_events")
         ev = spark.range(n).select(
             (F.col("id") % n_users).alias("user_id"),
@@ -180,8 +178,6 @@ def stream_stream(spark, n: int = 20_000_000, n_users: int = 100_000) -> bool:
         )
         q.awaitTermination()
         return spark.read.parquet(out_dir).count() == expected
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def semantic_dedup(spark, n: int = 5_000_000) -> bool:

@@ -270,7 +270,7 @@ def test_streaming_dedup_within_watermark(spark, sf_dir):
     assert out.collect()[0].n == table(spark, sf_dir, "events").count()
 
 
-def test_watermark_drops_late_data(spark):
+def test_watermark_drops_late_data(spark, tmp_path):
     """A record older than (max seen ts - watermark) arriving in a later
     micro-batch is dropped from append-mode windowed aggregation
     (guide:104-106 ingestion lag → late-data policy)."""
@@ -307,7 +307,7 @@ def test_watermark_drops_late_data(spark):
         import uuid
 
         name = f"late_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp()
+        ckpt = str(tmp_path / "ckpt")
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -535,20 +535,19 @@ def test_dynamic_gap_session_stream_equals_batch(spark, sf_dir):
     assert got == want and len(want) > 0
 
 
-def test_stream_restarts_from_checkpoint_without_reprocessing(spark, sf_dir):
+def test_stream_restarts_from_checkpoint_without_reprocessing(spark, sf_dir, tmp_path):
     """Exactly-once across restarts: a windowless running aggregate is
     driven to completion on half the source files, the query STOPS, more
     files arrive, and a NEW query object resumes from the same checkpoint.
     The final result must equal the batch aggregate over everything, AND
     the restarted run's input-row metrics must show only the NEW files
     were read — state came from the checkpoint, not reprocessing."""
-    import shutil as _shutil
     import uuid
 
     from kinesis_customer_sample_spark.catalog import table
 
-    src = tempfile.mkdtemp(prefix="restart_src_")
-    ckpt = tempfile.mkdtemp(prefix="restart_ckpt_")
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
     name = f"restart_{uuid.uuid4().hex[:8]}"
     ev = (
         table(spark, sf_dir, "events")
@@ -601,8 +600,6 @@ def test_stream_restarts_from_checkpoint_without_reprocessing(spark, sf_dir):
     # the restarted run read ONLY the new files (checkpointed offsets held)
     reprocessed = sum(p["numInputRows"] for p in q2.recentProgress)
     assert reprocessed == n_b, (reprocessed, n_b)
-    _shutil.rmtree(src, ignore_errors=True)
-    _shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_session_timeout_stream_equals_batch(spark, sf_dir):
@@ -675,7 +672,7 @@ def test_session_timeout_stream_equals_batch(spark, sf_dir):
     assert (got_s["n_events"].values == batch_s["n_events"].values).all()
 
 
-def test_python_stream_sink_exactly_once(spark):
+def test_python_stream_sink_exactly_once(spark, tmp_path):
     """End-to-end connector pair: the custom Python streaming SOURCE
     (q248's offset-managed wire replay) feeds decode, and the custom
     Python streaming SINK persists the decoded operations through the
@@ -683,8 +680,6 @@ def test_python_stream_sink_exactly_once(spark):
     checkpoint must not duplicate rows (manifests make replayed batches
     idempotent), and the committed rows equal the batch decode of the
     same fixture exactly."""
-    import tempfile
-
     from kinesis_customer_sample_spark.fixtures import encode_records, kinesis_records_df
     from kinesis_customer_sample_spark.sources.decode import decode_records
     from kinesis_customer_sample_spark.sources.python_stream import (
@@ -699,8 +694,8 @@ def test_python_stream_sink_exactly_once(spark):
         except Exception:
             pass
     _, store = encode_records()
-    out_dir = tempfile.mkdtemp(prefix="kcss_sink_")
-    ckpt = tempfile.mkdtemp(prefix="kcss_sink_ckpt_")
+    out_dir = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "sink_ckpt")
 
     def run_once():
         stream = spark.readStream.format("kcss_wire_replay").load()
@@ -813,19 +808,16 @@ def test_space_saving_eviction_bounds_error():
     assert got2[1] == 12
 
 
-def test_split_router_retry_is_idempotent(spark):
+def test_split_router_retry_is_idempotent(spark, tmp_path):
     """Replaying an epoch through the split router (Structured Streaming's
     at-least-once foreachBatch contract) must not duplicate records in
     either sink: the manifest is the commit point for BOTH outputs."""
-    import shutil
-
     from kinesis_customer_sample_spark.streaming.sinks import (
         foreach_batch_split_router,
         read_routed,
     )
 
-    base = os.path.join(tempfile.gettempdir(), "kcss_router_retry_test")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "router")
     # empty-but-valid state: reader must return an empty frame, not raise
     assert read_routed(spark, base).count() == 0
     # row 10 has value=NULL: the predicate evaluates to NULL, which must land

@@ -7,6 +7,8 @@ assumed."""
 from __future__ import annotations
 
 import glob
+import os
+from urllib.parse import urlparse
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -49,12 +51,10 @@ def test_zorder_files_cover_small_bounding_boxes(spark, sf_dir):
     bounding box — read from the actual footer min/max stats — must cover
     a small fraction of the global key plane. That is the whole point of
     the layout: a predicate on either column can skip most files."""
-    from kinesis_customer_sample_spark.queries.composites3 import ZORDER_OUT
-
     q = load_registry()["q110_zorder_clustering"]
-    q.fn(spark, sf_dir).count()  # materialize the write
+    out = os.path.dirname(urlparse(q.fn(spark, sf_dir).inputFiles()[0]).path)
 
-    files = sorted(glob.glob(f"{ZORDER_OUT}/*.parquet"))
+    files = sorted(glob.glob(f"{out}/*.parquet"))
     assert len(files) >= 4  # repartitionByRange(8) minus possibly-empty ranges
 
     boxes = []
