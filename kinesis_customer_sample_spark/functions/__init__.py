@@ -61,7 +61,7 @@ def broadcast_if_bounded(df, n_rows: int, row_cap: int | None = None):
     overrides AQE's size checks and becomes a driver-OOM at 100 TB — the
     hint does NOT fall back to a shuffle join past broadcast reach
     (VERDICT r15 item 3). Callers pass the count they already have (or can
-    take cheaply from a persisted intermediate); the cap is rows, not
+    take cheaply from a materialized intermediate); the cap is rows, not
     bytes, sized for narrow two-column keys (~16 B data, ~50 B built):
     the default 2M rows is ~100 MB of hash relation, comfortably inside
     executor memory here and parameterised for production via

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
 from kinesis_customer_sample_spark.queries.text_analysis import _DUCK_TOKS
+from kinesis_customer_sample_spark.scope import materialize
 
 
 @query(
@@ -237,14 +238,14 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("y"), 1).otherwise(0)).alias("pos"),
     )
-    idx = lv.withColumn(
-        "i", F.row_number().over(W.orderBy("p_milli"))
-    ).localCheckpoint()  # bounded level table, reused by three joins
+    idx = materialize(  # bounded level table, reused by three joins
+        lv.withColumn("i", F.row_number().over(W.orderBy("p_milli")))
+    )
     a, b = idx.alias("a"), idx.alias("b")
     # every join below pairs the bounded level table with itself — hint
     # broadcast explicitly, or the non-equi joins fall back to a
     # shuffle CartesianProduct (measured: a 1089-task stage for 9 rows)
-    pre = (
+    pre = materialize(
         a.join(F.broadcast(b), F.col("b.i") <= F.col("a.i"))
         .groupBy(F.col("a.i").alias("i"))
         .agg(F.sum("b.n").alias("pn"), F.sum("b.pos").alias("pk"))
@@ -252,7 +253,7 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             idx.sparkSession.createDataFrame([(0, 0, 0)], "i int, pn bigint, pk bigint")
         )
     )
-    lo, hi = pre.localCheckpoint().alias("lo"), pre.localCheckpoint().alias("hi")
+    lo, hi = pre.alias("lo"), pre.alias("hi")
     pairs = lo.join(F.broadcast(hi), F.col("hi.i") > F.col("lo.i")).select(
         (F.col("lo.i") + 1).alias("j"),
         F.col("hi.i").alias("k"),

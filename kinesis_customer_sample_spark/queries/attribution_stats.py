@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 _LOOKBACK_DAYS = 7
 
@@ -783,11 +784,11 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "src", "dst", F.expr("cn div tot").cast("bigint").alias("p")
     )
-    # localCheckpoint truncates the event-window lineage: scen/sedge/eff
+    # the barrier truncates the event-window lineage: scen/sedge/eff
     # each re-reference this grid several times, and without the barrier
     # every reference re-runs the whole path-extraction chain (measured
     # 89 s → ~3 s at sf0.01). ~|channels|² rows — driver-scale.
-    tprob = tprob.localCheckpoint()
+    tprob = materialize(tprob)
     channels = (
         tprob.filter(F.col("src") != "START").select(F.col("src").alias("ch")).distinct()
     )
@@ -804,7 +805,7 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("dst"),
         "p",
     )
-    sedge = (
+    sedge = materialize(
         sedge0.groupBy("scenario", "src", "dst")
         .agg(F.sum("p").cast("bigint").alias("p"))
         .unionByName(
@@ -815,7 +816,6 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(_MK_PPM).cast("bigint").alias("p"),
             )
         )
-        .persist()
     )
     state = scen.select(
         "scenario", F.lit("START").alias("node"), F.lit(_MK_PPM).cast("bigint").alias("mass")
@@ -847,7 +847,7 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "scenario", F.coalesce(F.col("mass"), F.lit(0)).cast("bigint").alias("conv_ppm")
         )
     )
-    eff = (
+    eff = materialize(
         channels.join(
             conv.filter(F.col("scenario") == "FULL").select(
                 F.col("conv_ppm").alias("conv_full_ppm")
@@ -867,7 +867,6 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("removal_ppm"),
         )
-        .localCheckpoint()
     )
     totre = F.broadcast(eff.agg(F.sum("removal_ppm").alias("tot_re")))
     return (

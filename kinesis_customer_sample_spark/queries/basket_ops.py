@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 _MIN_BOTH = 2  # min-support: pair must co-occur in ≥2 baskets
 _TOPK = 50
@@ -72,11 +73,10 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags genuinely associated parts; the two confidences give the rule
     directions. Ordering is (lift, n_both, pair) — identical doubles both
     engines because every ratio divides the same exact integers."""
-    items = (
+    items = materialize(  # one distinct pass feeds count, supports, pairs
         table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("bid"), F.col("l_partkey").alias("item"))
         .distinct()
-        .localCheckpoint()  # one distinct pass feeds count, supports, pairs
     )
     n_baskets = items.select("bid").distinct().count()  # broadcast scalar
     isup = items.groupBy("item").agg(F.count("*").alias("n_item"))
@@ -171,7 +171,7 @@ def item_item_jaccard_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding half."""
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    baskets = (
+    baskets = materialize(  # feeds the popularity count and both pair sides
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
         .distinct()
@@ -181,7 +181,7 @@ def item_item_jaccard_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") <= _CF_POP_CAP)
     )
-    kept = baskets.join(pop.select("i"), "i").persist()
+    kept = baskets.join(pop.select("i"), "i")
     a = kept.select(F.col("u"), F.col("i").alias("i1"))
     b = kept.select(F.col("u"), F.col("i").alias("i2"))
     co = (

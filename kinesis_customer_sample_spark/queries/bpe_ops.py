@@ -13,7 +13,7 @@ Per round: one pair hash-agg (map-side combined, weighted by word freq),
 one argmax via TakeOrderedAndProject (a 2-string collect — the same
 driver-coordinated scalar seed as q120's BFS root), and one map-only
 fold that rewrites each word's symbol array greedily left-to-right
-(non-overlapping, the BPE contract). The vocabulary is localCheckpointed
+(non-overlapping, the BPE contract). The vocabulary is materialized
 between rounds to cut lineage, like every iterative operator here
 (q90/q120/q149/q159). Rounds are O(K) driver round-trips by nature —
 that IS the published algorithm's structure.
@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.queries.text_analysis import _DUCK_TOKS, _SPARK_TOKS
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 _ROUNDS = 3
 
@@ -122,12 +123,11 @@ def bpe_merge_learning(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    words = (
+    words = materialize(
         docs.select(F.explode(F.expr(_SPARK_TOKS)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .withColumn("syms", F.split("word", ""))
-        .localCheckpoint()
     )
     merges: list[tuple[int, str, str, str, int]] = []
     for rnd in range(1, _ROUNDS + 1):
@@ -141,9 +141,9 @@ def bpe_merge_learning(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()[0]
         )
         merges.append((rnd, top["l"], top["r"], top["l"] + top["r"], int(top["pair_freq"])))
-        words = words.withColumn(
-            "syms", F.expr(_spark_merge_expr(top["l"], top["r"]))
-        ).localCheckpoint()
+        words = materialize(
+            words.withColumn("syms", F.expr(_spark_merge_expr(top["l"], top["r"])))
+        )
     return spark.createDataFrame(
         merges, "round int, left_sym string, right_sym string, merged string, pair_freq bigint"
     )
@@ -181,12 +181,11 @@ def bpe_apply_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    words = (
+    words = materialize(
         docs.select(F.explode(F.expr(_SPARK_TOKS)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .withColumn("syms", F.split("word", ""))
-        .localCheckpoint()
     )
     for _ in range(_ROUNDS):
         top = (
@@ -198,9 +197,9 @@ def bpe_apply_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(1)
             .collect()[0]
         )
-        words = words.withColumn(
-            "syms", F.expr(_spark_merge_expr(top["l"], top["r"]))
-        ).localCheckpoint()
+        words = materialize(
+            words.withColumn("syms", F.expr(_spark_merge_expr(top["l"], top["r"])))
+        )
     saved = F.sum(F.col("freq") * F.length("word")) - F.sum(
         F.col("freq") * F.size("syms")
     )

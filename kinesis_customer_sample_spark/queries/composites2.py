@@ -34,7 +34,7 @@ from kinesis_customer_sample_spark.functions import (
 )
 from kinesis_customer_sample_spark.queries import pipeline_ops  # noqa: F401  registers q90
 from kinesis_customer_sample_spark.registry import REGISTRY, query
-from kinesis_customer_sample_spark.scope import scratch
+from kinesis_customer_sample_spark.scope import materialize, scratch
 
 _LATE_DAYS = 60
 
@@ -270,13 +270,12 @@ def dedup_clusters_altstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     star contraction — must all agree on the component structure."""
     from kinesis_customer_sample_spark.queries.dedup import ngram_jaccard_pairs
 
-    edges = (
+    edges = materialize(
         ngram_jaccard_pairs(spark, sf_dir)
         .select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))  # a > b
-        .localCheckpoint()
     )
     while True:
-        nxt = _small_star(_large_star(edges)).localCheckpoint()
+        nxt = materialize(_small_star(_large_star(edges)))
         # exact convergence, one job per round: symmetric multiset difference
         changed = (
             nxt.exceptAll(edges).unionAll(edges.exceptAll(nxt)).count()

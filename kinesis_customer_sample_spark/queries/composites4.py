@@ -53,6 +53,7 @@ from kinesis_customer_sample_spark.functions import duck_fixed_sum, fixed_sum
 from kinesis_customer_sample_spark.functions.porthash import cosine_expr
 from kinesis_customer_sample_spark.queries.graph_quality_ops import _EDGES_SQL
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 
 @query(
@@ -229,7 +230,7 @@ def copurchase_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the smallest part key, capped at 3 hops. The frontier-join loop is
     the Pregel/GraphFrames BFS shape: each round joins the current
     frontier against the edge list, anti-joins out already-visited nodes,
-    and localCheckpoints to cut lineage — O(diameter) rounds, each a
+    and materializes to cut lineage — O(diameter) rounds, each a
     shuffle on node id, state = visited set (node, dist), never
     all-paths. The recursive-CTE oracle enumerates every ≤3-hop walk and
     takes min(dist), which equals BFS's first-visit distance — the
@@ -242,9 +243,9 @@ def copurchase_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = _copurchase_edges(spark, sf_dir).select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     )
-    bidir = und.unionAll(
-        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()  # materialize once; reused every round
+    bidir = materialize(  # reused every round
+        und.unionAll(und.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    )
     # scalar seed, one light job
     root = table(spark, sf_dir, "lineitem").agg(F.min("l_partkey")).collect()[0][0]
     visited = spark.createDataFrame(
@@ -252,13 +253,12 @@ def copurchase_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     frontier = visited
     for k in range(1, _BFS_MAX_HOPS + 1):
-        frontier = (
+        frontier = materialize(
             frontier.join(bidir, frontier["part_key"] == bidir["src"])
             .select(F.col("dst").alias("part_key"))
             .distinct()
             .join(visited, "part_key", "left_anti")
             .withColumn("hops", F.lit(k))
-            .localCheckpoint()
         )
         if not frontier.take(1):
             break
@@ -1382,7 +1382,7 @@ def pagerank_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     with truncating division so both engines walk identical integer
     sequences — no float mass accounting to drift. Each round is one
     shuffle keyed on node id (contribution sum) plus a broadcast-scale
-    left join back to the node table; the edge list is localCheckpointed
+    left join back to the node table; the edge list is materialized
     once and reused, the Pregel message-passing shape. The undirected
     graph has no dangling nodes by construction (every node has degree
     ≥ 1), so no redistribution term is needed."""
@@ -1393,11 +1393,11 @@ def pagerank_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = _copurchase_edges(spark, sf_dir).select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     )
-    edges = und.unionAll(
-        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    edges = materialize(
+        und.unionAll(und.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = deg.select(F.col("src").alias("node"), "deg").localCheckpoint()
+    nodes = materialize(deg.select(F.col("src").alias("node"), "deg"))
     ranks = nodes.withColumn("r", F.lit(_PR_INIT_MU).cast("long"))
     for _ in range(_PR_ITERS):
         contrib = (
@@ -1443,7 +1443,7 @@ def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     as q120's first two BFS rounds but expressed as ONE declarative
     query — no driver loop. Two scale caveats, both encoded here:
     (1) Spark re-derives non-materialized CTE subtrees at every recursion
-    level, so the edge list is computed once, localCheckpointed, and
+    level, so the edge list is computed once, materialized, and
     registered as a view (the working-relation materialization DuckDB
     does implicitly); (2) a recursive CTE enumerates WALKS (no per-level
     dedup), so depth is bounded tightly — unbounded traversals belong to
@@ -1456,9 +1456,9 @@ def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = _copurchase_edges(spark, sf_dir).select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     )
-    edges = und.unionAll(
-        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    edges = materialize(
+        und.unionAll(und.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    )
     edges.createOrReplaceTempView("q168_edges")
     return spark.sql(
         """

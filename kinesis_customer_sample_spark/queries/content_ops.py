@@ -22,6 +22,7 @@ from kinesis_customer_sample_spark.fixtures import (
 )
 from kinesis_customer_sample_spark.registry import query
 from kinesis_customer_sample_spark.session import ensure_engine_conf
+from kinesis_customer_sample_spark.scope import materialize
 
 _CTE = f"WITH content_ops AS (SELECT * FROM {content_ops_values_sql()})"
 
@@ -405,7 +406,7 @@ def dead_letter_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     points."""
     from kinesis_customer_sample_spark.sources.decode import decode_records
 
-    records = (
+    records = materialize(  # encode once; inputs and decode share the batch
         _documents_wire(spark, sf_dir)
         .withColumn(
             "data",
@@ -414,7 +415,6 @@ def dead_letter_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.substring("data", 1, 5),
             ).otherwise(F.col("data")),
         )
-        .localCheckpoint()  # encode once; inputs and decode share the batch
     )
     decoded = decode_records(records).select("shard_id", "sequence_number")
     inputs = records.select("shard_id", "sequence_number")
@@ -471,7 +471,7 @@ def dead_letter_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_engine_conf(spark)
     # partial store: the expired pointer is missing (the q204 situation)
     records_df, partial_store = kinesis_records_df(spark)
-    records_df = records_df.localCheckpoint()  # one wire encode, both passes
+    records_df = materialize(records_df)  # one wire encode, both passes
     first_pass = decode_records(records_df, fetch=partial_store.__getitem__)
     # healed store: regenerate with nothing expired (re-signed URLs)
     healed_records, healed_store = encode_records(expire_every=10**9)

@@ -37,7 +37,7 @@ from kinesis_customer_sample_spark.queries.text_analysis import (
     _docs_with_tokens,
 )
 from kinesis_customer_sample_spark.registry import query
-from kinesis_customer_sample_spark.scope import scratch
+from kinesis_customer_sample_spark.scope import materialize, scratch
 
 # Laplace-smoothed unigram surprisal threshold: docs whose mean token
 # surprisal exceeds 3.41 nats read as unusual under the corpus's own
@@ -92,9 +92,8 @@ def unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     count table is vocabulary-sized (≪ corpus) and the probe-side join is
     a hash join whose build side has one row per token, so hot stopword
     keys cost probe time only. The 1-row totals are a broadcast."""
-    tok = _docs_with_tokens(spark, sf_dir).select(
-        "doc_id", F.explode("toks").alias("tok")
-    )
+    docs = materialize(_docs_with_tokens(spark, sf_dir).select("doc_id", "toks"))
+    tok = docs.select("doc_id", F.explode("toks").alias("tok"))
     counts = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     tot = F.broadcast(
         counts.agg(
@@ -276,19 +275,14 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into the aggregate; now only (bucket, min vec_id) partials cross the
     # exchange and the join-back scan prunes to ≤|buckets| rows before any
     # norm math (guide §2.3 — shuffle keys, not payloads). The bucketed
-    # corpus is EAGERLY localCheckpoint'd (the q385/q462/q464 race fix,
-    # r16): a lazy .persist() measured 8.6 vs 3.0 s in r15 because the
-    # broadcast subtree races the cache materialization, but the eager
-    # barrier computes the bucket+norm pass ONCE and both the rep-election
-    # broadcast and the probe read it (1.32/1.36 → 1.05/1.18 s paired at
-    # sf0.1); the rep embedding/norm now also come from the checkpoint
-    # instead of a second parquet scan.
-    e = (
+    # corpus is materialized: the bucket+norm pass runs ONCE and both the
+    # rep-election broadcast and the probe read it, and the rep
+    # embedding/norm come from it instead of a second parquet scan.
+    e = materialize(
         table(spark, sf_dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism)
         .withColumn("bucket", F.expr(_hyperplane_bucket("embedding", dialect="spark")))
         .withColumn("en", F.expr(norm_expr("embedding")))
-        .localCheckpoint()
     )
     rep_ids = e.groupBy("bucket").agg(F.min("vec_id").alias("rep_id"))
     reps = F.broadcast(
@@ -793,7 +787,8 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     are two hash-aggs; scoring joins probe vocabulary-/bigram-sized build
     sides. The same integer micro-unit flooring as q151 keeps the result
     engine-exact."""
-    t = _docs_with_tokens(spark, sf_dir).filter(F.expr("size(toks) >= 2"))
+    toks = materialize(_docs_with_tokens(spark, sf_dir).select("doc_id", "toks"))
+    t = toks.filter(F.expr("size(toks) >= 2"))
     bg = t.select(
         "doc_id",
         F.explode(
@@ -805,8 +800,7 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bc = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c12"))
     uc = (
-        _docs_with_tokens(spark, sf_dir)
-        .select(F.explode("toks").alias("tok"))
+        toks.select(F.explode("toks").alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c1"))
     )
@@ -900,18 +894,15 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"({_DSIR_HASH_SPARK}) % {_DSIR_B}").alias("feat"),
         )
     )
-    # localCheckpoint: feats (exactly 1024 rows) feeds tots AND the weight
+    # materialized: feats (exactly 1024 rows) feeds tots AND the weight
     # table inside one plan — without it the explode+hash pass re-runs per
-    # consumer (the q299 recompute class; modest here because the token
-    # arrays themselves are already persisted, but the plan stops scaling
-    # recomputes with corpus size)
-    feats = (
+    # consumer (the q299 recompute class)
+    feats = materialize(
         tok.groupBy("feat")
         .agg(
             F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("t_c"),
             F.count(F.lit(1)).alias("r_c"),
         )
-        .localCheckpoint()
     )
     tots = F.broadcast(
         feats.agg(F.sum("t_c").alias("t_tot"), F.sum("r_c").alias("r_tot"))
@@ -987,7 +978,7 @@ def skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skip-gram training-pair generation (the word2vec/fastText data
     front end): every (center, context) token pair within a ±2 window,
     counted corpus-wide, top-30 by frequency. The pair fan-out happens
-    INSIDE one array lambda over the persisted token arrays — map-side,
+    INSIDE one array lambda over the token arrays — map-side,
     whole-stage-codegen'd, ~2·window pairs per token with no self-join
     and no shuffle until the (center, context) count — where the naive
     positions-table self-join (the oracle's formulation) would shuffle
@@ -1332,9 +1323,11 @@ def naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_with_tokens(spark, sf_dir).withColumn(
         "is_test", F.col("doc_id") % _NB_TEST_MOD == 0
     )
-    tok = docs.select(
-        "doc_id", "lang", "is_test", F.explode("toks").alias("tok")
-    ).persist()
+    tok = materialize(
+        docs.select(
+            "doc_id", "lang", "is_test", F.explode("toks").alias("tok")
+        )
+    )
     train = tok.filter(~F.col("is_test"))
     classes = (
         docs.filter(~F.col("is_test"))
@@ -1452,9 +1445,9 @@ def release_gate_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid rollup by source. AS WRITTEN each screen pays its own
     documents scan (four scans incl. the source column) — the price of
     composing the registered definitions verbatim so gate and report
-    cannot drift; a deployment amortizes them by persisting the
-    token/text table first (the q194 cache discipline), which this
-    fixture-sized capstone deliberately does not do — caching here
+    cannot drift; a deployment amortizes them by materializing the
+    token/text table first (the q194 barrier discipline), which this
+    fixture-sized capstone deliberately does not do — a barrier here
     would hide the screens' own scan posture from their plan tests."""
     from kinesis_customer_sample_spark.registry import REGISTRY
 
@@ -1567,11 +1560,11 @@ def rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     its member words. Top-{k} corpus keyphrases with deterministic
     (score, phrase) order.
 
-    Scale posture: one tokenize pass (shared persisted barrier), per-doc
-    partitioned windows for the phrase segmentation (bounded by document
-    length), then everything is token/phrase GRID algebra — word scores
-    and phrase scores are hash-aggs over vocabulary-bounded tables, and
-    the final ranking is TakeOrderedAndProject.""".format(
+    Scale posture: one tokenize pass, per-doc partitioned windows for
+    the phrase segmentation (bounded by document length), then
+    everything is token/phrase GRID algebra — word scores and phrase
+    scores are hash-aggs over vocabulary-bounded tables, and the final
+    ranking is TakeOrderedAndProject.""".format(
         maxlen=_RAKE_MAXLEN, k=_RAKE_TOPK
     )
     stops = ", ".join(f"'{s}'" for s in _RAKE_STOPS)
@@ -1584,7 +1577,7 @@ def rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
             W.partitionBy("doc_id").orderBy("p")
         ),
     )
-    phrases = (
+    phrases = materialize(
         seg.filter(~F.expr(f"tok IN ({stops})"))
         .groupBy("doc_id", "phrase_id")
         .agg(
@@ -1597,7 +1590,6 @@ def rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("plen"),
         )
         .filter(F.col("plen").between(1, _RAKE_MAXLEN))
-        .persist()
     )
     words = phrases.select(
         F.explode(F.split("phrase", " ")).alias("w"), "plen"
@@ -1665,10 +1657,10 @@ def good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel where N_c = 0 (q438 rule); mass is exact integer basis
     points. No float anywhere.
 
-    Scale posture (100 TB): one tokenize pass (the shared persisted
-    token table), one hash-agg to token counts, one to the
-    count-of-counts histogram — which has at most max-count rows
-    regardless of corpus size; the c-grid join is an 11-row broadcast."""
+    Scale posture (100 TB): one tokenize pass, one hash-agg to token
+    counts, one to the count-of-counts histogram — which has at most
+    max-count rows regardless of corpus size; the c-grid join is an
+    11-row broadcast."""
     toks = _docs_with_tokens(spark, sf_dir).select(
         F.explode("toks").alias("tok")
     )
@@ -1825,14 +1817,16 @@ def heaps_vocabulary_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pts is the K-row curve yet feeds BOTH the fit aggregate and the final
     # projection; unmaterialized, the second reference re-ran the whole
     # tokenize → distinct → first-occurrence chain (38-Exchange plan).
-    # localCheckpoint pins the K rows once (q473/q299 convention).
-    pts = curve.select(
-        "k",
-        "n_docs",
-        "vocab",
-        F.expr("CAST(floor(ln(CAST(n_docs AS DOUBLE)) * 1000000) AS BIGINT)").alias("x"),
-        F.expr("CAST(floor(ln(CAST(vocab AS DOUBLE)) * 1000000) AS BIGINT)").alias("y"),
-    ).localCheckpoint()
+    # The barrier pins the K rows once.
+    pts = materialize(
+        curve.select(
+            "k",
+            "n_docs",
+            "vocab",
+            F.expr("CAST(floor(ln(CAST(n_docs AS DOUBLE)) * 1000000) AS BIGINT)").alias("x"),
+            F.expr("CAST(floor(ln(CAST(vocab AS DOUBLE)) * 1000000) AS BIGINT)").alias("y"),
+        )
+    )
     fit = F.broadcast(
         pts.agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -27,6 +27,7 @@ from kinesis_customer_sample_spark.queries.text_analysis import (
     _docs_with_tokens,
 )
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 # 5-token shingles (real decontamination uses long n-grams — 8-13 tokens
 # in published pipelines — so overlap means copied passages, not shared
@@ -89,12 +90,11 @@ def decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller than training data — so it broadcasts; train postings stream
     through the broadcast join map-side and only (doc_id, hit) pairs reach
     the count shuffle. Never all-pairs, never doc×doc."""
-    # postings (doc_id, bucket, shingle) computed ONCE and persisted: the
+    # postings (doc_id, bucket, shingle) computed ONCE: the
     # tokenize+shingle lambdas are interpreted (not codegen), so letting
     # Spark re-evaluate the subtree per consumer branch triples the cost —
-    # same materialize-once call as q69's signature table (bench.py
-    # clearCache()s between timed runs so this never games a benchmark)
-    postings = (
+    # same materialize-once call as q69's signature table
+    postings = materialize(
         _docs_with_tokens(spark, sf_dir)
         .filter(F.size("toks") >= 5)
         .withColumn(
@@ -102,7 +102,6 @@ def decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"{tok_hash_expr('CAST(doc_id AS STRING)', dialect='spark')} % 100"),
         )
         .select("doc_id", "bucket", F.explode(F.expr(_SPARK_SH5)).alias("sh"))
-        .persist()
     )
     eval_sh = (
         postings.filter(F.col("bucket") >= _EVAL_LO).select("sh").distinct()
@@ -584,20 +583,16 @@ def training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # keepers carries the tokenized corpus and feeds FIVE downstream
     # chains (uni/bi quality metrics, the contamination probe, and the
-    # clean set's three derivations); unpersisted, each chain re-ran the
+    # clean set's three derivations); unmaterialized, each chain re-ran the
     # tokenize + sha256 + dedup window from the parquet — a 90-scan /
-    # 276-Exchange plan at sf0.1 (guide §1.2). One cache materialization
-    # caps every re-reference at an in-memory scan. eval_sh still derives
+    # 276-Exchange plan at sf0.1 (guide §1.2). One barrier caps every
+    # re-reference at a scan of the stored rows. eval_sh still derives
     # from pre-dedup `hashed` by spec (an eval doc stays held out even if
     # its keeper twin lands in a train bucket).
-    # NOTE: this persist (like q431's) is never unpersisted — the bench
-    # harness clearCache()s between queries; long-lived sessions reusing
-    # these query functions should unpersist via their own cleanup hook.
-    keepers = (
+    keepers = materialize(
         hashed.withColumn("min_id", F.min("doc_id").over(W.partitionBy("h")))
         .filter(F.col("doc_id") == F.col("min_id"))
         .drop("min_id")
-        .persist()
     )
     # quality metrics: one posexplode of keeper tokens feeds both
     toks = keepers.select("doc_id", F.posexplode("toks").alias("pos", "tok"))
@@ -640,14 +635,12 @@ def training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # clean is three narrow columns at survivor grain yet feeds the mix
     # rates AND both packing branches — each re-derivation re-ran the
-    # quality and contamination chains; localCheckpoint pins it once
-    # (q473 convention for bounded-width intermediates).
-    clean = (
+    # quality and contamination chains; the barrier pins it once.
+    clean = materialize(
         keepers.filter(F.col("bucket") < _TRAIN_HI)
         .join(quality, "doc_id", "left_semi")
         .join(contaminated, "doc_id", "left_anti")
         .select("doc_id", "source", "n_chars")
-        .localCheckpoint()
     )
     # domain mixing over the survivor counts
     counts = clean.groupBy("source").agg(F.count(F.lit(1)).alias("n_s"))
@@ -1113,19 +1106,18 @@ def greedy_set_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     cascade, not just the final cover size.
 
     Scale posture (100 TB): the (source, token) incidence is built ONCE
-    (distinct → persisted); each round is one anti join against the
+    (distinct → materialized); each round is one anti join against the
     covered-token set plus one source-keyed hash agg; driver state is k
     picked source NAMES (bounded scalars — the q221 BPE-argmax pattern,
     never a data collect). k is small by problem statement; rounds are
     sequential by the greedy's definition."""
     from kinesis_customer_sample_spark.queries.dedup import _SPARK_SHINGLES
 
-    src_tok = (
+    src_tok = materialize(
         _docs_with_tokens(spark, sf_dir)
         .filter(F.size("toks") >= 3)
         .select("source", F.explode(F.expr(_SPARK_SHINGLES)).alias("tok"))
         .distinct()
-        .persist()
     )
     picked: list[str] = []
     rows: list[tuple] = []
@@ -1145,7 +1137,7 @@ def greedy_set_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
         # |covered| after a pick == |covered before| + the pick's gain
         # (the gain IS the count of newly covered tokens, by the greedy's
         # definition), so the per-round distinct+count action the original
-        # ran here — a second full pass over the persisted incidence per
+        # ran here — a second full pass over the materialized incidence per
         # round — is a running sum on the driver (optimization r15,
         # guide §1.2: don't compute what algebra already gives you).
         n_covered += int(best["n"])
@@ -1634,7 +1626,7 @@ def forget_me_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual delete job uses — audit and execution share one definition.
 
     Scale posture (100 TB): the cohort is request-queue-sized,
-    persisted (its four plan references — the subject count plus three
+    materialized (its four plan references — the subject count plus three
     broadcast legs — must not re-derive the cohort build), and
     broadcasts; each audited table contributes EXACTLY one scan — a
     broadcast LEFT join against the flagged cohort (distinct keys, so
@@ -1651,17 +1643,15 @@ def forget_me_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = table(spark, sf_dir, "customer")
     from kinesis_customer_sample_spark.functions import broadcast_if_bounded
 
-    del_ = (
+    del_ = materialize(
         ev.filter(F.col("user_id") % _RTBF_MOD == 0)
         .select("user_id")
         .distinct()
         .withColumn("_hit", F.lit(1))
-        .persist()
     )
     # the cohort is request-queue-sized at production but SF-scaled in the
     # fixture (1/_RTBF_MOD of users), so the broadcast hint is gated on the
-    # measured count — which also eagerly materializes the persisted cohort
-    # before its four consumers race the lazy cache
+    # measured count
     n_del = del_.count()
     n_subjects = F.broadcast(del_.agg(F.count(F.lit(1)).alias("n_subjects")))
 

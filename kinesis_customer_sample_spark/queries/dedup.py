@@ -30,6 +30,7 @@ from kinesis_customer_sample_spark.queries.text_analysis import (
     _docs_with_tokens,
 )
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 # 3-token shingles (distinct), per dialect
 _SPARK_SHINGLES = (
@@ -108,16 +109,14 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallelize the single-file scan before the interpreted shingle
     # lambdas (same rationale as text_analysis._docs_with_tokens), and
-    # persist() before the downstream explode()s — Generate over an inline
-    # lambda column re-evaluates the chain many times per row (the
-    # barrier rationale documented in _docs_with_tokens)
-    return (
+    # materialize before the downstream explode()s — Generate over an inline
+    # lambda column re-evaluates the chain many times per row
+    return materialize(
         table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism)
         .withColumn("toks", F.expr(_SPARK_TOKS))
         .filter(F.size("toks") >= 3)
         .withColumn("shs", F.expr(_SPARK_SHINGLES))
-        .persist()
     )
 
 
@@ -258,10 +257,10 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2. compute the 16 minhashes as plain min() aggregates over the
     #    exploded postings — whole-stage-codegen'd arithmetic, one shuffle
     #    on doc_id with map-side partial mins;
-    # 3. persist the small signature table: bands a/b and the verify join
-    #    ma/mb reuse it (at 100 TB: write signatures to parquet once).
+    # 3. materialize the small signature table: bands a/b and the verify
+    #    join ma/mb reuse it (at 100 TB: write signatures to parquet once).
     # Measured at sf0.1: 46 s (array-lambda form) → ~4 s.
-    sh = _shingle_sets(spark, sf_dir).select("doc_id", "shs").persist()
+    sh = _shingle_sets(spark, sf_dir).select("doc_id", "shs")
     postings = sh.select("doc_id", F.explode("shs").alias("s"))
     sh_hash = (
         postings.select("s")
@@ -283,14 +282,13 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(band_hash_expr([f"mh{4 * b + j}" for j in range(ROWS_PER_BAND)])).alias(f"bh{b}")
         for b in range(N_BANDS)
     ]
-    mh = (
+    mh = materialize(
         mins.select(
             "doc_id",
             F.array(*[F.col(f"mh{i}") for i in range(N_MINHASH)]).alias("mh"),
             *band_cols,
         )
         .join(sh, "doc_id")
-        .persist()
     )
     stack_args = ", ".join(f"{b}, bh{b}" for b in range(N_BANDS))
     bands = mh.selectExpr("doc_id", f"stack({N_BANDS}, {stack_args}) AS (b, bh)")
@@ -380,11 +378,11 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable, so signatures AND pairs hash-match the oracle."""
     # the signature expression is an interpreted higher-order lambda
     # (24 bits × tokens per doc): spread the single-file scan across all
-    # cores first, and materialize ONCE (localCheckpoint) so the self-join
+    # cores first, and materialize ONCE so the self-join
     # below doesn't evaluate signatures twice — at sf0.1 this is the
     # difference between ~65 s and ~4 s. At 100 TB: write the signature
     # table to parquet once, then join (same shape).
-    h = (
+    h = materialize(
         table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism)
         .withColumn(
@@ -392,7 +390,6 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("simhash", F.expr(_simhash_expr("spark")))
         .select("doc_id", "lang", "simhash")
-        .localCheckpoint()
     )
     a, b = h.alias("a"), h.alias("b")
     hamming = F.expr("bit_count(a.simhash ^ b.simhash)")
@@ -620,28 +617,32 @@ _PF_TAU = 0.6  # Jaccard threshold for the prefix-filtered join
 
 
 def _pf_prefix_postings(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """q215's inputs: the persisted shingle-set table `docs` (doc_id, toks,
+    """q215's inputs: the materialized shingle-set table `docs` (doc_id, toks,
     n) and the rarest-first prefix postings `ranked` (doc_id, n, rn, tok),
     where `rn` is the token's 1-based position in the doc's FULL
     global-df-ascending token order — carried through the candidate join so
     the positional (PPJoin) filter can bound the achievable overlap."""
-    # build shingles from the PERSISTED token arrays (_docs_with_tokens):
-    # deriving them inline would let CollapseProject inline the tokenizer
-    # into every lambda reference of `toks` inside the shingle transform —
-    # measured ~8× on this query's cache-population pass
+    # build shingles from MATERIALIZED token arrays: deriving them inline
+    # would let CollapseProject inline the tokenizer into every lambda
+    # reference of `toks` inside the shingle transform — measured 4.5× on
+    # the whole query at sf0.1
     from kinesis_customer_sample_spark.queries.text_analysis import _docs_with_tokens
 
-    docs = (
+    toks = materialize(
         _docs_with_tokens(spark, sf_dir)
         .filter(F.size("toks") >= 3)
-        .select("doc_id", F.expr(_SPARK_SHINGLES).alias("toks"))
+        .select("doc_id", "toks")
+    )
+    docs = materialize(
+        toks.select("doc_id", F.expr(_SPARK_SHINGLES).alias("toks"))
         .withColumn("n", F.size("toks"))
         .filter(F.col("n") > 0)
-        .persist()
     )
     postings = docs.select("doc_id", "n", F.explode("toks").alias("tok"))
     df_tab = postings.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    ranked = (
+    # both sides of the candidate self-join read `ranked`, and the df-join
+    # + per-doc ranking window are the second-priciest stage of the plan
+    ranked = materialize(
         postings.join(df_tab, "tok")
         .withColumn(
             "rn",
@@ -650,11 +651,6 @@ def _pf_prefix_postings(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
         # prefix length n − ⌈τ·n⌉ + 1
         .filter(F.col("rn") <= F.col("n") - F.ceil(F.lit(_PF_TAU) * F.col("n")) + 1)
         .select("doc_id", "n", "rn", "tok")
-        # persisted: both sides of the candidate self-join read it, and the
-        # df-join + per-doc ranking window above it are the second-priciest
-        # stage of the plan (measured ~0.15 s off the sf0.1 bench min;
-        # exchange reuse covers most but not all of the double read)
-        .persist()
     )
     return docs, ranked
 
@@ -762,12 +758,12 @@ def prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     are two candidate generators for the SAME resemblance definition —
     prefix postings here, DF-capped full postings there.
 
-    The shingle-set table is persisted: it feeds THREE consumers
+    The shingle-set table is materialized: it feeds THREE consumers
     (postings for ranking, and both verify sides), and the interpreted
     shingle lambdas are the expensive part of the plan — materializing
     |docs| rows once beats re-deriving them per consumer AND per exploded
     output row (measured 3×+ on the bench; the same
-    persist-the-signatures decision as q69)."""
+    materialize-the-signatures decision as q69)."""
     docs, ranked = _pf_prefix_postings(spark, sf_dir)
     cand = _pf_candidates(ranked, positional=True)
     da = docs.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"), F.col("n").alias("na"))
@@ -834,17 +830,16 @@ def cross_source_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     budgeting (within-source pairs are re-crawls; cross-source pairs are
     syndication/mirroring) and eval hygiene (a benchmark source leaking
     into a train source shows up as an off-diagonal cell). Builds the
-    q69 pair set (minhash_lsh_pairs) behind a localCheckpoint barrier,
+    q69 pair set (minhash_lsh_pairs) behind a `materialize` barrier,
     then joins each side's source and normalizes the pair with
     least/greatest so the matrix is triangular.
 
     Scale posture: inherits q69's bucket-blocked candidate generation
     (never all-pairs). The rollup adds two doc_id-keyed joins against a
     two-column projection of documents and one grid-sized agg."""
-    pairs = (
+    pairs = materialize(
         minhash_lsh_pairs(spark, sf_dir)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=False)
     )
     docs = table(spark, sf_dir, "documents").select("doc_id", "source")
     da = docs.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a"))
@@ -935,13 +930,13 @@ def sparse_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.broadcast(
         table(spark, sf_dir, "documents").agg(F.count(F.lit(1)).alias("n_docs"))
     )
-    # EAGER localCheckpoint (r16): the weight table feeds three exchanges
+    # Materialized: the weight table feeds three exchanges
     # — by tok twice for the postings self-join (ReuseExchange shares
     # those) and by doc_id for the norms, which is a DIFFERENT
     # partitioning and re-derived the tf⋈df chain at runtime. The barrier
     # computes w once for all three: 2.08/1.62 → 0.98/1.06 s paired
     # min-of-3 at sf0.1.
-    w = (
+    w = materialize(
         tf.join(df, "tok")
         .crossJoin(n)
         .select(
@@ -951,7 +946,6 @@ def sparse_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "tf * CAST(floor((ln(n_docs) - ln(df)) * 1000) AS BIGINT)"
             ).alias("w"),
         )
-        .localCheckpoint()
     )
     norm = w.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
     a = w.select(F.col("doc_id").alias("doc_a"), "tok", F.col("w").alias("wa"))

@@ -9,7 +9,7 @@ Scale posture (100 TB):
   keeps candidate pairs near-linear; the CC loop is
   graph_components.hash_min_components (one join + min-agg per round over
   a label table with one row per matched doc, lineage truncated by
-  localCheckpoint, converging in O(cluster diameter) rounds — entity
+  `scope.materialize`, converging in O(cluster diameter) rounds — entity
   clusters are shallow), and unmatched docs keep their own id;
   survivorship is one max_by hash-agg keyed by the entity id.
 - q185 is one partitioned window ordered by a portable hash — per-group
@@ -36,6 +36,7 @@ from kinesis_customer_sample_spark.queries.composites4 import (
     fuzzy_join_levenshtein,
 )
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 
 @query(
@@ -93,10 +94,9 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_min_components,
     )
 
-    pairs = (
+    pairs = materialize(
         fuzzy_join_levenshtein(spark, sf_dir)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
     )
     labels = hash_min_components(pairs)
     docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -389,11 +389,13 @@ def jaro_winkler_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("title"),
         )
     )
-    t = docs.select(
-        "doc_id",
-        "title",
-        F.expr("array_join(slice(split(title, ' '), 1, 2), ' ')").alias("blk"),
-    ).persist()
+    t = materialize(
+        docs.select(
+            "doc_id",
+            "title",
+            F.expr("array_join(slice(split(title, ' '), 1, 2), ' ')").alias("blk"),
+        )
+    )
     pairs = (
         t.alias("a")
         .join(

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.queries.graph_quality_ops import _EDGES_SQL
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 # Sparsifier for the customer-supplier graph: only "major" lineitems (top
 # quantity band + deep discount) create an edge, so the bipartite graph
@@ -58,20 +59,18 @@ def hash_min_components(e0: DataFrame) -> DataFrame:
     two columns are taken as the endpoints). Returns (node, lab) with lab
     = min node id of the component, for every node that has an edge. Each
     round: min-label over neighbors, combined with own label, and a
-    `changed` flag carried through the round's localCheckpoint (which
+    `changed` flag carried through the round's `materialize` (which
     keeps plan depth O(1) per round), so the driver's count() of changed
     labels scans checkpointed rows instead of joining new labels to old;
     it stops at zero changes — rounds = graph diameter."""
     a, b = e0.columns[0], e0.columns[1]
-    edges = (
+    edges = materialize(  # materialized once, joined every round
         e0.select(F.col(a).alias("src"), F.col(b).alias("dst"))
         .unionAll(e0.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .localCheckpoint()  # materialized once, joined every round
     )
-    labels = (
+    labels = materialize(
         edges.select(F.col("src").alias("node")).distinct()
         .select("node", F.col("node").alias("lab"))
-        .localCheckpoint()
     )
     while True:
         cand = (
@@ -79,14 +78,13 @@ def hash_min_components(e0: DataFrame) -> DataFrame:
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("lab").alias("nlab"))
         )
-        updated = (
+        updated = materialize(
             labels.join(cand, "node", "left")
             .select(
                 "node",
                 F.least("lab", "nlab").alias("lab"),  # least() skips a null nlab
                 (F.col("nlab") < F.col("lab")).alias("changed"),
             )
-            .localCheckpoint()
         )
         changed = updated.filter("changed").count()
         labels = updated.select("node", "lab")
@@ -251,7 +249,7 @@ def temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.get_json_object("props", "$.k").cast("bigint").alias("k"),
     )
-    edges = influence_edges(spark, sf_dir).localCheckpoint()
+    edges = materialize(influence_edges(spark, sf_dir))
     seed_user = ev.agg(F.min("user_id")).collect()[0][0]  # scalar seed
     seed_arr = (
         ev.filter(F.col("user_id") == seed_user).agg(F.min("ts")).collect()[0][0]
@@ -261,7 +259,7 @@ def temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     frontier = reached
     for k in range(1, _TR_MAX_HOPS + 1):
-        step = (
+        step = materialize(
             frontier.join(edges, (frontier["user_id"] == edges["src"]) & (edges["t1"] >= frontier["arr"]))
             .select(
                 F.col("dst").alias("user_id"),
@@ -271,7 +269,6 @@ def temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
             # prune dominated states: keep earliest arrival per user this hop
             .groupBy("user_id")
             .agg(F.min("arr").alias("arr"), F.min("hop").alias("hop"))
-            .localCheckpoint()
         )
         if not step.take(1):
             break
@@ -341,15 +338,15 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join edge filters (broadcast when the survivor set shrinks) —
     the standard distributed peel; the co-purchase edge build is the
     q180/q270 shared shape with its per-order fan-out bound. Edge list
-    persists across rounds."""
+    is materialized once for all rounds."""
     from kinesis_customer_sample_spark.queries.graph_quality_ops import (
         _copurchase_edges,
     )
 
-    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False).select(
+    e0 = materialize(_copurchase_edges(spark, sf_dir)).select(
         F.col("a").alias("s"), F.col("b").alias("t")
     )
-    e = e0.unionByName(e0.select(F.col("t").alias("s"), F.col("s").alias("t"))).persist()
+    e = e0.unionByName(e0.select(F.col("t").alias("s"), F.col("s").alias("t")))
     rows = []
 
     def _deg(edges: DataFrame) -> DataFrame:
@@ -372,28 +369,24 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("node_checksum"),
         )
 
-    # Each round's degree table is EAGERLY localCheckpoint'd (node-sized,
-    # cheap): the returned union's four summary branches would otherwise
-    # evaluate concurrently and RACE the lazy per-round persists,
-    # recomputing the semi-join peel up to once per branch (measured
-    # 3.96 → 2.06 s back-to-back at sf0.1, r16). The checkpoint job also
-    # materializes cur's persist sequentially, so every round runs
-    # exactly once — rounds are inherently sequential anyway.
+    # Each round's edge set and degree table are materialized: the
+    # returned union's four summary branches would otherwise evaluate
+    # concurrently and recompute the semi-join peel up to once per branch.
+    # Rounds are inherently sequential; the barriers run each once.
     cur = e
-    deg = _deg(cur).localCheckpoint()
+    deg = materialize(_deg(cur))
     rows.append(_summary(deg, 0))
     for rnd in range(1, _KCORE_ROUNDS + 1):
         survivors = deg.filter(F.col("deg") >= _KCORE_K).select(
             F.col("s").alias("node")
         )
-        cur = (
+        cur = materialize(
             cur.join(survivors.withColumnRenamed("node", "s"), "s", "left_semi")
             .join(
                 survivors.withColumnRenamed("node", "t"), "t", "left_semi"
             )
-            .persist()
         )
-        deg = _deg(cur).localCheckpoint()
+        deg = materialize(_deg(cur))
         rows.append(_summary(deg, rnd))
     out = rows[0]
     for r in rows[1:]:
@@ -458,24 +451,23 @@ def wl_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
         _copurchase_edges,
     )
 
-    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False).select(
+    e0 = materialize(_copurchase_edges(spark, sf_dir)).select(
         F.col("a").alias("s"), F.col("b").alias("t")
     )
-    # hash-cluster the symmetrized edges by s ONCE before persisting: every
-    # round's groupBy(s) then reuses the cached partitioning (guide §2.4 —
+    # hash-cluster the symmetrized edges by s ONCE before materializing:
+    # every round's groupBy(s) then reuses the stored partitioning (guide §2.4 —
     # "two operations keyed the same way share one exchange"), and the
     # per-round label join broadcasts the node-sized color table, so no
     # round shuffles the edge list at all. The label table is node-grain
     # (grows with SF), so the hint is SIZE-GATED on the measured node
-    # count — one job against the persisted edges, and the count is
+    # count — one job against the materialized edges, and the count is
     # round-invariant (every node with an edge keeps a label each round);
     # past the cap the rounds fall back to AQE-planned shuffle joins.
     from kinesis_customer_sample_spark.functions import broadcast_if_bounded
 
-    e = (
+    e = materialize(
         e0.unionByName(e0.select(F.col("t").alias("s"), F.col("s").alias("t")))
         .repartition(F.col("s"))
-        .persist()
     )
     labels = e.groupBy(F.col("s").alias("node")).agg(
         F.count(F.lit(1)).alias("lab")
@@ -483,7 +475,7 @@ def wl_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_nodes = labels.count()
     outs = []
     for rnd in range(1, _WL_ROUNDS + 1):
-        labels = (
+        labels = materialize(
             e.join(
                 broadcast_if_bounded(
                     labels.select(
@@ -500,7 +492,7 @@ def wl_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "CAST(7 AS BIGINT), (a, c) -> (a * 31 + c) % 1000000007)"
                 ).alias("lab")
             )
-        ).persist()
+        )
         outs.append(
             labels.agg(
                 F.lit(rnd).cast("bigint").alias("round"),
@@ -609,18 +601,15 @@ def ktruss_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = li.join(F.broadcast(pk), li.l_partkey == pk.p_partkey).select(
         "l_orderkey", "l_partkey"
     )
-    # EAGER localCheckpoint instead of lazy persist (the q385 fix, r16):
-    # the returned union's per-round summary branches plus each round's
-    # THREE self-join references raced the lazy caches and recomputed the
-    # triangle enumeration per branch — measured 1.83/1.50 → 0.98/0.78 s
-    # back-to-back at sf0.1. Rounds are inherently sequential; the
-    # checkpoint makes each round run exactly once.
-    e = (
+    # Materialized: the returned union's per-round summary branches plus
+    # each round's THREE self-join references would otherwise recompute
+    # the triangle enumeration per branch. Rounds are inherently
+    # sequential; the barrier makes each round run exactly once.
+    e = materialize(
         li.alias("x")
         .join(li.alias("y"), F.expr("x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey"))
         .select(F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b"))
         .distinct()
-        .localCheckpoint()
     )
 
     def summary(edges: DataFrame, rnd: int) -> DataFrame:
@@ -674,10 +663,9 @@ def ktruss_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("edge.x").alias("a"), F.col("edge.y").alias("b"))
             .agg(F.count(F.lit(1)).alias("sup"))
         )
-        cur = (
+        cur = materialize(
             sup.filter(F.col("sup") >= _KTRUSS_K - 2)
             .select("a", "b")
-            .localCheckpoint()
         )
         rows.append(summary(cur, rnd))
     out = rows[0]

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 # canonical undirected co-purchase edges (a < b): the one oracle text for
 # the edge list; graph oracles rename its columns with a CTE column list
@@ -100,7 +101,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     = 3·triangles / wedges in integer µ-units; both counts are
     orientation-invariant, so the oracle's plain id-ordered enumeration
     must agree bit-for-bit."""
-    und = _copurchase_edges(spark, sf_dir).persist()
+    und = materialize(_copurchase_edges(spark, sf_dir))
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))
@@ -138,10 +139,6 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_nodes"),
         F.sum(F.expr("d * (d - 1) div 2")).alias("n_wedges"),
     )
-    # und stays persisted for the run (three consumers: degrees, wedges,
-    # edge count); bench clears the cache between executions and the
-    # driver's correctness walk runs each query in a fresh process, so
-    # nothing leaks across queries.
     return (
         degstats.crossJoin(counts)
         .crossJoin(tri)
@@ -769,7 +766,7 @@ def local_clustering_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out is ×3 map-side; per-node rollup and the decile grid are
     hash aggs. At hub-heavy graphs the q180 degree-orientation bound
     applies to the enumeration join's build side."""
-    und = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
+    und = materialize(_copurchase_edges(spark, sf_dir))
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))
@@ -779,7 +776,7 @@ def local_clustering_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     e1 = und.select(F.col("a").alias("ta"), F.col("b").alias("tb"))
     e2 = und.select(F.col("a").alias("tb"), F.col("b").alias("tc"))
     e3 = und.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
-    tris = e1.join(e2, "tb").join(e3, ["ta", "tc"]).persist()
+    tris = materialize(e1.join(e2, "tb").join(e3, ["ta", "tc"]))
     corners = (
         tris.select(F.col("ta").alias("node"))
         .unionAll(tris.select(F.col("tb").alias("node")))
@@ -974,7 +971,7 @@ def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rowsum = pairs.groupBy("from_type").agg(F.sum("n").cast("bigint").alias("tot"))
     mat = pairs.join(rowsum, "from_type").select("from_type", "to_type", "n", "tot")
-    mat = mat.localCheckpoint(eager=False)  # 25-row grid, reused 15 times
+    mat = materialize(mat)  # 25-row grid, reused 15 times
     pi = rowsum.select(
         F.col("from_type").alias("state"),
         F.lit(_SD_START_MU).cast("bigint").alias("p_mu"),

@@ -7,7 +7,7 @@ Both follow the repo's iterative-graph conventions (established by q159):
 - integer micro-unit scores with truncating division, so both engines walk
   identical integer sequences — no float mass to drift;
 - each round is one keyed join + one hash aggregation (the Pregel
-  message-passing shape), edge list localCheckpointed once and reused;
+  message-passing shape), edge list materialized once and reused;
 - global normalizers are single-scalar driver reads (the sanctioned
   bounded coordination state, q149-class), never data collects.
 
@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.queries.graph_quality_ops import _EDGES_SQL
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 _HITS_MU = 1_000_000
 _BF_ROUNDS = 3
@@ -81,7 +82,7 @@ def hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     one equi-join keyed on the bipartite node id + one hash agg; the
     max-normalizer is a single-scalar driver read per step (bounded
     coordination, q149/q159-class)."""
-    e = _purchase_edges(spark, sf_dir).localCheckpoint()
+    e = materialize(_purchase_edges(spark, sf_dir))
     deg = e.groupBy("p").agg(F.count(F.lit(1)).alias("n_buyers"))
     # a1: every hub starts at 1.0 (µ) → authority = degree · µ
     a = deg.select("p", (F.col("n_buyers") * _HITS_MU).cast("long").alias("a"))
@@ -166,9 +167,11 @@ def bellman_ford_cheapest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b").alias("dst"),
         ((F.col("a") + F.col("b")) % 9 + 1).alias("w"),
     )
-    edges = und.unionAll(
-        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    ).localCheckpoint()
+    edges = materialize(
+        und.unionAll(
+            und.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+        )
+    )
     source = edges.agg(F.min("src")).first()[0]  # scalar seed (q120 pattern)
     dist = edges.sparkSession.createDataFrame(
         [(int(source), 0)], "node bigint, dist bigint"
@@ -178,11 +181,10 @@ def bellman_ford_cheapest(spark: SparkSession, sf_dir: str) -> DataFrame:
             dist.join(edges, dist["node"] == edges["src"])
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        dist = (
+        dist = materialize(  # truncate lineage per round (q292 pattern)
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").cast("bigint").alias("dist"))
-            .localCheckpoint()  # truncate lineage per round (q292 pattern)
         )
     return dist.select(F.col("node").alias("part_key"), "dist")
 
@@ -355,7 +357,7 @@ def adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         _copurchase_edges,
     )
 
-    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
+    e0 = materialize(_copurchase_edges(spark, sf_dir))
     e = e0.select(F.col("a").alias("s"), F.col("b").alias("t")).unionAll(
         e0.select(F.col("b").alias("s"), F.col("a").alias("t"))
     )
@@ -447,7 +449,7 @@ def harmonic_centrality_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         _copurchase_edges,
     )
 
-    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
+    e0 = materialize(_copurchase_edges(spark, sf_dir))
     e = e0.select(F.col("a").alias("s"), F.col("b").alias("t")).unionAll(
         e0.select(F.col("b").alias("s"), F.col("a").alias("t"))
     )
@@ -560,7 +562,7 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed's reachable neighborhood.
 
     Scale posture: identical to q159 — per iteration one keyed join +
-    one hash agg over the localCheckpointed edge/node tables; PPR mass
+    one hash agg over the materialized edge/node tables; PPR mass
     is sparse (only nodes within 3 hops of the seed are nonzero), which
     at 100 TB makes the state a small fraction of the graph — the
     standard push-style PPR advantage.""".format(k=_PPR_TOPK)
@@ -568,16 +570,13 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         _copurchase_edges,
     )
 
-    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
-    e = (
-        e0.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionAll(e0.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint(eager=False)
+    e0 = materialize(_copurchase_edges(spark, sf_dir))
+    e = e0.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
+        e0.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    deg = (
+    deg = materialize(
         e.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
-        .localCheckpoint(eager=False)
     )
     seed = F.broadcast(deg.agg(F.min("node").alias("s")))
     ranks = deg.crossJoin(seed).select(
@@ -678,7 +677,7 @@ def brand_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         _copurchase_edges,
     )
 
-    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
+    e0 = materialize(_copurchase_edges(spark, sf_dir))
     brands = F.broadcast(
         table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     )
@@ -793,7 +792,7 @@ def degree_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         _copurchase_edges,
     )
 
-    und = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
+    und = materialize(_copurchase_edges(spark, sf_dir))
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))

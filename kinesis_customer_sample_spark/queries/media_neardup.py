@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 _NB = 48  # hash bits
 _BANDS = 4  # 12 bits each
@@ -97,7 +98,7 @@ def media_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     band explode, band-bucket equi-join for candidates (no all-pairs),
     then the global 20 closest pairs by Hamming distance (deterministic
     (hamming, doc_a, doc_b) order → TakeOrderedAndProject). The tiny
-    hashed table (one int64 per payload) is localCheckpointed so the O(L)
+    hashed table (one int64 per payload) is materialized so the O(L)
     payload hashing runs once, not once per self-join side."""
     docs = (
         table(spark, sf_dir, "documents")
@@ -106,7 +107,7 @@ def media_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("total", F.expr("aggregate(codes, CAST(0 AS BIGINT), (a, c) -> a + c)"))
     )
     # (doc_id, int64) per payload — tiny; avoids re-hashing on both join sides
-    hashed = docs.select("doc_id", F.expr(_SPARK_AHASH).alias("ahash")).localCheckpoint()
+    hashed = materialize(docs.select("doc_id", F.expr(_SPARK_AHASH).alias("ahash")))
     bands = hashed.select(
         "doc_id",
         "ahash",

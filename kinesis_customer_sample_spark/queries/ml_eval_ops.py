@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 _AUC_POS_LABEL = 0
 _AUC_BUCKET = 10_000_000  # score-grid cumsum bucket width
@@ -703,23 +704,21 @@ def recsys_coverage_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    pur = (
+    pur = materialize(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy(
             F.col("c_mktsegment").alias("seg"), F.col("l_partkey").alias("pk")
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
     )
     tot = pur.agg(F.sum("n").alias("t"))
     pop = pur.groupBy("pk").agg(F.sum("n").alias("np"))
     w = W.partitionBy("seg").orderBy(F.desc("n"), "pk")
-    lists = (
+    lists = materialize(
         pur.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= _REC_K)
         .select("seg", "pk")
-        .persist()
     )
     brands = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     ild = (
@@ -893,9 +892,9 @@ def cluster_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cent is k rows but feeds THREE broadcast subtrees (point scoring +
     # both sides of the centroid-distance cross); broadcast branches don't
     # share plans, so unmaterialized each one re-ran the corpus explode +
-    # grid agg (16-scan / 6-SMJ plan). localCheckpoint pins the k rows
-    # once (the q299/q304 bounded-intermediate convention, guide §1.2).
-    cent = (
+    # grid agg (16-scan / 6-SMJ plan). The barrier pins the k rows once
+    # (guide §1.2).
+    cent = materialize(
         cdim.select(
             F.col("label").alias("clabel"),
             "dim",
@@ -907,7 +906,6 @@ def cluster_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(array_sort(collect_list(struct(dim, c))), x -> x.c)").alias("cmu"),
             F.first("n").alias("n"),
         )
-        .localCheckpoint()
     )
     d2 = pt.crossJoin(F.broadcast(cent.select("clabel", "cmu"))).select(
         "vec_id",
@@ -938,10 +936,12 @@ def cluster_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # sigma: k rows referenced three times (both DB-join sides + the final
     # join); each unmaterialized reference re-ran the whole N·k scoring
-    # chain — same localCheckpoint treatment as cent above.
-    sigma = sil.select(
-        "label", "n", "s_mu_sum", F.expr("own_dist_mu_sum div n").alias("sigma_mu")
-    ).localCheckpoint()
+    # chain — same barrier as cent above.
+    sigma = materialize(
+        sil.select(
+            "label", "n", "s_mu_sum", F.expr("own_dist_mu_sum div n").alias("sigma_mu")
+        )
+    )
     cent_b = F.broadcast(cent.select("clabel", "cmu"))
     cdist = (
         cent_b.alias("ci")

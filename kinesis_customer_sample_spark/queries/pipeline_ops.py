@@ -18,6 +18,7 @@ from kinesis_customer_sample_spark.functions import tok_hash_expr
 from kinesis_customer_sample_spark.queries.dedup import ngram_jaccard_pairs
 from kinesis_customer_sample_spark.queries.text_analysis import _DUCK_TOKS
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 # shared pair-generation SQL (mirrors q68's oracle, jaccard >= 0.5)
 _DUCK_PAIRS = f"""
@@ -83,7 +84,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the pair list ONCE: the q68 postings subtree (tokenize +
     # shingle + inverted-index join) is the expensive part, and building
     # edges as pairs ∪ swap(pairs) would otherwise evaluate it twice
-    pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
+    pairs = materialize(ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b"))
     labels = hash_min_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("lab").alias("component_id")
     )

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.queries.text_analysis import _DUCK_TOKS, _SPARK_TOKS
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 # 5-token shingles (distinct), per dialect — same normalization as q60/q68
 _N = 5
@@ -75,18 +76,17 @@ def ngram_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear-cost alternative to pairwise dedup: no document pair is ever
     formed, only shingle document-frequencies. Rate emitted in integer
     basis points (floor division) so no float crosses the oracle."""
-    # persist the computed shingle arrays BEFORE the explode: Generate over
+    # materialize the computed shingle arrays BEFORE the explode: Generate over
     # an inline lambda column re-evaluates the chain many times per row
     # (the barrier rationale in text_analysis._docs_with_tokens), and the
     # postings feed two consumers (DF agg + join-back) — measured ~4× on
     # the bench
-    docs = (
+    docs = materialize(
         table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism)
         .withColumn("toks", F.expr(_SPARK_TOKS))
         .filter(F.size("toks") >= _N)
         .select("doc_id", F.expr(_SPARK_SH5).alias("shs"))
-        .persist()
     )
     postings = docs.select("doc_id", F.explode("shs").alias("sh"))
     df_tab = postings.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
@@ -867,7 +867,7 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = hashed.withColumn(
         "rn", F.row_number().over(W.partitionBy("event_type").orderBy("h"))
     )
-    sketches = ranked.filter(F.col("rn") <= _KMV_K).persist()
+    sketches = materialize(ranked.filter(F.col("rn") <= _KMV_K))
     exact = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact_nd")
     )
@@ -1161,11 +1161,10 @@ def powerlaw_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-day distinct hash-agg to the 29-row grid, and a 1-row OLS
     reduce — the fit itself never touches row scale."""
     ev = table(spark, sf_dir, "events")
-    day0 = (
+    day0 = materialize(
         ev.filter(F.expr("date_trunc('day', ts) = TIMESTAMP '2024-01-01'"))
         .select("user_id")
         .distinct()
-        .persist()
     )
     n0 = day0.agg(F.count(F.lit(1)).alias("n"))
     act = (

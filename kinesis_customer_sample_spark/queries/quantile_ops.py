@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.functions import tok_hash_expr
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 _QB_WIDTH = 2000  # cents per cumsum bucket (~$20)
 _Q_FRACTIONS = (0.5, 0.9, 0.99)
@@ -540,7 +541,7 @@ def theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("o_custkey"),
         F.col("c_mktsegment").alias("segment"),
     )
-    seg = (
+    seg = materialize(
         o.join(F.broadcast(c), "o_custkey")
         .groupBy("segment")
         .agg(
@@ -553,7 +554,6 @@ def theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum(CAST(v AS DECIMAL(38,0)) * CAST(floor(ln(v) * 1000000) AS BIGINT))"
             ).alias("sum_vlnv_mu"),
         )
-        .persist()
     )
     tot = F.broadcast(
         seg.agg(

@@ -27,6 +27,7 @@ from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.functions import cosine_expr
 from kinesis_customer_sample_spark.queries.similarity import _QUERY_VEC_ID
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 _N_CAND = 20
 _K = 5
@@ -111,7 +112,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel_mu = F.expr(
         f"CAST(round({cosine_expr('embedding', 'qv', dialect='spark', digits=9)} * 1000000) AS BIGINT)"
     )
-    cand = (
+    cand = materialize(
         emb.filter(F.col("vec_id") != _QUERY_VEC_ID)
         .crossJoin(qv)
         .select(F.col("vec_id").alias("doc_id"), rel_mu.alias("rel_mu"), "embedding")
@@ -121,7 +122,6 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rel_mu").isNotNull())
         .orderBy(F.desc("rel_mu"), "doc_id")
         .limit(_N_CAND)
-        .localCheckpoint()
     )
     a = cand.select(
         F.col("doc_id").alias("a"), F.col("rel_mu").alias("rel_a"), F.col("embedding").alias("ea")

@@ -47,6 +47,7 @@ from kinesis_customer_sample_spark.queries.forecast_eval_ops import (
     _daily_counts,
 )
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 # q445: month anchor for integer month indexes
 _TS_ANCHOR = "1995-01-01"
@@ -217,10 +218,9 @@ def huber_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     compile-time constant, so the whole estimator is one static plan.""".format(
         k=_HUBER_STEPS
     )
-    rows = (
+    rows = materialize(
         table(spark, sf_dir, "customer")
         .select(F.col("c_mktsegment").alias("seg"), F.expr(_HUBER_X).alias("x"))
-        .persist()
     )
     med = rows.groupBy("seg").agg(F.expr("percentile(x, 0.5)").alias("med"))
     mad = (
@@ -338,7 +338,7 @@ def mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one codegen hash-agg to the |X|·|Y| contingency grid (25
     cells); marginals and totals are grid rollups; the 1-row total
     broadcasts via cross join. Fact table is scanned once."""
-    cells = (
+    cells = materialize(
         table(spark, sf_dir, "orders")
         .join(
             F.broadcast(
@@ -350,7 +350,6 @@ def mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment").alias("x"), F.col("o_orderpriority").alias("y")
         )
         .agg(F.count(F.lit(1)).alias("nxy"))
-        .persist()
     )
     mx = cells.groupBy("x").agg(F.sum("nxy").alias("nx"))
     my = cells.groupBy("y").agg(F.sum("nxy").alias("ny"))

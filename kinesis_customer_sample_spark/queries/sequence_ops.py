@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 # one char per event type: click→c, error→e, purchase→p, signup→s, view→v
 _PATTERN = "v+c+[^e]*p"  # views, then clicks, then a purchase with no error between
@@ -326,9 +327,11 @@ def markov_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
     )
     wseq = W.partitionBy("user_id", "day").orderBy("ts", "event_id")
-    seq = seq.withColumn("nxt", F.lead("event_type").over(wseq)).filter(
-        F.col("nxt").isNotNull()
-    ).persist()
+    seq = materialize(
+        seq.withColumn("nxt", F.lead("event_type").over(wseq)).filter(
+            F.col("nxt").isNotNull()
+        )
+    )
     split = F.lit(_MKV_SPLIT).cast("timestamp")
     train = (
         seq.filter(F.col("ts") < split)
@@ -345,7 +348,7 @@ def markov_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     test = seq.filter(F.col("ts") >= split).select(
         F.col("event_type").alias("src"), F.col("nxt").alias("actual")
     )
-    scored = (
+    scored = materialize(
         test.join(F.broadcast(pred), "src")
         .groupBy("src", "predicted")
         .agg(
@@ -354,7 +357,6 @@ def markov_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_correct"),
         )
-        .persist()
     )
     per_state = scored.select(
         "src",

@@ -26,6 +26,7 @@ from kinesis_customer_sample_spark.functions.porthash import (
     norm_expr,
 )
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 _QUERY_VEC_ID = 0  # the fixed "query vector" for top-k demos
 
@@ -815,18 +816,20 @@ def matryoshka_truncation_agreement(spark: SparkSession, sf_dir: str) -> DataFra
     c = e.filter(F.col("vec_id") >= _MAT_NQ).select(
         "vec_id", F.col("v").alias("cv")
     )
-    scored = c.crossJoin(q).select(
-        "qid",
-        "vec_id",
-        F.expr(
-            "aggregate(zip_with(qv, cv, (a, b) -> a * b), CAST(0 AS BIGINT),"
-            " (a, v) -> a + v)"
-        ).alias("s_full"),
-        F.expr(
-            f"aggregate(zip_with(slice(qv, 1, {_MAT_HALF}), slice(cv, 1, {_MAT_HALF}),"
-            " (a, b) -> a * b), CAST(0 AS BIGINT), (a, v) -> a + v)"
-        ).alias("s_half"),
-    ).persist()
+    scored = materialize(
+        c.crossJoin(q).select(
+            "qid",
+            "vec_id",
+            F.expr(
+                "aggregate(zip_with(qv, cv, (a, b) -> a * b), CAST(0 AS BIGINT),"
+                " (a, v) -> a + v)"
+            ).alias("s_full"),
+            F.expr(
+                f"aggregate(zip_with(slice(qv, 1, {_MAT_HALF}), slice(cv, 1, {_MAT_HALF}),"
+                " (a, b) -> a * b), CAST(0 AS BIGINT), (a, v) -> a + v)"
+            ).alias("s_half"),
+        )
+    )
     wf = W.partitionBy("qid").orderBy(F.col("s_full").desc(), "vec_id")
     wh = W.partitionBy("qid").orderBy(F.col("s_half").desc(), "vec_id")
     topf = (
@@ -1075,18 +1078,15 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" + {_GDB_OFF}"
         ).alias("cy"),
     )
-    # EAGER localCheckpoints instead of lazy persists (the q385/q462 fix,
-    # r16): the final clusters+noise union and each round's double lab
-    # reference raced the lazy caches and recomputed the grid subtrees
-    # per branch — measured 2.69/2.02 → 1.50/1.22 s back-to-back at
-    # sf0.1. All the checkpointed tables are grid-sized (≪ points).
-    cells = (
+    # Materialized: the final clusters+noise union and each round's double
+    # lab reference would otherwise recompute the grid subtrees per branch.
+    # All the materialized tables are grid-sized (≪ points).
+    cells = materialize(
         pts.groupBy("cx", "cy")
         .agg(F.count(F.lit(1)).alias("n_pts"))
         .withColumn("cell", F.col("cx") * 1000 + F.col("cy"))
-        .localCheckpoint()
     )
-    dense = cells.filter(F.col("n_pts") >= _GDB_MINPTS).localCheckpoint()
+    dense = materialize(cells.filter(F.col("n_pts") >= _GDB_MINPTS))
     # 9-stencil adjacency as an EQUI-join (guide §3.1): each dense cell
     # emits its 3×3 shifted coordinates and hash-joins back on the exact
     # (cx, cy) pair. The former |Δcx|<=1 AND |Δcy|<=1 theta predicate
@@ -1108,11 +1108,10 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("nb"),
     ).select("nbr", F.col("nb.cx").alias("cx"), F.col("nb.cy").alias("cy"))
-    adj = (
+    adj = materialize(
         dense.join(probe, ["cx", "cy"])
         .filter(F.col("cell") != F.col("nbr"))
         .select("cell", "nbr")
-        .localCheckpoint()
     )
     lab = dense.select("cell", F.col("cell").alias("lab"))
     for _ in range(_GDB_ROUNDS):
@@ -1120,14 +1119,14 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # left join), so without a barrier the lab plan DOUBLES per round
         # — 2^rounds copies of the whole grid subtree (the r15 profile
         # measured 210 Exchanges / 157 scans in the final plan). The
-        # bounded grid-sized label table is EAGERLY checkpointed per
-        # round (guide §5; the r16 race fix above).
+        # bounded grid-sized label table is materialized per round
+        # (guide §5).
         nbr_min = (
             adj.join(lab.withColumnRenamed("cell", "nbr"), "nbr")
             .groupBy("cell")
             .agg(F.min("lab").alias("nlab"))
         )
-        lab = (
+        lab = materialize(
             lab.join(nbr_min, "cell", "left")
             .select(
                 "cell",
@@ -1135,7 +1134,6 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "lab"
                 ),
             )
-            .localCheckpoint()
         )
     clusters = (
         lab.join(dense.select("cell", "n_pts"), "cell")
@@ -1209,18 +1207,16 @@ def reciprocal_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted the whole pair table); the mutuality check is a count==2
     hash agg over the (min, max)-normalized rank-1 pairs — <= one row
     per vector, no self-join."""
-    # EAGER localCheckpoint (the q153/q385-class fix, r16): both self-join
-    # sides apply the 8-plane bucket expression and the unrolled norm
-    # above the reused round-robin exchange, so the corpus pass ran twice;
-    # the barrier computes it once for both sides (2.28/1.64 → 1.37/1.28 s
-    # paired min-of-3 at sf0.1).
-    e = (
+    # Materialized: both self-join sides apply the 8-plane bucket
+    # expression and the unrolled norm above the reused round-robin
+    # exchange, so the corpus pass ran twice; the barrier computes it once
+    # for both sides (2.28/1.64 → 1.37/1.28 s paired min-of-3 at sf0.1).
+    e = materialize(
         table(spark, sf_dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism)
         .withColumn("bucket", F.expr(_hyperplane_bucket("embedding", dialect="spark")))
         .withColumn("en", F.expr(norm_expr("embedding")))
         .select("vec_id", "embedding", "bucket", "en")
-        .localCheckpoint()
     )
     a = e.select(
         F.col("bucket"),
@@ -1244,15 +1240,17 @@ def reciprocal_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round(cos, 6) agreement tolerance between dot/norm and DuckDB's
     # native list_cosine_similarity (round-on-quotient outputs are banned,
     # SCALE.md q288 post-mortem).
-    half = a.join(c, "bucket").filter(F.col("src") < F.col("dst")).select(
-        "bucket",
-        "src",
-        "dst",
-        F.floor(
-            F.expr(dot64_expr("emb_a", "emb_b")) / (F.col("na") * F.col("nb"))
-            * F.lit(1e6)
-        ).cast("bigint").alias("cos_mu"),
-    ).localCheckpoint(eager=False)
+    half = materialize(
+        a.join(c, "bucket").filter(F.col("src") < F.col("dst")).select(
+            "bucket",
+            "src",
+            "dst",
+            F.floor(
+                F.expr(dot64_expr("emb_a", "emb_b")) / (F.col("na") * F.col("nb"))
+                * F.lit(1e6)
+            ).cast("bigint").alias("cos_mu"),
+        )
+    )
     pairs = half.unionByName(
         half.select(
             "bucket",

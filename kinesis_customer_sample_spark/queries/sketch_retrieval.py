@@ -48,6 +48,7 @@ from kinesis_customer_sample_spark.queries.text_analysis import (
     _docs_with_tokens,
 )
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 # --- q175: Bloom-filter semi-join reduction --------------------------------
 
@@ -176,7 +177,7 @@ def _bm25_score_expr(*, dialect: str) -> str:
 def _bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared BM25 scorer (q176 + q199's lexical leg): one row per doc
     matching ≥1 query term, with (bm25_mu, n_terms_matched) — computed
-    ROW-LOCALLY from the cached token arrays. dl = size(toks) and per-term
+    ROW-LOCALLY from the token arrays. dl = size(toks) and per-term
     tf = size(toks) − size(array_remove(toks, term)) are codegen scalar
     expressions, so the posting explode, the doc-grain tf/dl shuffles and
     the tfs⋈dls join of the original shape all disappear (guide §2.4 /
@@ -265,7 +266,7 @@ def _bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 full-text ranking: top-10 documents for the query terms
     {spark, join, query}. With a FIXED query, every per-doc input (dl,
-    per-term tf) is a row-local array expression over the cached token
+    per-term tf) is a row-local array expression over the token
     arrays, so the whole query is two corpus map passes — one 1-row
     stats/df aggregate (broadcast back) and one scoring pass — with no
     posting explode, no doc-grain shuffle and no join
@@ -721,7 +722,7 @@ def rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     of max(ra, rb)) and the tail weights are precomputed integer
     nano-units, so the score is exact integer arithmetic in both
     engines."""
-    t = _docs_with_tokens(spark, sf_dir)
+    t = materialize(_docs_with_tokens(spark, sf_dir).select("doc_id", "toks"))
     tfs = (
         t.select("doc_id", F.explode("toks").alias("tok"))
         .filter(F.col("tok").isin(*_BM25_TERMS))

@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
-from kinesis_customer_sample_spark.scope import scratch
+from kinesis_customer_sample_spark.scope import materialize, scratch
 
 
 _NATION_SCHEMA = T.StructType(
@@ -155,12 +155,11 @@ def csv_malformed_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark disallows queries that touch ONLY the corrupt-record column of
     # a raw CSV scan (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN);
     # the documented pattern is to materialize the parsed scan first
-    back = (
+    back = materialize(
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_bad")
         .csv(path)
-        .persist()
     )
     good = (
         back.filter(F.col("_bad").isNull())

@@ -46,6 +46,7 @@ from kinesis_customer_sample_spark.queries.text_analysis import (
     _docs_with_tokens,
 )
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 # Spearman: y = extendedprice cents bucketed for the two-level cumsum
 _SP_BUCKET = 100_000
@@ -154,13 +155,13 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("y"),
     )
     # ONE melted rank chain for both axes (axis becomes part of the window
-    # key), persisted: without the barrier the final join re-executes the
+    # key), materialized: without the barrier the final join re-executes the
     # whole grid machinery once per branch (measured 8.6 s → ~3 s at sf0.1)
     melted = rows.select(
         "grp", F.lit("x").alias("ax"), F.col("x").alias("v")
     ).unionByName(rows.select("grp", F.lit("y").alias("ax"), F.col("y").alias("v")))
     grid = melted.groupBy("grp", "ax", "v").agg(F.count(F.lit(1)).alias("cnt"))
-    ranks = _rank2_grid(grid, ["grp", "ax"], "v", _SP_BUCKET).persist()
+    ranks = materialize(_rank2_grid(grid, ["grp", "ax"], "v", _SP_BUCKET))
     rx = ranks.filter(F.col("ax") == "x").select(
         "grp", F.col("v").alias("x"), F.col("rank2").alias("rx2")
     )
@@ -253,7 +254,7 @@ def kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("bigint").alias("x"),
         F.round(F.col("l_discount") * 100).cast("bigint").alias("y"),
     )
-    cells = rows.groupBy("grp", "x", "y").agg(F.count(F.lit(1)).alias("c")).persist()
+    cells = materialize(rows.groupBy("grp", "x", "y").agg(F.count(F.lit(1)).alias("c")))
     pairs = (
         cells.alias("a")
         .join(
@@ -455,7 +456,7 @@ def cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nat), "c_nationkey")
     )
     o = base.groupBy("seg", "nat").agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
-    o = o.persist()
+    o = materialize(o)
     r = o.groupBy("seg").agg(F.sum("obs").cast("bigint").alias("rt"))
     c = o.groupBy("nat").agg(F.sum("obs").cast("bigint").alias("ct"))
     t = o.agg(F.sum("obs").cast("bigint").alias("n"))
@@ -550,8 +551,7 @@ def js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     so ln only ever sees integer cross-products (the q151 discipline)
     and the µ-nat sums are order-insensitive integers.
 
-    Scale posture: one tokenize pass (shared persisted `_docs_with_tokens`
-    barrier), one hash-agg to the token grid with both corpus counts as
+    Scale posture: one tokenize pass (`_docs_with_tokens`), one hash-agg to the token grid with both corpus counts as
     conditional sums (no join of two scans), broadcast totals. The token
     grid IS the vocabulary — bounded far below row count."""
     toks = (

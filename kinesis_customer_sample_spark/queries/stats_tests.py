@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.functions import tok_hash_expr
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 _KS_A, _KS_B = "purchase", "click"
 _BUCKET_WIDTH = 20.0  # fixed-width value buckets for the two-level cumsum
@@ -630,9 +631,11 @@ def information_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("feats"),
     )
     tall = base.select("y", F.explode("feats").alias("feature", "x"))
-    cxy = tall.groupBy("feature", "x", "y").agg(
-        F.count(F.lit(1)).alias("c")
-    ).persist()
+    cxy = materialize(
+        tall.groupBy("feature", "x", "y").agg(
+            F.count(F.lit(1)).alias("c")
+        )
+    )
     # H(Y) from any one feature's marginal (identical for all three)
     cy = (
         cxy.filter(F.col("feature") == "linestatus")
@@ -732,7 +735,7 @@ def kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the GRID (distinct durations — bounded), never user rows."""
     ev = table(spark, sf_dir, "events")
     anchor = F.broadcast(ev.agg(F.max("ts").alias("mx")))
-    users = (
+    users = materialize(
         ev.groupBy("user_id")
         .agg(F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts"))
         .crossJoin(anchor)
@@ -746,7 +749,7 @@ def kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 < F.col("mx") - F.expr(f"INTERVAL {_KM_CHURN_GAP_D} DAYS")
             ).alias("churned"),
         )
-    ).persist()
+    )
     total = F.broadcast(users.agg(F.count(F.lit(1)).alias("n_total")))
     grid = users.groupBy("dur_d").agg(
         F.count(F.when(F.col("churned"), 1)).alias("d"),

@@ -52,7 +52,7 @@ from kinesis_customer_sample_spark.queries.dedup import (
 )
 from kinesis_customer_sample_spark.queries.text_analysis import _DUCK_TOKS, _SPARK_TOKS
 from kinesis_customer_sample_spark.registry import query
-from kinesis_customer_sample_spark.scope import scratch
+from kinesis_customer_sample_spark.scope import materialize, scratch
 from kinesis_customer_sample_spark.streaming.replay import write_ordered_shards
 
 _N_SHARDS = 4
@@ -154,7 +154,7 @@ def stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the checkpoint commit leaves this epoch's own bands behind, and an
         # epoch=* glob would self-match every doc in the replayed batch and
         # reject the whole batch (r4 advice, medium).
-        bands = _doc_bands(batch_df).localCheckpoint()  # sign once, probe+append
+        bands = materialize(_doc_bands(batch_df))  # sign once, probe+append
         sess = batch_df.sparkSession
         seen = (
             sess.read.schema(

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 
 @query(
@@ -290,9 +291,9 @@ def distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     hundred cells per day regardless of event volume — and the pair
     join is cell-count sized, so the monitor costs ONE scan plus
     negligible shuffles at any scale. The one-scan claim is structural:
-    the cell-count-sized shares table is persisted (q69's
+    the cell-count-sized shares table is materialized (q69's
     signature-table discipline) because the plan references it three
-    times (cur leg, prev leg, bounds), and without the cache each
+    times (cur leg, prev leg, bounds), and without the barrier each
     reference re-derives the whole fact subtree — the round-15 scan
     census measured exactly that, three events scans against this
     docstring; `test_q194_single_fact_scan` now pins 1."""
@@ -303,7 +304,7 @@ def distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bin"
         ),
     )
-    shares = (
+    shares = materialize(
         binned.groupBy("day", "bin")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -313,9 +314,8 @@ def distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("share_bp"),
         )
-        .persist()
     )
-    # bounds from the (cached, cell-count-sized) aggregate — the day set
+    # bounds from the (materialized, cell-count-sized) aggregate — the day set
     # with ≥1 event is identical pre- and post-aggregation
     bounds = shares.agg(
         F.min("day").alias("min_day"), F.max("day").alias("max_day")

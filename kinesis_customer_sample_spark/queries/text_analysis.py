@@ -39,15 +39,13 @@ def _docs_with_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    # persist() — a materialization barrier between the interpreted tokenize
-    # lambda and downstream explode()s: Generate over an INLINE
-    # higher-order-function column re-evaluates the lambda chain many times
-    # per row (CodegenFallback inside the generate stage — measured ~4× on
-    # the whole query, far worse on wider fanouts). The barrier makes every
-    # explode read a computed array. At 100 TB this is the standard
-    # persist-before-fanout: MEMORY_AND_DISK of (doc_id, tokens), evicted
-    # under pressure, recomputed per executor if lost.
-    return docs.withColumn("toks", F.expr(_SPARK_TOKS)).persist()
+    # No barrier here: most of the ~45 consumers read the tokens once, and
+    # paired sf0.1 runs measured them flat or faster without one. A
+    # consumer that reads the tokens in several branches, or derives
+    # further lambda arrays from them (CollapseProject would inline the
+    # tokenizer into every lambda reference), materializes its own
+    # narrow projection (q151, q172, q215, q236).
+    return docs.withColumn("toks", F.expr(_SPARK_TOKS))
 
 
 @query(

@@ -26,8 +26,8 @@ Cross-engine determinism (registry parity rules):
   sums with one sqrt/division at the end.
 
 Scale posture (100 TB):
-- all token passes reuse the shared persisted (doc_id, toks) table
-  (text_analysis._docs_with_tokens) — tokenize once, fan out many;
+- all token passes derive from text_analysis._docs_with_tokens; a query
+  that fans the tokens out to several branches materializes them once;
 - LM count tables are vocabulary-/bigram-type-sized build sides
   (broadcast or tiny-hash joins); the corpus is only ever scanned
   map-side;
@@ -49,6 +49,7 @@ from kinesis_customer_sample_spark.queries.text_analysis import (
     _docs_with_tokens,
 )
 from kinesis_customer_sample_spark.registry import query
+from kinesis_customer_sample_spark.scope import materialize
 
 # q450: held-out source scored by the model trained on the rest
 _KN_HELDOUT = "src0"
@@ -210,11 +211,10 @@ def kn_bigram_heldout(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bg"),
         )
     )
-    bc = (
+    bc = materialize(
         bg.filter(F.col("source") != _KN_HELDOUT)
         .groupBy("bg")
         .agg(F.count(F.lit(1)).alias("c12"))
-        .persist()
     )
     c1t = bc.groupBy(F.expr("split_part(bg, ' ', 1)").alias("w1")).agg(
         F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1p")
@@ -341,11 +341,10 @@ def burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast at 100 TB); the dense grid is |sources|·K and the pair
     join grid², both bounded by the cap regardless of corpus size."""
     tok = _docs_with_tokens(spark, sf_dir)
-    cnt = (
+    cnt = materialize(
         tok.select("source", F.explode("toks").alias("w"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
     )
     tot = cnt.groupBy("source").agg(F.sum("c").alias("t"))
     words = _burrows_marker_words(cnt)
@@ -552,7 +551,7 @@ def fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-vs-candidate-count blocking knob. The m/u estimation is
     one unpivoted hash-agg over the pairs; the 3-row weight table
     broadcasts back to the scoring pass."""
-    d = (
+    d = materialize(
         _docs_with_tokens(spark, sf_dir)
         .select(
             "doc_id", "lang", "source", "n_chars",
@@ -560,10 +559,9 @@ def fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"n_chars div {_FS_LEN_BAND}").alias("len_band"),
             F.array_distinct("toks").alias("ts"),
         )
-        .persist()
     )
     inter = "size(array_intersect(a.ts, b.ts))"
-    pairs = (
+    pairs = materialize(
         d.alias("a")
         .join(
             d.alias("b"),
@@ -585,7 +583,6 @@ def fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"(size(a.ts) + size(b.ts) - {inter}) THEN 1 ELSE 0 END"
             ).alias("is_match"),
         )
-        .persist()
     )
     unpiv = pairs.selectExpr(
         "is_match",

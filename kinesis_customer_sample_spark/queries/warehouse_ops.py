@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from kinesis_customer_sample_spark.catalog import table
 from kinesis_customer_sample_spark.registry import query
-from kinesis_customer_sample_spark.scope import drop_at_exit, scratch
+from kinesis_customer_sample_spark.scope import drop_at_exit, materialize, scratch
 
 # incremental-merge cut: orders strictly before the cut are the "already
 # aggregated" base, the rest are the incoming delta
@@ -1676,9 +1676,10 @@ def bom_explosion(spark: SparkSession, sf_dir: str) -> DataFrame:
     textbook recursive CTE.
 
     Scale posture (100 TB): each iteration is one hash join edge-keyed on
-    the current ancestor (edges table is part-dim-sized and reusable —
-    persisted once); intermediate multiplicities stay ≤ 3^depth (int64-
-    safe to depth 40). Assembly DAG depth in practice is ≤ ~12 — the
+    the current ancestor (the edges table is part-dim-sized: each level
+    re-reads it with a column-pruned dim scan, so the build runs no job
+    for it); intermediate multiplicities stay ≤ 3^depth (int64-safe to
+    depth 40). Assembly DAG depth in practice is ≤ ~12 — the
     iteration count is structural, not data-scaled. The loop runs exactly
     `depth` iterations LAZILY — no per-level isEmpty() action: the depth
     bound is already sufficient (a d-digit key reaches its root in d-1
@@ -1693,14 +1694,10 @@ def bom_explosion(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = table(spark, sf_dir, "part")
     max_key = part.agg(F.max("p_partkey")).collect()[0][0]
     depth = max(1, math.ceil(math.log10(max(int(max_key), 2))))
-    edges = (
-        part.filter(F.col("p_partkey") >= 10)
-        .select(
-            F.col("p_partkey").alias("child"),
-            F.expr("p_partkey div 10").alias("parent"),
-            F.expr(_BOM_QTY).cast("bigint").alias("qty"),
-        )
-        .persist()
+    edges = part.filter(F.col("p_partkey") >= 10).select(
+        F.col("p_partkey").alias("child"),
+        F.expr("p_partkey div 10").alias("parent"),
+        F.expr(_BOM_QTY).cast("bigint").alias("qty"),
     )
     walk = edges.select(
         F.col("child").alias("node"),
@@ -1797,10 +1794,12 @@ def vacuum_planning(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderdate") < F.lit(f"{_VACUUM_CUT} 00:00:00"))
         | (F.col("o_orderkey") % 6 >= 4)
     )
-    files = o.groupBy((F.col("o_orderkey") % 6).cast("bigint").alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("bytes"),
-    ).persist()
+    files = materialize(
+        o.groupBy((F.col("o_orderkey") % 6).cast("bigint").alias("bucket")).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("bytes"),
+        )
+    )
     refs = (
         files.filter(F.col("bucket") >= 2)
         .select(F.col("bucket").alias("file_id"))
@@ -2167,17 +2166,15 @@ def abc_xyz_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per_part feeds the grand total, the bucketed local window and the
     # bucket totals — three consumers with DIFFERENT downstream keys, so
     # exchange reuse could not share them all (the sf0.1 census read 10
-    # fact scans / 30 Exchange unmaterialized). A lazy persist() measured
-    # SLOWER in r15 (1.77 → 3.85 s: broadcast builds raced the cache);
-    # the r16 EAGER localCheckpoint is timing-neutral at sf0.1 (4 paired
-    # windows, gm 1.93 vs 1.92 s) and drops the plan to 2 scans /
-    # 14 Exchange — kept for the 5× fact re-scan it removes at scale
-    # (the q473 precedent)
-    per_part = demand.groupBy("l_partkey").agg(
-        F.sum("q").cast("bigint").alias("s"),
-        F.sum(F.col("q") * F.col("q")).cast("bigint").alias("qq"),
-        F.sum("r").cast("bigint").alias("rev_c"),
-    ).localCheckpoint()
+    # fact scans / 30 Exchange unmaterialized). The barrier drops the plan
+    # to 2 scans / 14 Exchange, the 5× fact re-scan it removes at scale.
+    per_part = materialize(
+        demand.groupBy("l_partkey").agg(
+            F.sum("q").cast("bigint").alias("s"),
+            F.sum(F.col("q") * F.col("q")).cast("bigint").alias("qq"),
+            F.sum("r").cast("bigint").alias("rev_c"),
+        )
+    )
     tot = F.broadcast(per_part.agg(F.sum("rev_c").alias("total_rev")))
     # two-level cumulative over (rev DESC, part): bucket on negated revenue
     b = per_part.withColumn("bucket", F.expr(f"(-rev_c) div {_XYZ_BUCKET}"))
@@ -2286,7 +2283,7 @@ def hierarchical_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact hash-agg to the (region, nation, month) grid; the
     share window partitions by region over the nation grid; forecasts
     select single grid rows via the broadcast 1-row last-month total."""
-    monthly = (
+    monthly = materialize(
         table(spark, sf_dir, "orders")
         .join(
             F.broadcast(
@@ -2310,7 +2307,6 @@ def hierarchical_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("m"),
         )
         .agg(F.sum(F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")).alias("cents"))
-        .persist()
     )
     last_m = monthly.agg(F.max("m").alias("lm"))
     nat_fc = (
@@ -2598,14 +2594,14 @@ def clustering_depth_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("range").alias("layout"), "file_id", "min_day", "max_day")
     )
     # files is 2·|files| = 32 rows yet feeds every downstream branch —
-    # unpersisted, each reference re-derived BOTH layout aggregates from
-    # fresh orders scans (30-scan / 52-Exchange plan); persist the bounded
+    # unmaterialized, each reference re-derived BOTH layout aggregates from
+    # fresh orders scans (30-scan / 52-Exchange plan); materialize the bounded
     # table once (guide §1.2). The open/close boundary pair is emitted
     # row-locally (explode of a 2-struct array) instead of a two-branch
     # union (union branches don't CSE — the q198 lesson), and the two
     # depth statistics share one conditional aggregate (the q411 pattern;
     # max(d) is attained where d > 0, so one filtered-agg pass is exact).
-    files = hash_files.unionByName(range_files).persist()
+    files = materialize(hash_files.unionByName(range_files))
     bounds = files.select(
         "layout",
         F.explode(

@@ -92,12 +92,11 @@ def timed_noop(spark: SparkSession, q: Query, sf_dir: str, runs: int = 3) -> flo
 
     The min measures the plan, not the multi-second GC / JIT stalls that
     land on arbitrary queries in a long JVM. Each run rebuilds the plan in
-    its own query scope, whose untimed release drops what it persisted or
-    checkpointed: a `.persist()`ed intermediate would
-    otherwise be substituted into the plan-identical next run and make the
-    min a cache-assisted number, and would leak executor memory across a
-    suite. `t0` is taken before the builder runs, so work a builder does
-    eagerly (an eager `localCheckpoint`) is billed to the query."""
+    its own query scope, whose untimed release drops the blocks its
+    `scope.materialize` barriers stored, so no run reads an intermediate
+    an earlier run computed and a suite does not pile up executor memory.
+    `t0` is taken before the builder runs, so the jobs a barrier runs
+    while the builder builds are billed to the query."""
     best = float("inf")
     for _ in range(runs):
         with query_scope(spark):

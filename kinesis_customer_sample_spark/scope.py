@@ -1,5 +1,8 @@
 """What one query run leaves behind, and the one place that releases it.
 
+`materialize(df)` is the one barrier a builder uses to compute an
+intermediate once; its blocks belong to the scope that is open when it runs.
+
 `query_scope(spark)` wraps one run: the build and the consumption of its
 result (the noop write or `toArrow`). On exit, also on failure, it drops the
 views and tables named with `drop_at_exit`, unpersists every RDD
@@ -21,7 +24,20 @@ import tempfile
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """The package's one barrier: compute `df` now, once, and return a frame
+    that reads the stored rows with the lineage cut.
+
+    Policy: an eager `localCheckpoint`. Its blocks live on the executors
+    that computed them, and the enclosing scope releases them on exit, so a
+    builder never unpersists. Bound: the blocks are not replicated or
+    written to reliable storage, so losing an executor after the barrier
+    fails the query instead of recomputing the lost partitions.
+    """
+    return df.localCheckpoint()
 
 
 class _Scope:

@@ -166,10 +166,3 @@ def decode_records(df: DataFrame, fetch: Fetch = http_fetch) -> DataFrame:
 def operation_doc_type(operation: Column) -> Column:
     """'insert-story' → 'story' (the affected document type, guide:70-72)."""
     return F.regexp_extract(operation, r"^(?:insert|delete)-(.+)$", 1)
-
-
-def is_direct_update(operation: Column, doc_id: Column, trigger: Column) -> Column:
-    """R12: direct edit iff trigger (type,id) == affected (type,id) (guide:90)."""
-    return (trigger.getField("id") == doc_id) & (
-        trigger.getField("type") == operation_doc_type(operation)
-    )

@@ -8,18 +8,53 @@ string-matched ad hoc."""
 from __future__ import annotations
 
 import re
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
-from kinesis_customer_sample_spark.plans import audit
+from kinesis_customer_sample_spark.plans import PlanFacts, audit
 from kinesis_customer_sample_spark.registry import load_registry
+from kinesis_customer_sample_spark.scope import query_scope
 
 REGISTRY = load_registry()
 
 
 def audit_of(spark, sf_dir, name: str):
-    return audit(REGISTRY[name].fn(spark, sf_dir))
+    # the scope releases the blocks the builder's barriers stored
+    with query_scope(spark):
+        return audit(REGISTRY[name].fn(spark, sf_dir))
+
+
+def audit_through_barriers(spark, sf_dir, name: str) -> PlanFacts:
+    """`audit_of` over every plan the query runs: the returned plan and the
+    input plan of each `scope.materialize` barrier the builder passed. The
+    returned plan stops at a barrier's checkpoint scan, so a pin on work
+    done below a barrier reads that barrier's input plan."""
+    facts = []
+    checkpoint = ClassicDataFrame.localCheckpoint
+
+    def audited_checkpoint(df, *args, **kwargs):
+        facts.append(audit(df))
+        return checkpoint(df, *args, **kwargs)
+
+    with query_scope(spark), mock.patch.object(
+        ClassicDataFrame, "localCheckpoint", audited_checkpoint
+    ):
+        facts.append(audit(REGISTRY[name].fn(spark, sf_dir)))
+    merged = PlanFacts(text="\n".join(f.text for f in facts))
+    for f in facts:
+        merged.pushed_filters += f.pushed_filters
+        merged.read_schemas += f.read_schemas
+        merged.partition_filters += f.partition_filters
+        for node, n in f.join_strategies.items():
+            merged.join_strategies[node] = merged.join_strategies.get(node, 0) + n
+        merged.n_exchanges += f.n_exchanges
+        merged.round_robin_exchanges += f.round_robin_exchanges
+        merged.has_cartesian |= f.has_cartesian
+        merged.has_partial_agg |= f.has_partial_agg
+    return merged
 
 
 def test_flagship_pushdown_and_pruning(spark, sf_dir):
@@ -1636,7 +1671,7 @@ def test_merkle_diff_broadcasts_diverged_buckets(spark, sf_dir):
 
 
 def test_set_cover_incidence_built_once(spark, sf_dir):
-    """q352: the (source, shingle) incidence is persisted and each round
+    """q352: the (source, shingle) incidence is materialized and each round
     is anti-join + hash agg — no cartesian, no window."""
     facts = audit_of(spark, sf_dir, "q352_greedy_set_cover")
     # result is a driver-assembled k-row table; audit the INCIDENCE build
@@ -1779,7 +1814,7 @@ def test_information_gain_single_scan_grid(spark, sf_dir):
     # the H(Y) scalar arrives as a 1-row broadcast nested loop — the only
     # allowed non-equi join; nothing row-scaled may cartesian
     assert facts.join_strategies.get("BroadcastNestedLoopJoin", 0) >= 1
-    assert facts.text.count("lineitem") <= 2  # persist barrier: ≤2 scans
+    assert facts.text.count("lineitem") <= 2  # barrier: ≤2 scans
 
 
 def test_star_schema_fact_never_windows(spark, sf_dir):
@@ -1985,12 +2020,11 @@ def test_kaplan_meier_windows_on_grid(spark, sf_dir):
 
 
 def test_kcore_rounds_are_semi_joins(spark, sf_dir):
-    """q385: each round's degree table is eagerly checkpointed (node-
-    sized), so the peel's LEFT SEMI joins run exactly once at build time
-    and the RETURNED union reads the four materialized degree tables
-    (ExistingRDD barriers) — without the barrier the union's four summary
-    branches raced the lazy per-round persists and recomputed the
-    semi-join peel per branch (3.96 → 2.06 s at sf0.1, r16). Pin: no
+    """q385: each round's edge set and degree table are materialized, so
+    the peel's LEFT SEMI joins run exactly once at build time and the
+    RETURNED union reads the four materialized degree tables (ExistingRDD
+    barriers) — without the barrier the union's four summary branches
+    recomputed the semi-join peel per branch (3.96 → 2.06 s at sf0.1). Pin: no
     cartesian, the returned plan reads checkpoints and re-runs no edge
     scan or semi-join above them."""
     facts = audit_of(spark, sf_dir, "q385_kcore_peel")
@@ -2092,7 +2126,7 @@ def test_item_cf_capped_self_join(spark, sf_dir):
 def test_wl_round_is_join_plus_sorted_fold(spark, sf_dir):
     """q397: each round is an edge-keyed hash join + list agg; no
     cartesian; distinct-color counts combine partially."""
-    facts = audit_of(spark, sf_dir, "q397_wl_refinement")
+    facts = audit_through_barriers(spark, sf_dir, "q397_wl_refinement")
     assert not facts.has_cartesian
     assert sum(facts.join_strategies.values()) >= 2  # edge build + rounds
     assert "Window" not in facts.text
@@ -2245,7 +2279,7 @@ def test_rtbf_cohort_broadcasts(spark, sf_dir):
 def test_theil_single_agg_grid(spark, sf_dir):
     """q412: one fact-dim broadcast join, ONE partial agg to the segment
     grid with three sufficient statistics; rollup is grid algebra."""
-    facts = audit_of(spark, sf_dir, "q412_theil_decomposition")
+    facts = audit_through_barriers(spark, sf_dir, "q412_theil_decomposition")
     assert facts.join_strategies.get("BroadcastHashJoin", 0) >= 1
     assert facts.has_partial_agg
     assert "Window" not in facts.text
@@ -2263,7 +2297,7 @@ def test_spearman_two_level_rank_windows(spark, sf_dir):
     """q414: midranks come from ONE melted grid chain — every Window is
     partitioned (two-level cumsum, never a global ordered window), the
     x-rank join back to rows broadcasts, and no join is cartesian."""
-    facts = audit_of(spark, sf_dir, "q414_spearman_rank_corr")
+    facts = audit_through_barriers(spark, sf_dir, "q414_spearman_rank_corr")
     assert "Window" in facts.text
     assert "No Partition Defined" not in facts.text
     assert not facts.has_cartesian
@@ -2280,9 +2314,9 @@ def test_kendall_joins_cell_grid_not_rows(spark, sf_dir):
     assert not facts.has_cartesian
     assert facts.has_partial_agg
     # the self-join runs on the aggregated cell grid: the plan must show
-    # an InMemoryTableScan (persisted grid) feeding the join, and no
+    # the materialized grid's scan (ExistingRDD) feeding the join, and no
     # Window at all (tie corrections are marginal-grid algebra)
-    assert "InMemoryTableScan" in facts.text
+    assert "ExistingRDD" in facts.text
     assert "Window" not in facts.text
 
 
@@ -2298,7 +2332,7 @@ def test_anova_single_scan_grid_algebra(spark, sf_dir):
 
 
 def test_cramers_v_broadcast_grid_algebra(spark, sf_dir):
-    """q417: the fact collapses to the seg×nation grid once (persisted);
+    """q417: the fact collapses to the seg×nation grid once (materialized);
     marginals/totals join back as broadcasts; no cartesian product (the
     1-row total attaches via BroadcastNestedLoopJoin, the house idiom)."""
     facts = audit_of(spark, sf_dir, "q417_cramers_v")
@@ -2366,12 +2400,12 @@ def test_trigram_probe_filters_before_shuffle(spark, sf_dir):
 
 
 def test_matryoshka_per_query_windows_one_scan(spark, sf_dir):
-    """q423: queries broadcast; both rankings ride one persisted scoring
+    """q423: queries broadcast; both rankings ride one materialized scoring
     pass; rank windows are partitioned BY QUERY, never global."""
     facts = audit_of(spark, sf_dir, "q423_matryoshka_truncation_agreement")
     assert "No Partition Defined" not in facts.text
     assert not facts.has_cartesian
-    assert "InMemoryTableScan" in facts.text
+    assert "ExistingRDD" in facts.text
 
 
 def test_adamic_adar_capped_postings_no_cartesian(spark, sf_dir):
@@ -2525,7 +2559,7 @@ def test_ivf_probe_prunes_candidates(spark, sf_dir):
 
 def test_jw_blocked_pairs_broadcast_topk(spark, sf_dir):
     """q431: candidate pairs come from the two-token block equi-join of
-    the persisted title table (never n²); top-k is
+    the materialized title table (never n²); top-k is
     TakeOrderedAndProject; the UDF is Arrow-batched (ArrowEvalPython),
     not row-at-a-time BatchEvalPython."""
     facts = audit_of(spark, sf_dir, "q431_jaro_winkler_linkage")
@@ -2586,7 +2620,7 @@ def test_jl_projection_map_side_band_grid(spark, sf_dir):
 def test_markov_backtest_broadcast_predictor(spark, sf_dir):
     """q437: one sequence pass (per-user-day windows) serves train and
     test; the |states|-row predictor broadcasts to the test join."""
-    facts = audit_of(spark, sf_dir, "q437_markov_next_event_accuracy")
+    facts = audit_through_barriers(spark, sf_dir, "q437_markov_next_event_accuracy")
     assert "No Partition Defined" not in facts.text
     assert facts.join_strategies.get("BroadcastHashJoin", 0) >= 1
     assert not facts.has_cartesian
@@ -2746,7 +2780,7 @@ def test_fs_pairs_blocked_weights_broadcast(spark, sf_dir):
     lang-only leaves the dominant-language block quadratic at corpus
     scale); the 1-row pivoted weight table broadcasts back to the
     scoring pass; top-k is TakeOrderedAndProject."""
-    facts = audit_of(spark, sf_dir, "q453_fellegi_sunter")
+    facts = audit_through_barriers(spark, sf_dir, "q453_fellegi_sunter")
     assert not facts.has_cartesian
     # the pair join's equi-key must include BOTH block components
     assert re.search(r"Left keys \[2\]: \[lang#\d+, len_band#\d+L?\]", facts.text)
@@ -3403,26 +3437,27 @@ def test_q386_single_scan_expand(spark, sf_dir):
 def test_q194_single_fact_scan(spark, sf_dir):
     """q194 claims the drift monitor costs one scan; its cell-count-sized
     shares table is referenced three times (cur/prev legs + bounds) and
-    without the persist each reference re-derived the fact subtree
-    (three events scans — round-15 census). Pin: one events scan, with
-    the cached aggregate serving the other references."""
+    without the barrier each reference re-derived the fact subtree
+    (three events scans — round-15 census). Pin: the materialized
+    aggregate (ExistingRDD) serves every reference, with no raw events
+    scan above it."""
     facts = audit_of(spark, sf_dir, "q194_distribution_drift")
     n = len(re.findall(r"Location.*[/_]events\.parquet", facts.text))
-    assert n == 1, f"events: {n} scans (want 1)"
-    assert "InMemoryTableScan" in facts.text
+    assert n == 0, f"events: {n} raw scans above the barrier (want 0)"
+    assert "ExistingRDD" in facts.text
 
 
 def test_q411_one_scan_per_audited_table(spark, sf_dir):
     """q411 claims each audited table contributes one scan; the original
     paid two per table (separate affected/total aggregates) and
     re-derived the cohort four times (six events scans — round-15
-    census). Pin: one scan per audited table, plus exactly one more
-    events scan for the (persisted) fixture cohort build."""
+    census). Pin: one scan per audited table; the fixture cohort build
+    sits below its barrier (ExistingRDD), out of the returned plan."""
     facts = audit_of(spark, sf_dir, "q411_forget_me_propagation")
-    for tb, want in (("events", 2), ("orders", 1), ("customer", 1)):
+    for tb, want in (("events", 1), ("orders", 1), ("customer", 1)):
         n = len(re.findall(rf"Location.*[/_]{tb}\.parquet", facts.text))
         assert n == want, f"{tb}: {n} scans (want {want})"
-    assert "InMemoryTableScan" in facts.text
+    assert "ExistingRDD" in facts.text
 
 
 def test_python_udf_single_evaluation(spark, sf_dir):
@@ -3444,29 +3479,34 @@ def test_no_duplicated_python_eval_registry_wide(spark, sf_dir):
     bug). Sweeps every registered query's formatted plan and compares
     Python-eval node bodies with result expr-ids stripped: two nodes
     with an identical normalized call signature mean every row pays the
-    Python hop twice."""
+    Python hop twice. Each build runs in its own query scope, and no RDD
+    persisted during the sweep may remain after it."""
     import re as _re
 
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
     offenders = {}
     for name, q in REGISTRY.items():
-        plan = audit(q.fn(spark, sf_dir)).text
+        with query_scope(spark):
+            plan = audit(q.fn(spark, sf_dir)).text
         calls = _re.findall(r"(?:Arrow|Batch)EvalPython \[([^\]]*)\]", plan)
         sigs = [_re.sub(r"\)#\d+", ")", c) for c in calls]
         dup = {s for s in sigs if sigs.count(s) > 1}
         if dup:
             offenders[name] = sorted(dup)
     assert not offenders, f"duplicated Python eval: {offenders}"
+    # every block the sweep's builders stored was released with its scope
+    left = set(jsc.getPersistentRDDs()) - before
+    assert not left, f"{len(left)} RDDs persisted during the sweep remain"
 
 
 def test_q148_pipeline_materializes_shared_stages(spark, sf_dir):
     """q148 claims each pipeline stage runs once; unmaterialized, the
     five consumers of the tokenized keeper set re-ran the tokenize +
     sha256 + dedup window from parquet (90 scans / 276 Exchange at sf0.1
-    — round-15 census). Pin: the returned plan reads the cached keepers
-    (InMemoryTableScan) and the checkpointed clean set (ExistingRDD),
-    with no raw documents scan above them. (The keepers cache itself sits
-    below the checkpoint, so only the ExistingRDD barrier is visible in
-    the returned plan.)"""
+    — round-15 census). Pin: the returned plan reads the materialized
+    keepers and clean set (ExistingRDD), with no raw documents scan
+    above them."""
     facts = audit_of(spark, sf_dir, "q148_training_pipeline")
     assert "ExistingRDD" in facts.text
     n = len(re.findall(r"Location.*documents\.parquet", facts.text))

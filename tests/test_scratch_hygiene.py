@@ -1,4 +1,5 @@
-"""Source-scan pin: one way for a query to get scratch space.
+"""Source-scan pins: one way for a query to get scratch space, and one
+barrier for materialising an intermediate.
 
 Scratch a builder's returned frame reads lazily comes from
 `scope.scratch(name)`, which the run's query scope deletes once the result
@@ -9,10 +10,17 @@ directories, writes into the checkout, or names a fixed `/tmp` path.
 One exemption: `operators/compaction.py` stages its rewrite in
 `mkdtemp(dir=parent)` beside the table and renames it into place, so the
 staging directory becomes the table; it is not scratch.
+
+Every intermediate a builder materialises goes through
+`scope.materialize(df)`; no other `persist`, `cache`, `localCheckpoint` or
+`checkpoint` call is in the package. One exemption:
+`foreach_batch_split_router` persists each micro-batch for its two passes
+and unpersists it in the same epoch.
 """
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -39,3 +47,32 @@ def test_scratch_comes_only_from_the_query_scope():
         "scratch outside scope.scratch / tempfile.TemporaryDirectory:\n"
         + "\n".join(hits)
     )
+
+
+_BARRIERS = {"persist", "cache", "localCheckpoint", "checkpoint"}
+_BARRIER_ALLOWED = {
+    ("scope.py", "materialize", "localCheckpoint"),
+    ("streaming/sinks.py", "apply", "persist"),  # foreach_batch_split_router
+}
+
+
+def _barrier_calls(tree: ast.AST, func: str = "<module>"):
+    for node in ast.iter_child_nodes(tree):
+        inner = node.name if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) else func
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in _BARRIERS
+        ):
+            yield node.lineno, func, node.func.attr
+        yield from _barrier_calls(node, inner)
+
+
+def test_barriers_come_only_from_materialize():
+    hits = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        for line, func, attr in _barrier_calls(ast.parse(path.read_text())):
+            if (rel, func, attr) not in _BARRIER_ALLOWED:
+                hits.append(f"{rel}:{line}: .{attr}( in {func}")
+    assert hits == [], "barrier outside scope.materialize:\n" + "\n".join(hits)
