@@ -296,7 +296,7 @@ def distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     times (cur leg, prev leg, bounds), and without the barrier each
     reference re-derives the whole fact subtree — the round-15 scan
     census measured exactly that, three events scans against this
-    docstring; `test_q194_single_fact_scan` now pins 1."""
+    docstring; `test_q194_single_fact_scan` pins one."""
     ev = table(spark, sf_dir, "events")
     binned = ev.select(
         F.col("ts").cast("date").alias("day"),

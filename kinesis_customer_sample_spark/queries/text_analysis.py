@@ -44,7 +44,9 @@ def _docs_with_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer that reads the tokens in several branches, or derives
     # further lambda arrays from them (CollapseProject would inline the
     # tokenizer into every lambda reference), materializes its own
-    # narrow projection (q151, q172, q215, q236).
+    # narrow projection (q151, q172, q215, q236). Exploding a lambda array
+    # needs none (q137, q352): the generator reads the projected `toks`
+    # column, so the tokenizer stays out of the lambda.
     return docs.withColumn("toks", F.expr(_SPARK_TOKS))
 
 
